@@ -312,12 +312,14 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
 
   /** Time travel by wall-clock: read the LATEST snapshot committed at
     * or before `tsMillis` (Iceberg's `TIMESTAMP AS OF` rule). */
-  def readAsOf(table: String, tsMillis: Long): DataFrame = {
-    val at = asOfSnapshot(table, tsMillis)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table has no snapshot committed at or before $tsMillis"))
-    readSnapshot(table, at)
-  }
+  def readAsOf(table: String, tsMillis: Long): DataFrame =
+    readSnapshot(table, asOfSnapshotOrFail(table, tsMillis))
+
+  /** [[asOfSnapshot]] on main, failing when nothing was committed by
+    * `tsMillis`. */
+  private[graft] def asOfSnapshotOrFail(table: String, tsMillis: Long): Long =
+    asOfSnapshot(table, tsMillis).getOrElse(throw new IllegalArgumentException(
+      s"$table has no snapshot committed at or before $tsMillis"))
 
   /** Streaming batch ids recorded in commit metadata (see
     * [[appendOnce]]) — the commit-dedup ledger that makes the
@@ -4093,10 +4095,11 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     * evolution are each servable ALONE (the scan anti-filters /
     * conforms at read) but not together; mixed layouts, renamed
     * partition columns, unrecorded evolved dirs and other transform
-    * shapes disqualify. */
-  private[graft] def spjServableSpec(table: String, branch: String = "main")
-      : Option[Seq[String]] =
-    currentSnapshot(table, branch).flatMap { snap =>
+    * shapes disqualify. Probes the branch head, or `atSnapshot` when
+    * given (a time-travel read). */
+  private[graft] def spjServableSpec(table: String, branch: String = "main",
+      atSnapshot: Option[Long] = None): Option[Seq[String]] =
+    atSnapshot.orElse(currentSnapshot(table, branch)).flatMap { snap =>
       // the probe prices one dir listing per data dir + one footer
       // read per tombstone dir — cached under the layout cache's
       // staleness-proof key so `SHOW TABLES` over a big catalog pays
@@ -4260,11 +4263,14 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
   def sqlMerge(table: String, sourceView: String, keyCols: Seq[String],
       partitionBy: Seq[String] = Nil): Long = {
     registerView(table, partitionBy)
-    val on = keyCols.map(k => s"t.$k = s.$k").mkString(" AND ")
-    val merged = spark.sql(
-      s"""SELECT * FROM $sourceView
-         |UNION ALL
-         |SELECT t.* FROM $table t LEFT ANTI JOIN $sourceView s ON $on""".stripMargin)
+    // the target is the ordinary read registerView just pinned: SQL
+    // text naming `table` would re-pin it to the statement relation
+    // ([[sqlRelation]]), whose scan partitioning changes the files
+    // this rewrite writes
+    val source = spark.sql(s"SELECT * FROM $sourceView")
+    val target = spark.table(table)
+    val merged = source.union(target.join(source,
+      keyCols.map(k => target(k) === source(k)).reduce(_ && _), "left_anti"))
     // the partitioned path goes through upsert, which runs the same check
     if (partitionBy.isEmpty)
       assertMergeCardinality(spark.table(table), spark.table(sourceView), table, keyCols)
@@ -5878,6 +5884,25 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       }
       built
     }
+  }
+
+  /** The relation SQL statements read a registered name through, at
+    * the branch head or at `atSnapshot`: the DSv2 scan of
+    * [[graft.sources.spj.GraftSpjCatalog]] over the cached [[spjLayout]]
+    * when [[spjServableSpec]] admits the table at that snapshot — one
+    * scan with per-file tombstone anti-filters, pushed aggregates and
+    * LIMIT/TopN caps, zero data-dir opens at plan time — else the
+    * ordinary per-dir union of [[readSnapshot]]. Both return the same
+    * rows; the relation is read-only, so DML on the name keeps routing
+    * through the lakehouse intercepts. */
+  private[graft] def sqlRelation(table: String, branch: String,
+      atSnapshot: Option[Long] = None): DataFrame = {
+    val snap = atSnapshot.orElse(currentSnapshot(table, branch)).getOrElse(
+      throw new IllegalArgumentException(s"no such table/branch: $table@$branch"))
+    spjServableSpec(table, branch, Some(snap))
+      .flatMap(_ => scala.util.Try(spjLayout(table, branch, Some(snap))).toOption)
+      .map(layout => graft.sources.spj.SpjRelation.read(spark, root, table, branch, layout))
+      .getOrElse(readSnapshot(table, snap))
   }
 
   private def spjLayoutBuild(table: String, branch: String, snap: Long): SpjLayout = {

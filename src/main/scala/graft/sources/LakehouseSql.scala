@@ -771,7 +771,7 @@ case class LakehouseMetaAggCommand(view: String, items: Seq[Lakehouse.MetaAggIte
       case Some(df) => df.collect().toSeq
       case None => // metadata can't answer exactly: ordinary scan, same rows
         import org.apache.spark.sql.functions.sum
-        val base = pred.foldLeft(lake.read(view, lake.sessionBranch))(_ where _)
+        val base = pred.foldLeft(lake.sqlRelation(view, lake.sessionBranch))(_ where _)
         val aggs = items.map { i =>
           i.op match {
             case "count" => count(lit(1)).as(i.alias)
@@ -874,7 +874,7 @@ case class LakehouseGroupAggCommand(view: String,
     val grouped = lake.metaGroupAgg(view, groupCols, items, pred, lake.sessionBranch)
       .getOrElse {
         // metadata can't answer exactly: ordinary grouped scan, same rows
-        val base = pred.foldLeft(lake.read(view, lake.sessionBranch))(_ where _)
+        val base = pred.foldLeft(lake.sqlRelation(view, lake.sessionBranch))(_ where _)
         val aggs = items.map { i =>
           i.op match {
             case "count" => count(lit(1)).as(i.alias)
@@ -1405,7 +1405,14 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     * pinned to registration time. The temp view's plan is inlined at
     * analysis, so re-pinning for a later statement never disturbs an
     * already-analyzed Dataset; data dirs are immutable once committed,
-    * so the pinned dir list stays valid whatever commits race it.
+    * so the pinned snapshot stays valid whatever commits race it.
+    *
+    * The pinned relation is [[Lakehouse.sqlRelation]]: the DSv2 scan
+    * `<catalog>.<table>` plans, over the layout cached for that
+    * snapshot, when the layout is servable — no manifest walk or
+    * data-dir open per statement — and the ordinary per-dir union of
+    * `Lakehouse.read` otherwise. Either way the view is read-only:
+    * DML on the name keeps routing through the lakehouse intercepts.
     *
     * References come from the PARSED plan's unresolved single-part
     * relations (incl. subqueries), not a word-regex over the SQL text:
@@ -1426,28 +1433,35 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
         // a vacuumed/retired table must not fail statements that
         // reference a same-named non-lakehouse relation
         scala.util.Try(
-          lake.read(name, lake.sessionBranch).createOrReplaceTempView(name))
+          lake.sqlRelation(name, lake.sessionBranch).createOrReplaceTempView(name))
       }
     }
   }
 
+  // every travel/metadata pattern matches an UNQUALIFIED name only (no
+  // `.` or word character before it): `lakecat.t VERSION AS OF 1` must
+  // reach Spark's grammar and the catalog even when `t` is registered
   private val MetaRe =
-    """(?i)`?([A-Za-z_]\w*)`?\.(history|snapshots|files|tags|partition_stats|partitions|refs|mviews|views)\b""".r
+    """(?i)(?<![\w.])`?([A-Za-z_]\w*)`?\.(history|snapshots|files|tags|partition_stats|partitions|refs|mviews|views)\b""".r
   private val VersionAsOfRe =
-    """(?i)`?([A-Za-z_]\w*)`?\s+VERSION\s+AS\s+OF\s+(\d+)""".r
+    """(?i)(?<![\w.])`?([A-Za-z_]\w*)`?\s+VERSION\s+AS\s+OF\s+(\d+)""".r
   private val VersionTagRe =
-    """(?i)`?([A-Za-z_]\w*)`?\s+VERSION\s+AS\s+OF\s+'([^']+)'""".r
+    """(?i)(?<![\w.])`?([A-Za-z_]\w*)`?\s+VERSION\s+AS\s+OF\s+'([^']+)'""".r
   private val TimestampAsOfRe =
-    """(?i)`?([A-Za-z_]\w*)`?\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'""".r
+    """(?i)(?<![\w.])`?([A-Za-z_]\w*)`?\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'""".r
 
   /** SQL time travel on registered lakehouse views — the Iceberg
     * query surface `SELECT … FROM t VERSION AS OF <snap>` /
     * `TIMESTAMP AS OF '<ts>'`. Each travel reference is rewritten to
-    * a temp view over the snapshot read the programmatic API already
-    * does (`readSnapshot` / `readAsOf`), then the whole statement
-    * delegates to Spark's parser — travel composes with any SELECT,
-    * including joins of two versions of the same table. References to
-    * unregistered names are left untouched for Spark to reject. */
+    * a temp view over [[Lakehouse.sqlRelation]] at the snapshot the
+    * programmatic API resolves (`readSnapshot` / `readAsOf` /
+    * `readTag`): the DSv2 scan over the layout at that snapshot when
+    * it is servable, the ordinary per-dir union otherwise. Then the
+    * whole statement delegates to Spark's parser — travel composes
+    * with any SELECT, including joins of two versions of the same
+    * table. References to unregistered names, and catalog-qualified
+    * ones (`cat.t VERSION AS OF 3`, served by the catalog itself), are
+    * left untouched for Spark. */
   /** Regex replacement that NEVER fires inside a string literal,
     * quoted identifier, or comment: a literal `'fz VERSION AS OF 3'`
     * (with `fz` registered) must reach the delegate byte-exact, not be
@@ -1509,8 +1523,9 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       }
     }
     val versioned = guardedReplace(metaed, VersionAsOfRe)(m =>
-      travelView(m.group(1), m.group(2),
-        _.readSnapshot(m.group(1), m.group(2).toLong)).getOrElse(m.matched))
+      travelView(m.group(1), m.group(2), lake =>
+        lake.sqlRelation(m.group(1), lake.sessionBranch, Some(m.group(2).toLong)))
+        .getOrElse(m.matched))
     // quoted VERSION AS OF = a NAMED REF (Iceberg's tag/branch refs):
     // tags win (they are immutable audit pointers), then branch heads
     // resolve — `SELECT … FROM t VERSION AS OF 'dev'` reads the dev
@@ -1521,8 +1536,10 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
         val ref = m.group(2)
         val view = m.group(1)
         travelView(view, "ref_" + ref.replaceAll("\\W", "_"), { lake =>
-          if (lake.tags(view).exists(_._1 == ref)) lake.readTag(view, ref)
-          else lake.read(view, ref)
+          lake.tags(view).find(_._1 == ref) match {
+            case Some((_, snap)) => lake.sqlRelation(view, lake.sessionBranch, Some(snap))
+            case None => lake.sqlRelation(view, ref)
+          }
         }).getOrElse(m.matched)
       }
     }
@@ -1534,7 +1551,8 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
         // the travel to a wrong snapshot window on a non-UTC host
         val raw = m.group(2)
         val millis = timestampMillis(spark, raw)
-        travelView(m.group(1), s"t$millis", _.readAsOf(m.group(1), millis))
+        travelView(m.group(1), s"t$millis", lake => lake.sqlRelation(m.group(1),
+          lake.sessionBranch, Some(lake.asOfSnapshotOrFail(m.group(1), millis))))
           .getOrElse(m.matched)
       }
     }

@@ -430,6 +430,32 @@ private[spj] class GraftSpjTable(tableName: String, layout: SpjLayout, root: Str
     new GraftSpjWriteBuilder(root, tableName, layout.spec, branch, info.schema())
 }
 
+/** The registered-name SQL read ([[Lakehouse.sqlRelation]]): a
+  * DataFrame over a `DataSourceV2Relation` of the table's layout
+  * pinned at one snapshot, planned exactly as `<catalog>.<table>` is
+  * (the same scan builder, so the same pushdowns), but READ-ONLY — the
+  * relation sits behind a session temp view, and DML on that name must
+  * reach the lakehouse intercepts, never Spark's row-level or V2-write
+  * path through this relation. */
+object SpjRelation {
+  def read(spark: SparkSession, root: String, table: String, branch: String,
+      layout: SpjLayout): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftshim.RelationShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftSpjReadTable(new GraftSpjTable(table, layout, root, branch)), None, None))
+}
+
+/** [[GraftSpjTable]]'s read surface and nothing else. */
+private[spj] class GraftSpjReadTable(table: GraftSpjTable) extends Table with SupportsRead {
+  override def name(): String = table.name()
+  override def schema(): StructType = table.schema()
+  override def partitioning(): Array[Transform] = table.partitioning()
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    table.newScanBuilder(options)
+}
+
 /** Appends and truncating overwrites, routed to the Lakehouse writer
   * with the table's own partition spec — one commit per insert, same
   * layout, so the write needs no DSv2 DataWriter machinery of its
@@ -921,10 +947,14 @@ private[graft] class GraftSpjScan(layout: SpjLayout, required: StructType,
     * still plan, pruned ones empty), so SPJ co-partition alignment and
     * [[outputPartitioning]] stay valid; only I/O shrinks. At 100 TB
     * this is the join-shaped twin of static bucket pruning: a
-    * dim-filtered fact scan reads O(matching buckets), not the fact. */
+    * dim-filtered fact scan reads O(matching buckets), not the fact.
+    * Only PROJECTED key columns are offered: Spark resolves the
+    * attributes against the scan's output, and a pruned-away bucket
+    * column (a join on another key) would fail that resolution. */
   override def filterAttributes(): Array[
       org.apache.spark.sql.connector.expressions.NamedReference] =
     (layout.identityCol.toSeq ++ layout.bucketLevel.map(_._2)).distinct
+      .filter(required.fieldNames.contains)
       .map(Expressions.column).toArray
 
   override def filter(filters: Array[

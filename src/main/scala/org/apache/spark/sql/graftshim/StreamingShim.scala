@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The ONE Spark-internal touchpoint the lakehouse streaming source
+/** The Spark-internal touchpoint the lakehouse streaming source
   * needs: a v1 `Source.getBatch` must return a DataFrame whose plan
   * is flagged `isStreaming` (MicroBatchExecution asserts it), and the
   * public API offers no way to flag a derived batch plan. This shim
@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * and MemoryStream make through their `private[sql]`
   * `internalCreateDataFrame(…, isStreaming = true)`. The object lives
   * in an `org.apache.spark.sql` subpackage solely to satisfy that
-  * `private[sql]` boundary; nothing else in the repo does. Collapsing
+  * `private[sql]` boundary, as [[RelationShim]] does. Collapsing
   * to a single opaque leaf also keeps any joins inside the batch plan
   * (tombstone anti-joins of a full-snapshot read) invisible to the
   * streaming planner's stream-stream join checks — correct, because

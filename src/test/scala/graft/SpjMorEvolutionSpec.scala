@@ -575,9 +575,6 @@ class SpjMorEvolutionSpec extends SparkSpec {
   test("time travel through the catalog serves the pre-delete snapshot un-filtered") {
     val root = freshRoot("spj-mortt")
     val lake = new Lakehouse(spark, root)
-    // unique table name: a bare `t` would collide with other suites'
-    // registered lakehouse views in the shared session, whose SQL
-    // front-end rewrites `VERSION AS OF` on registered names
     lake.createOrReplace((1L to 15L).map(k => (k, s"v$k")).toDF("k", "v"),
       "mortt", Seq("bucket(4,k)"))
     val before = lake.currentSnapshot("mortt").get

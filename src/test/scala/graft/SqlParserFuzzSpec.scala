@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.SparkSqlParser
 import org.apache.spark.sql.functions._
 
 import graft.sources.{GraftSqlParser, Lakehouse}
+import graft.sources.spj.GraftSpjCatalog
 
 /** Parser-equivalence fuzzing for [[graft.sources.GraftSqlParser]] —
   * the regex front-end's one permitted failure mode is a LOUD error;
@@ -278,5 +279,28 @@ class SqlParserFuzzSpec extends SparkSpec {
     // registered view's first snapshot is readable by number
     val snap0 = new Lakehouse(spark, setupRoot).snapshots("fz").head._1
     assert(spark.sql(s"SELECT count(*) AS n FROM fz VERSION AS OF $snap0").head().getLong(0) > 0)
+  }
+
+  test("travel and metadata rewrites leave a catalog-qualified name alone, even when it is registered") {
+    val root = setupRoot
+    spark.conf.set("spark.sql.catalog.fzcat", classOf[GraftSpjCatalog].getName)
+    spark.conf.set("spark.sql.catalog.fzcat.root", root)
+    val lake = new Lakehouse(spark, root)
+    val snap0 = lake.snapshots("fz").head._1
+    // one case per rewrite pattern: `fz` IS registered, so matching
+    // the last part of the dotted name would rewrite the statement
+    Seq(
+      s"SELECT * FROM fzcat.fz VERSION AS OF $snap0",
+      "SELECT * FROM fzcat.fz VERSION AS OF 'main'",
+      "SELECT * FROM fzcat.fz TIMESTAMP AS OF '2999-01-01 00:00:00'",
+      "SELECT * FROM fzcat.fz.history"
+    ).foreach { sql =>
+      assert(outcome(graftParser, sql) == outcome(delegate, sql), sql)
+    }
+    // ... and the catalog answers them
+    assert(spark.sql(s"SELECT count(*) AS n FROM fzcat.fz VERSION AS OF $snap0")
+      .head().getLong(0) === lake.readSnapshot("fz", snap0).count())
+    assert(spark.sql("SELECT count(*) AS n FROM fzcat.fz TIMESTAMP AS OF '2999-01-01 00:00:00'")
+      .head().getLong(0) === lake.read("fz").count())
   }
 }
