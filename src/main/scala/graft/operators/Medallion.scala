@@ -297,9 +297,10 @@ object Medallion {
     * (Iceberg's `VERSION AS OF` query surface): CTAS a table, INSERT
     * a second tranche as parsed SQL, then read the PRE-insert
     * snapshot via `VERSION AS OF` in the same statement as the
-    * current state — both resolved through [[graft.sources
-    * .GraftSqlParser]]'s travel rewrite, driver-checkable because
-    * every step is a deterministic function of `orders`. */
+    * current state — both resolved by [[graft.sources
+    * .GraftSqlParser]] on Spark's parsed plan, and checkable against
+    * the oracle because every step is a deterministic function of
+    * `orders`. */
   def sqlTimeTravel(spark: SparkSession, dir: String): DataFrame = {
     Tables.registerAll(spark, dir)
     val root = java.nio.file.Files.createTempDirectory("graft-sqltt").toString

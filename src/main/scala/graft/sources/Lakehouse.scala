@@ -2595,7 +2595,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     import org.apache.spark.sql.types._
     val snap = currentSnapshot(table, branch)
       .getOrElse(throw new IllegalArgumentException(s"no such table/branch: $table@$branch"))
-    if (tombstones(table, snap).nonEmpty) return None
+    if (snapshotDeletes(table).getOrElse(snap, Nil).nonEmpty) return None
     if (items.exists(i => !Set("count", "min", "max", "sum").contains(i.op))) return None
     val (schema, cls) = classifyForMeta(table, snap, pred, branch)
     // one filtered scan over an explicit file set — the exception
@@ -2865,7 +2865,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     import org.apache.spark.sql.types._
     val snap = currentSnapshot(table, branch)
       .getOrElse(throw new IllegalArgumentException(s"no such table/branch: $table@$branch"))
-    if (tombstones(table, snap).nonEmpty) return None
+    if (snapshotDeletes(table).getOrElse(snap, Nil).nonEmpty) return None
     if (items.exists(i => !Set("count", "min", "max", "sum").contains(i.op))) return None
     if (groupCols.isEmpty) return metaAgg(table, items, pred, branch)
     val aliases = items.map(_.alias)

@@ -2,10 +2,12 @@ package graft.sources
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.analysis.{AsOfTimestamp, RelationTimeTravel, TimeTravelSpec,
+  UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, Literal}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.execution.command.{ExplainCommand, LeafRunnableCommand}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
 /** SQL DML over lakehouse tables — the surface the reference gets from
@@ -79,37 +81,6 @@ object LakehouseRegistry {
       .groupBy(_.root).map { case (root, ls) =>
         (new java.io.File(root).getName, ls.head)
       }.toSeq.sortBy(_._1)
-  }
-}
-
-/** Bounded registry of the `__asof_*`/`__meta_*` temp views the travel
-  * rewrite materializes. A view is only needed through ANALYSIS of the
-  * one statement that referenced it (an analyzed Dataset inlines the
-  * view's plan — dropping the view later never breaks it), so the
-  * registry keeps a most-recently-used window of [[TravelViews.Max]]
-  * names per session and drops the oldest from the catalog beyond
-  * that: a long-lived session issuing thousands of DISTINCT travel
-  * references keeps a bounded catalog instead of accumulating one
-  * view per distinct snapshot/timestamp/tag forever. */
-private[graft] object TravelViews {
-  val Max = 32
-  private val perSession = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.LinkedHashSet[String]]()
-  SessionIds.onRelease(id => perSession.remove(id))
-
-  def track(spark: SparkSession, view: String): Unit = {
-    val set = perSession.computeIfAbsent(SessionIds.idOf(spark),
-      _ => new java.util.LinkedHashSet[String]())
-    set.synchronized {
-      set.remove(view) // refresh recency (re-referenced view moves to newest)
-      set.add(view)
-      while (set.size > Max) {
-        val it = set.iterator()
-        val oldest = it.next()
-        it.remove()
-        spark.catalog.dropTempView(oldest)
-      }
-    }
   }
 }
 
@@ -1388,10 +1359,83 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
         }
       }
       LakehouseMergeCondCommand(table, source, keys, matched, insert, bySource)
-    case _ =>
-      val plan = delegate.parsePlan(rewriteTimeTravel(sqlText))
-      pinReferencedViews(plan)
-      plan
+    case _ => resolveLakeRefs(delegate.parsePlan(sqlText), pin = true)
+  }
+
+  // Iceberg-style metadata tables, addressable as `<registered view>.<m>`
+  private val MetaTables: Map[String, (Lakehouse, String) => org.apache.spark.sql.DataFrame] = Map(
+    "history" -> (_.history(_)), "snapshots" -> (_.snapshotsDf(_)),
+    "files" -> (_.filesDf(_)), "tags" -> (_.tagsDf(_)), "refs" -> (_.refsDf(_)),
+    "partitions" -> (_.partitionsDf(_)), "partition_stats" -> (_.partitionStatsDf(_)),
+    "mviews" -> (_.mviewsDf(_)), "views" -> ((lake, _) => lake.viewsDf()))
+
+  /** Registered-name reads on the PARSED plan, in one walk that also
+    * reaches subquery expressions, `WITH` bodies and `EXPLAIN`'s plan:
+    *
+    *  - SQL time travel — the Iceberg query surface `t VERSION AS OF
+    *    <v>` / `t TIMESTAMP AS OF '<ts>'`, which Spark's grammar parses
+    *    to a [[RelationTimeTravel]] — becomes a relation named `t` over
+    *    [[Lakehouse.sqlRelation]] at the snapshot the programmatic API
+    *    resolves (`readSnapshot` / `readTag` / `readAsOf`). A version
+    *    that is all digits is a snapshot id, else a tag, else a branch
+    *    head (Iceberg's `SparkCatalog` order): `t VERSION AS OF 'dev'`
+    *    reads the dev branch without touching the session branch conf.
+    *    A timestamp other than a literal is left to Spark.
+    *  - `t.history` / `t.snapshots` / … become a relation over the
+    *    matching metadata DataFrame.
+    *  - Every other single-part registered name is pinned for the
+    *    statement ([[pinReferencedViews]]) when `pin` is set.
+    *
+    * Travel composes with any SELECT, including joins of two versions
+    * of one table, and `t.col` qualifiers keep resolving. Unregistered
+    * and catalog-qualified names (`cat.t VERSION AS OF 3`, served by
+    * the catalog itself) are left to Spark, and the walk adds nothing
+    * to the session catalog beyond the pin. */
+  private def resolveLakeRefs(plan: LogicalPlan, pin: Boolean): LogicalPlan = {
+    val spark = SparkSession.getActiveSession.getOrElse(return plan)
+    // a registered name → (registry key, which is also the table name, lake)
+    object Lake {
+      def unapply(name: String): Option[(String, Lakehouse)] = {
+        val key = name.toLowerCase(java.util.Locale.ROOT)
+        LakehouseRegistry.lookup(spark, key).map(e => (key, e._1))
+      }
+    }
+    val pinned = scala.collection.mutable.Map.empty[String, Lakehouse]
+    def walk(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries {
+      case tt @ RelationTimeTravel(UnresolvedRelation(Seq(t @ Lake(name, lake)), _, _), ts, version) =>
+        def at(snap: Long) = lake.sqlRelation(name, lake.sessionBranch, Some(snap))
+        val rel = (ts, version) match {
+          case (None, Some(v)) if v.forall(_.isDigit) && v.toLongOption.isDefined =>
+            Some(at(v.toLong))
+          case (None, Some(v)) =>
+            Some(lake.tags(name).find(_._1 == v).fold(lake.sqlRelation(name, v))(tag => at(tag._2)))
+          // Spark's own cast, in the SESSION timezone like every other
+          // timestamp literal in the statement
+          case (Some(lit: Literal), None) =>
+            TimeTravelSpec.create(Some(lit), None, spark.sessionState.conf.sessionLocalTimeZone)
+              .collect { case AsOfTimestamp(micros) =>
+                at(lake.asOfSnapshotOrFail(name, Math.floorDiv(micros, 1000L)))
+              }
+          case _ => None
+        }
+        rel.fold[LogicalPlan](tt)(df => SubqueryAlias(t, df.queryExecution.analyzed))
+      case UnresolvedRelation(Seq(t @ Lake(name, lake), m), _, _)
+          if MetaTables.contains(m.toLowerCase(java.util.Locale.ROOT)) =>
+        val df = MetaTables(m.toLowerCase(java.util.Locale.ROOT))(lake, name)
+        SubqueryAlias(Seq(t, m), df.queryExecution.analyzed)
+      case r @ UnresolvedRelation(Seq(Lake(name, lake)), _, _) =>
+        pinned(name) = lake
+        r
+      // plans Spark keeps as inner children, outside the transform
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, q, d) =>
+          (n, walk(q).asInstanceOf[SubqueryAlias], d)
+        })
+      case e: ExplainCommand => e.copy(logicalPlan = walk(e.logicalPlan))
+    }
+    val resolved = walk(plan)
+    if (pin) pinReferencedViews(pinned.toMap)
+    resolved
   }
 
   /** SNAPSHOT-ISOLATION pinning (Iceberg's per-query snapshot rule):
@@ -1399,13 +1443,14 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     * re-resolved ONCE, at statement start, to the table's current
     * snapshot (on the session branch — see [[Lakehouse.sessionBranch]]).
     * All references within the statement — a self-join, repeated
-    * subqueries — then read one consistent snapshot, and a concurrent
-    * writer committing between two references can never produce a
-    * mixed read; it also means plain SQL reads are always FRESH, not
-    * pinned to registration time. The temp view's plan is inlined at
-    * analysis, so re-pinning for a later statement never disturbs an
-    * already-analyzed Dataset; data dirs are immutable once committed,
-    * so the pinned snapshot stays valid whatever commits race it.
+    * subqueries, `WITH` bodies — then read one consistent snapshot,
+    * and a concurrent writer committing between two references can
+    * never produce a mixed read; it also means plain SQL reads are
+    * always FRESH, not pinned to registration time. The temp view's
+    * plan is inlined at analysis, so re-pinning for a later statement
+    * never disturbs an already-analyzed Dataset; data dirs are
+    * immutable once committed, so the pinned snapshot stays valid
+    * whatever commits race it.
     *
     * The pinned relation is [[Lakehouse.sqlRelation]]: the DSv2 scan
     * `<catalog>.<table>` plans, over the layout cached for that
@@ -1414,165 +1459,22 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     * `Lakehouse.read` otherwise. Either way the view is read-only:
     * DML on the name keeps routing through the lakehouse intercepts.
     *
-    * References come from the PARSED plan's unresolved single-part
-    * relations (incl. subqueries), not a word-regex over the SQL text:
-    * a registered name inside a string literal or comment no longer
-    * triggers a manifest read, and cost is O(plan) per statement
-    * instead of O(registered views × text length). */
-  private def pinReferencedViews(plan: LogicalPlan): Unit = {
-    val sessionOpt = SparkSession.getActiveSession
-    if (sessionOpt.isEmpty) return
-    val spark = sessionOpt.get
-    val referenced = plan.collectWithSubqueries {
-      case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-          if r.multipartIdentifier.size == 1 =>
-        r.multipartIdentifier.head.toLowerCase(java.util.Locale.ROOT)
-    }.toSet
-    referenced.foreach { name =>
-      LakehouseRegistry.lookup(spark, name).foreach { case (lake, _) =>
-        // a vacuumed/retired table must not fail statements that
-        // reference a same-named non-lakehouse relation
-        scala.util.Try(
-          lake.sqlRelation(name, lake.sessionBranch).createOrReplaceTempView(name))
-      }
+    * `refs` come from [[resolveLakeRefs]]'s walk of the parsed plan,
+    * not a word-regex over the SQL text: a registered name inside a
+    * string literal or comment never triggers a manifest read. */
+  private def pinReferencedViews(refs: Map[String, Lakehouse]): Unit =
+    refs.foreach { case (name, lake) =>
+      // a vacuumed/retired table must not fail statements that
+      // reference a same-named non-lake relation
+      scala.util.Try(lake.sqlRelation(name, lake.sessionBranch).createOrReplaceTempView(name))
     }
-  }
 
-  // every travel/metadata pattern matches an UNQUALIFIED name only (no
-  // `.` or word character before it): `lakecat.t VERSION AS OF 1` must
-  // reach Spark's grammar and the catalog even when `t` is registered
-  private val MetaRe =
-    """(?i)(?<![\w.])`?([A-Za-z_]\w*)`?\.(history|snapshots|files|tags|partition_stats|partitions|refs|mviews|views)\b""".r
-  private val VersionAsOfRe =
-    """(?i)(?<![\w.])`?([A-Za-z_]\w*)`?\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-  private val VersionTagRe =
-    """(?i)(?<![\w.])`?([A-Za-z_]\w*)`?\s+VERSION\s+AS\s+OF\s+'([^']+)'""".r
-  private val TimestampAsOfRe =
-    """(?i)(?<![\w.])`?([A-Za-z_]\w*)`?\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'""".r
-
-  /** SQL time travel on registered lakehouse views — the Iceberg
-    * query surface `SELECT … FROM t VERSION AS OF <snap>` /
-    * `TIMESTAMP AS OF '<ts>'`. Each travel reference is rewritten to
-    * a temp view over [[Lakehouse.sqlRelation]] at the snapshot the
-    * programmatic API resolves (`readSnapshot` / `readAsOf` /
-    * `readTag`): the DSv2 scan over the layout at that snapshot when
-    * it is servable, the ordinary per-dir union otherwise. Then the
-    * whole statement delegates to Spark's parser — travel composes
-    * with any SELECT, including joins of two versions of the same
-    * table. References to unregistered names, and catalog-qualified
-    * ones (`cat.t VERSION AS OF 3`, served by the catalog itself), are
-    * left untouched for Spark. */
-  /** Regex replacement that NEVER fires inside a string literal,
-    * quoted identifier, or comment: a literal `'fz VERSION AS OF 3'`
-    * (with `fz` registered) must reach the delegate byte-exact, not be
-    * rewritten into a travel view name — the silent-corruption class
-    * the fuzz spec exists to catch. A match may legitimately EXTEND
-    * into a quoted region (the travel ref in `t VERSION AS OF 'dev'`
-    * is itself a literal); only matches STARTING inside one skip. */
-  private def guardedReplace(text: String, re: scala.util.matching.Regex)(
-      f: scala.util.matching.Regex.Match => String): String = {
-    val prot = GraftSqlParser.protectedSpans(text)
-    re.replaceAllIn(text, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        if (prot.exists(sp => m.start >= sp._1 && m.start < sp._2)) m.matched
-        else f(m)))
-  }
-
-  private def rewriteTimeTravel(sqlText: String): String = {
-    // fast path: no travel syntax and no metadata-table ref — don't
-    // touch the text
-    if (!"""(?i)\b(?:VERSION|TIMESTAMP)\s+AS\s+OF\b|\.(?:history|snapshots|files|tags|partition_stats|partitions|refs|mviews|views)\b"""
-        .r.unanchored.matches(sqlText))
-      return sqlText
-    val sessionOpt = SparkSession.getActiveSession
-    if (sessionOpt.isEmpty) return sqlText
-    val spark = sessionOpt.get
-    def travelView(view: String, suffix: String,
-        read: Lakehouse => org.apache.spark.sql.DataFrame): Option[String] =
-      LakehouseRegistry.lookup(spark, view).map { case (lake, _) =>
-        val tv = s"${view}__asof_$suffix"
-        read(lake).createOrReplaceTempView(tv)
-        TravelViews.track(spark, tv)
-        tv
-      }
-    // Iceberg-style METADATA TABLES on registered views: t.history /
-    // t.snapshots / t.files / t.tags rewrite to temp views over the
-    // programmatic metadata relations. Only registered view names
-    // rewrite, so alias-qualified COLUMNS named e.g. `files` on other
-    // relations pass through untouched.
-    val metaed = guardedReplace(sqlText, MetaRe) { m =>
-      {
-        val view = m.group(1)
-        val which = m.group(2).toLowerCase(java.util.Locale.ROOT)
-        LakehouseRegistry.lookup(spark, view).map { case (lake, _) =>
-          val tv = s"${view}__meta_$which"
-          (which match {
-            case "history" => lake.history(view)
-            case "snapshots" => lake.snapshotsDf(view)
-            case "files" => lake.filesDf(view)
-            case "partitions" => lake.partitionsDf(view)
-            case "partition_stats" => lake.partitionStatsDf(view)
-            case "refs" => lake.refsDf(view)
-            case "mviews" => lake.mviewsDf(view)
-            case "views" => lake.viewsDf()
-            case _ => lake.tagsDf(view)
-          }).createOrReplaceTempView(tv)
-          TravelViews.track(spark, tv)
-          tv
-        }.getOrElse(m.matched)
-      }
-    }
-    val versioned = guardedReplace(metaed, VersionAsOfRe)(m =>
-      travelView(m.group(1), m.group(2), lake =>
-        lake.sqlRelation(m.group(1), lake.sessionBranch, Some(m.group(2).toLong)))
-        .getOrElse(m.matched))
-    // quoted VERSION AS OF = a NAMED REF (Iceberg's tag/branch refs):
-    // tags win (they are immutable audit pointers), then branch heads
-    // resolve — `SELECT … FROM t VERSION AS OF 'dev'` reads the dev
-    // branch from a main-scoped session without touching the session
-    // branch conf
-    val tagged = guardedReplace(versioned, VersionTagRe) { m =>
-      {
-        val ref = m.group(2)
-        val view = m.group(1)
-        travelView(view, "ref_" + ref.replaceAll("\\W", "_"), { lake =>
-          lake.tags(view).find(_._1 == ref) match {
-            case Some((_, snap)) => lake.sqlRelation(view, lake.sessionBranch, Some(snap))
-            case None => lake.sqlRelation(view, ref)
-          }
-        }).getOrElse(m.matched)
-      }
-    }
-    guardedReplace(tagged, TimestampAsOfRe) { m =>
-      {
-        // parse in the SESSION timezone (spark.sql.session.timeZone),
-        // like every other timestamp literal in the statement —
-        // Timestamp.valueOf would use the JVM-default zone, resolving
-        // the travel to a wrong snapshot window on a non-UTC host
-        val raw = m.group(2)
-        val millis = timestampMillis(spark, raw)
-        travelView(m.group(1), s"t$millis", lake => lake.sqlRelation(m.group(1),
-          lake.sessionBranch, Some(lake.asOfSnapshotOrFail(m.group(1), millis))))
-          .getOrElse(m.matched)
-      }
-    }
-  }
-
-  /** `TIMESTAMP AS OF` literal → epoch millis, resolved in the session
-    * timezone via Catalyst's own literal parser (accepts date-only and
-    * full timestamp forms, plus an explicit zone offset in the literal
-    * which then wins, exactly as in a SQL timestamp literal). */
-  private def timestampMillis(spark: SparkSession, raw: String): Long = {
-    import org.apache.spark.sql.catalyst.util.DateTimeUtils
-    val zone = DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
-    val micros = DateTimeUtils.stringToTimestamp(
-        org.apache.spark.unsafe.types.UTF8String.fromString(raw), zone)
-      .getOrElse(throw new IllegalArgumentException(
-        s"invalid TIMESTAMP AS OF literal: '$raw'"))
-    Math.floorDiv(micros, 1000L)
-  }
-
-  override def parseQuery(sqlText: String): LogicalPlan = delegate.parseQuery(sqlText)
+  /** The text of a view created by SQL re-parses here each time the
+    * view is referenced: its travel and metadata references resolve as
+    * in [[parsePlan]], but nothing is pinned, since that would replace a
+    * temp view while another statement is being analyzed. */
+  override def parseQuery(sqlText: String): LogicalPlan =
+    resolveLakeRefs(delegate.parseQuery(sqlText), pin = false)
   override def parseExpression(sqlText: String): Expression = delegate.parseExpression(sqlText)
   override def parseTableIdentifier(sqlText: String): TableIdentifier =
     delegate.parseTableIdentifier(sqlText)
@@ -1596,54 +1498,6 @@ object GraftSqlParser {
     * this text — the delegate always parses the original — so the
     * worst a stripper bug can do is delegate a statement the intercept
     * could have served, never corrupt one. */
-  /** Character spans [start, end) of every PROTECTED region — string
-    * literals (`'…'`, `"…"`), backquoted identifiers, and comments
-    * (line + nested bracketed) — under the same scanner rules as
-    * [[stripComments]]. Used to keep regex rewrites from firing on
-    * text a user wrote as DATA. */
-  private[sources] def protectedSpans(sql: String): Seq[(Int, Int)] = {
-    val spans = Seq.newBuilder[(Int, Int)]
-    val n = sql.length
-    var i = 0
-    var state = 0
-    var depth = 0
-    var from = -1
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (depth > 0) {
-        if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') { depth += 1; i += 2 }
-        else if (c == '*' && i + 1 < n && sql.charAt(i + 1) == '/') {
-          depth -= 1; i += 2
-          if (depth == 0) { spans += ((from, i)); from = -1 }
-        } else i += 1
-      } else if (state == 0) {
-        if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-          val start = i
-          while (i < n && sql.charAt(i) != '\n') i += 1
-          spans += ((start, i))
-        } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-          depth = 1; from = i; i += 2
-        } else {
-          if (c == '\'') { state = 1; from = i }
-          else if (c == '"') { state = 2; from = i }
-          else if (c == '`') { state = 3; from = i }
-          i += 1
-        }
-      } else {
-        if (c == '\\' && state != 3 && i + 1 < n) i += 2
-        else {
-          if ((state == 1 && c == '\'') || (state == 2 && c == '"') ||
-            (state == 3 && c == '`')) {
-            state = 0; spans += ((from, i + 1)); from = -1
-          }
-          i += 1
-        }
-      }
-    }
-    if (from >= 0) spans += ((from, n)) // unterminated region: protect to EOF
-    spans.result()
-  }
-
   private[sources] def stripComments(sql: String): String = {
     val out = new java.lang.StringBuilder(sql.length)
     val n = sql.length

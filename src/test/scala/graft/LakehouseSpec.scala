@@ -1312,24 +1312,80 @@ class LakehouseSpec extends SparkSpec {
     assert(failed.get() == null, s"concurrent writer failed: ${failed.get()}")
   }
 
-  test("travel temp views stay bounded over many distinct travel references") {
+  test("travel and metadata statements add no temp view to the session catalog") {
     val lake = new Lakehouse(spark, freshRoot())
     import spark.implicits._
-    lake.createOrReplace(Seq((1L, "a")).toDF("k", "v"), "tvb")
+    val s1 = lake.createOrReplace(Seq((1L, "a")).toDF("k", "v"), "tvb")
+    val s2 = lake.append(Seq((2L, "b")).toDF("k", "v"), "tvb")
     lake.registerView("tvb")
-    // distinct future timestamps → one distinct __asof_t<millis> view
-    // per query; without eviction the catalog grows one view per ref
+    lake.tagSnapshot("tvb", "first", s1)
+    def tvbViews(): Set[String] = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("tvb")).toSet
+    val before = tvbViews()
+    // distinct future timestamps, every version form, every metadata table
     val base = System.currentTimeMillis() + 60000
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
-    for (i <- 0 until (graft.sources.TravelViews.Max + 10)) {
+    val stamps = (0 until 30).map { i =>
       val ts = java.time.Instant.ofEpochMilli(base + i * 1000L)
         .atZone(java.time.ZoneOffset.UTC).format(fmt)
-      assert(spark.sql(s"SELECT * FROM tvb TIMESTAMP AS OF '$ts'").count() === 1)
+      s"SELECT * FROM tvb TIMESTAMP AS OF '$ts'"
     }
-    val travelViews = spark.catalog.listTables().collect()
-      .count(_.name.startsWith("tvb__asof_"))
-    assert(travelViews <= graft.sources.TravelViews.Max,
-      s"travel views accumulate unboundedly: $travelViews in the catalog")
+    val versions = Seq(s"SELECT * FROM tvb VERSION AS OF $s1",
+      s"SELECT * FROM tvb VERSION AS OF $s2", "SELECT * FROM tvb VERSION AS OF 'first'")
+    val meta = Seq("history", "snapshots", "files", "tags", "partition_stats",
+      "partitions", "refs", "mviews", "views").map(m => s"SELECT * FROM tvb.$m")
+    val statements = stamps ++ versions ++ meta
+    assert(statements.distinct.size === 42)
+    statements.foreach(sql => spark.sql(sql).collect())
+    assert(tvbViews() === before, s"travel/metadata statements left views behind")
+    // a view created by SQL over travel and metadata references keeps
+    // resolving them each time it is read
+    spark.sql(s"CREATE OR REPLACE TEMP VIEW tvb_v1 AS SELECT * FROM tvb VERSION AS OF '$s1'")
+    spark.sql("CREATE OR REPLACE TEMP VIEW tvb_refs AS SELECT * FROM tvb.refs")
+    try {
+      assert(spark.table("tvb_v1").count() === 1L)
+      assert(spark.sql("SELECT count(*) FROM tvb_refs").head().getLong(0) === 2L)
+    } finally Seq("tvb_v1", "tvb_refs").foreach(spark.catalog.dropTempView)
+  }
+
+  test("registered-name qualifiers: metadata-table-named columns and travel aliases resolve") {
+    val lake = new Lakehouse(spark, freshRoot())
+    import spark.implicits._
+    val s1 = lake.createOrReplace(Seq((1L, "x"), (2L, "y")).toDF("id", "tags"), "pm")
+    lake.append(Seq((3L, "z")).toDF("id", "tags"), "pm")
+    lake.registerView("pm")
+    def ids(sql: String): Seq[Long] = spark.sql(sql).collect().map(_.getLong(0)).toSeq.sorted
+    // `pm.tags` is a column of pm here, not the tags metadata table
+    assert(spark.sql("SELECT pm.tags FROM pm").collect().map(_.getString(0)).toSeq.sorted
+      === Seq("x", "y", "z"))
+    assert(ids("SELECT pm.id FROM pm WHERE pm.tags <> 'y'") === Seq(1L, 3L))
+    // a travel reference keeps its table name and its alias as qualifiers
+    assert(ids(s"SELECT pm.id FROM pm VERSION AS OF $s1") === Seq(1L, 2L))
+    assert(ids(s"SELECT o.id FROM pm VERSION AS OF $s1 AS o WHERE o.tags = 'x'") === Seq(1L))
+    // and a metadata table answers under `<table>.<m>` and its last part
+    assert(ids("SELECT pm.snapshots.snapshot_id FROM pm.snapshots") ===
+      lake.snapshots("pm").map(_._1).sorted)
+    assert(ids("SELECT snapshots.snapshot_id FROM pm.snapshots") ===
+      lake.snapshots("pm").map(_._1).sorted)
+  }
+
+  test("WITH bodies and EXPLAIN pin the registered name to the current snapshot") {
+    val lake = new Lakehouse(spark, freshRoot())
+    import spark.implicits._
+    lake.createOrReplace(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "ctef")
+    lake.registerView("ctef")
+    // programmatic appends WITHOUT re-registering the view
+    lake.append(Seq((3L, "c")).toDF("k", "v"), "ctef")
+    lake.append(Seq((4L, "d")).toDF("k", "v"), "ctef")
+    assert(spark.sql("WITH x AS (SELECT * FROM ctef) SELECT count(*) FROM x")
+      .head().getLong(0) === lake.read("ctef").count())
+    lake.append(Seq((5L, "e")).toDF("k", "v"), "ctef")
+    // a name referenced only under EXPLAIN is pinned too
+    spark.sql("EXPLAIN SELECT count(*) FROM ctef").collect()
+    assert(spark.table("ctef").count() === 5L)
+    val plan = spark.sql("EXPLAIN WITH x AS (SELECT * FROM ctef VERSION AS OF " +
+      s"${lake.snapshots("ctef").head._1}) SELECT count(*) FROM x").head().getString(0)
+    assert(!plan.contains("Error"), plan)
   }
 
   test("TIMESTAMP AS OF parses in the session timezone, not the JVM default") {

@@ -88,8 +88,8 @@ class SqlParserFuzzSpec extends SparkSpec {
       "ALTER TABLE fz ADD COLUMNS (z INT)",
       "VACUUM fz RETAIN 1 SNAPSHOTS",
       // travel/meta-table syntax on a REGISTERED name: trapped in a
-      // literal or comment it must reach the delegate byte-exact (the
-      // rewriteTimeTravel guard), not become a temp-view reference
+      // literal or comment it must reach the delegate byte-exact, not
+      // become a lakehouse relation
       "fz VERSION AS OF 3",
       "fz.history",
       "fz.snapshots",
@@ -270,7 +270,7 @@ class SqlParserFuzzSpec extends SparkSpec {
   test("travel syntax inside literals/comments survives execution byte-exact") {
     setupRoot
     // `fz` IS registered and the statement DOES contain travel syntax,
-    // so rewriteTimeTravel runs — but only code segments may rewrite
+    // but only the parsed travel reference resolves, never a literal
     val lit = spark.sql("SELECT 'fz VERSION AS OF 1' AS s, 'fz.history' AS h " +
       "FROM fz_twin LIMIT 1 -- fz VERSION AS OF 2").head()
     assert(lit.getString(0) == "fz VERSION AS OF 1")
@@ -302,5 +302,98 @@ class SqlParserFuzzSpec extends SparkSpec {
       .head().getLong(0) === lake.readSnapshot("fz", snap0).count())
     assert(spark.sql("SELECT count(*) AS n FROM fzcat.fz TIMESTAMP AS OF '2999-01-01 00:00:00'")
       .head().getLong(0) === lake.read("fz").count())
+  }
+
+  test("travel and metadata references match the programmatic API in every statement position") {
+    setupRoot
+    val root = java.nio.file.Files.createTempDirectory("graft-sqlfuzz-ref").toString
+    val lake = new Lakehouse(spark, root)
+    import spark.implicits._
+    // columns named like metadata tables: `fzq.tags` must stay a column
+    def rows(from: Int, until: Int) = (from until until).map { i =>
+      (i.toLong, s"t$i", s"f${i % 3}", s"h${i % 2}")
+    }.toDF("id", "tags", "files", "history")
+    val s1 = lake.createOrReplace(rows(0, 10), "fzq")
+    Thread.sleep(5)
+    val between = System.currentTimeMillis()
+    Thread.sleep(5)
+    val s2 = lake.append(rows(10, 25), "fzq")
+    lake.deleteWhere(col("id") < 3L, "fzq")
+    val snaps = lake.snapshots("fzq").map(_._1)
+    lake.createBranch("fzq", "dev", s1)
+    lake.tagSnapshot("fzq", "rel", s2)
+    lake.registerView("fzq")
+    val tz = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    val at = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
+      .withZone(tz).format(java.time.Instant.ofEpochMilli(between))
+    // keywords and the table name vary in case; ref names and literals do not
+    def kw(s: String): String = if (rnd.nextBoolean()) mixCase(s) else s
+    def t: String = if (rnd.nextInt(3) == 0) "FZQ" else "fzq"
+    val data: Seq[(() => String, () => org.apache.spark.sql.DataFrame)] =
+      snaps.flatMap(s => Seq(
+        (() => s"$t ${kw("VERSION AS OF")} $s", () => lake.readSnapshot("fzq", s)),
+        (() => s"$t ${kw("VERSION AS OF")} '$s'", () => lake.readSnapshot("fzq", s)))) ++ Seq(
+        (() => s"$t ${kw("VERSION AS OF")} 'rel'", () => lake.readTag("fzq", "rel")),
+        (() => s"$t ${kw("VERSION AS OF")} 'dev'", () => lake.read("fzq", "dev")),
+        (() => s"$t ${kw("TIMESTAMP AS OF")} '$at'", () => lake.readAsOf("fzq", between)),
+        (() => s"$t ${kw("TIMESTAMP AS OF")} ${kw("TIMESTAMP")} '$at'",
+          () => lake.readAsOf("fzq", between)))
+    val meta: Seq[(() => String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      (() => s"$t.history", () => lake.history("fzq")),
+      (() => s"$t.snapshots", () => lake.snapshotsDf("fzq")),
+      (() => s"$t.files", () => lake.filesDf("fzq")),
+      (() => s"$t.tags", () => lake.tagsDf("fzq")),
+      (() => s"$t.refs", () => lake.refsDf("fzq")))
+    def cellsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    def check(sql: String, expect: Seq[String]): Unit =
+      assert(cellsOf(spark.sql(sql)) == expect.sorted, s"rows diverge for: $sql")
+    val sink = java.nio.file.Files.createTempDirectory("graft-sqlfuzz-sink").toString
+    spark.sql(s"CREATE TABLE fzq_sink (n BIGINT) USING parquet LOCATION '$sink/n'")
+    var inserted = Seq.empty[String]
+    var n = 0
+    try {
+      (data ++ meta).zipWithIndex.foreach { case ((ref, expected), i) =>
+        val exp = cellsOf(expected())
+        val count = exp.size.toString
+        check(s"SELECT * FROM ${ref()}", exp)
+        check(s"SELECT a.* FROM ${ref()} AS a", exp)
+        check(s"WITH c AS (SELECT * FROM ${ref()}) SELECT * FROM c", exp)
+        check(s"WITH c AS (SELECT * FROM ${ref()}), d AS (SELECT * FROM c) SELECT * FROM d", exp)
+        check(s"SELECT (SELECT count(*) FROM ${ref()}) AS n", Seq(count))
+        check(s"SELECT k FROM fz_twin WHERE k IN (SELECT count(*) FROM ${ref()})",
+          if (exp.size < 120) Seq(count) else Nil)
+        check(s"SELECT * FROM ${ref()} UNION ALL SELECT * FROM ${ref()}", exp ++ exp)
+        val explained = spark.sql(s"EXPLAIN EXTENDED SELECT * FROM ${ref()}").head().getString(0)
+        assert(!explained.contains("Error occurred") && !explained.contains("UNRESOLVED"),
+          s"EXPLAIN failed to resolve ${ref()}:\n$explained")
+        spark.sql(s"INSERT INTO fzq_sink SELECT count(*) FROM ${ref()}")
+        inserted :+= count
+        spark.sql(s"CREATE TABLE fzq_ctas_$i USING parquet LOCATION '$sink/c$i' " +
+          s"AS SELECT * FROM ${ref()}")
+        try check(s"SELECT * FROM fzq_ctas_$i", exp)
+        finally spark.sql(s"DROP TABLE fzq_ctas_$i")
+        n += 10
+      }
+      check("SELECT n FROM fzq_sink", inserted)
+    } finally spark.sql("DROP TABLE fzq_sink")
+    // qualified column references on travel refs, with metadata-named columns
+    data.foreach { case (ref, expected) =>
+      val exp = expected()
+      val qual = cellsOf(exp.select("id", "tags", "files", "history"))
+      val tags = cellsOf(exp.select("tags"))
+      check(s"SELECT fzq.id, fzq.tags, fzq.files, fzq.history FROM ${ref()}", qual)
+      check(s"SELECT a.id, a.tags, a.files, a.history FROM ${ref()} a", qual)
+      check(s"SELECT x.tags FROM ${ref()} AS x WHERE x.id IN (SELECT fzq.id FROM fzq)",
+        cellsOf(exp.join(lake.read("fzq").select("id"), "id").select("tags")))
+      check(s"SELECT fzq.tags FROM ${ref()} UNION ALL SELECT fzq.tags FROM fzq WHERE false", tags)
+      n += 4
+    }
+    // the current state under column qualifiers named like metadata tables
+    check("SELECT fzq.tags, fzq.files, fzq.history FROM fzq",
+      cellsOf(lake.read("fzq").select("tags", "files", "history")))
+    check("SELECT fzq.history FROM fzq WHERE fzq.files = 'f1'",
+      cellsOf(lake.read("fzq").where(col("files") === "f1").select("history")))
+    assert(n >= 180, s"reference corpus too small: $n")
   }
 }

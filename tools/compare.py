@@ -2,7 +2,10 @@
 """Local stand-in for the driver's correctness gate: run Verify output
 parquet vs DuckDB oracle_sql.json on the same sf dir, compare values.
 
-Usage: python3 tools/compare.py <sfdir> <verify_out_dir>
+Usage: python3 tools/compare.py <sfdir> <verify_out_dir> [query ...]
+
+With query names (as for Verify's extra arguments), only those queries
+are compared; a named query with no output, or no oracle, fails.
 """
 import sys, json, glob, math
 import duckdb
@@ -16,13 +19,18 @@ def norm(v):
         return repr(round(v, 9))
     return repr(v)
 
-def main(sfdir, outdir):
+def main(sfdir, outdir, only=()):
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for name in sorted(set(only) - oracle.keys()):
+        print(f"NO-ORACLE {name}")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
+        if only and name not in only:
+            continue
         pq = f"{outdir}/{name}"
         if not glob.glob(f"{pq}/*.parquet"):
             print(f"MISSING-OUTPUT {name}")
@@ -73,4 +81,4 @@ def main(sfdir, outdir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2], set(sys.argv[3:])))
