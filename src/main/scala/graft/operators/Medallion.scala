@@ -470,20 +470,19 @@ object Medallion {
   }
 
   /** `sql_stats_agg` — METADATA-ONLY AGGREGATES through plain SQL
-    * (the Iceberg aggregate-pushdown surface;
-    * [[graft.sources.Lakehouse.metaAgg]]): three INSERT batches land,
-    * then `SELECT count(*) / min / max FROM t` answers from the
-    * manifest + `_stats.jsonl` + `_rowcounts.jsonl` ledgers. The
-    * readout counts data-dir opens across the unpredicated aggregate
-    * and reports `meta_only = 1` only when it touched ZERO data files
-    * — and the DuckDB oracle pins that as a literal 1.0, so the scale
+    * on a registered name (the Iceberg aggregate-pushdown surface):
+    * three INSERT batches land, then `SELECT count(*) / min / max /
+    * sum FROM t` plans through the name's DSv2 relation, whose pushed
+    * aggregate ([[graft.sources.spj.SpjMetaAgg]]) answers from the
+    * row-count, stats and sums ledgers. The readout reports
+    * `meta_only = 1` only when the executed plan is a
+    * LocalTableScanExec with NO BatchScanExec ([[metaOnlyPlan]]) —
+    * and the DuckDB oracle pins that as a literal 1.0, so the scale
     * property (a 100 TB table's count is a driver-side metadata
     * readout) is hash-checked cross-engine, not just spec-asserted.
-    * The predicated count additionally exercises all-match/boundary
-    * file classification: interior files contribute recorded row
-    * counts, only range-straddling files are scanned. */
+    * The predicated count plans like any filtered read: stats pruning,
+    * then a scan of the surviving files. */
   def sqlStatsAgg(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Lakehouse
     Tables.registerAll(spark, dir)
     val root = java.nio.file.Files.createTempDirectory("graft-statsagg").toString
     spark.conf.set(graft.sources.LakehouseCtasCommand.RootConf, root)
@@ -508,13 +507,13 @@ object Medallion {
           |SELECT o_orderkey, o_orderstatus, o_totalprice,
           |  CAST(o_totalprice AS DECIMAL(12,2)) AS price
           |FROM orders WHERE o_orderstatus = 'P'""".stripMargin)
-      val before = Lakehouse.dataDirOpens.get()
-      val meta = spark.sql(
+      val q = spark.sql(
         """SELECT count(*) AS n_total, min(o_orderkey) AS k_lo, max(o_orderkey) AS k_hi,
           |  min(o_totalprice) AS p_lo, max(o_totalprice) AS p_hi,
           |  sum(o_orderkey) AS s_key, sum(price) AS s_price
-          |FROM sa_orders""".stripMargin).head()
-      val metaOnly = if (Lakehouse.dataDirOpens.get() == before) 1.0 else 0.0
+          |FROM sa_orders""".stripMargin)
+      val meta = q.collect().head
+      val metaOnly = metaOnlyPlan(q)
       val cheap = spark.sql(
         "SELECT count(*) AS n FROM sa_orders WHERE o_totalprice < 150000.0").head().getLong(0)
       import spark.implicits._
@@ -540,9 +539,11 @@ object Medallion {
     * three commits with declared write-time sums, and the SQL
     * `SELECT status, count, sum, min, max … GROUP BY status ORDER BY
     * total DESC` answers from the partition paths + rowcount + sums +
-    * stats ledgers ([[graft.sources.Lakehouse.metaGroupAgg]]). The
-    * readout pins `meta_only = 1.0` — ZERO data-dir opens — alongside
-    * the per-group values, so the oracle hash-checks both the
+    * stats ledgers through the registered name's DSv2 relation
+    * ([[graft.sources.spj.SpjMetaAgg]]'s grouped path). The readout
+    * pins `meta_only = 1.0` — a LocalTableScanExec and no
+    * BatchScanExec in the executed plan — alongside the per-group
+    * values, so the oracle hash-checks both the
     * SEMANTICS (the grouped scan's exact rows) and the SCALE PROPERTY
     * (at 100 TB the daily report is a driver-side metadata fold over
     * O(partitions), not a table scan). */
@@ -561,13 +562,12 @@ object Medallion {
     lake.append(orders.where(col("o_orderkey") % 3 === 2), "ga_orders",
       partitionBy = Seq("o_orderstatus"))
     lake.registerView("ga_orders", Seq("o_orderstatus"))
-    val before = Lakehouse.dataDirOpens.get()
     val grouped = spark.sql(
       """SELECT o_orderstatus, count(*) AS n_orders, sum(price) AS total_price,
         |  min(o_orderkey) AS k_lo, max(o_orderkey) AS k_hi
         |FROM ga_orders GROUP BY o_orderstatus ORDER BY total_price DESC""".stripMargin)
-    val rows = grouped.collect() // command ran at sql(); freeze the readout
-    val metaOnly = if (Lakehouse.dataDirOpens.get() == before) 1.0 else 0.0
+    val rows = grouped.collect()
+    val metaOnly = metaOnlyPlan(grouped)
     import spark.implicits._
     rows.toSeq.map { r =>
       (r.getString(0), r.getLong(1),
@@ -743,6 +743,16 @@ object Medallion {
     walk(df.queryExecution.executedPlan)
   }
 
+  /** 1.0 when `df`'s executed plan answered from the ledgers — a
+    * LocalTableScanExec holding the pushed aggregate's finished rows
+    * and NO BatchScanExec — else 0.0: the `meta_only` readout. */
+  private[graft] def metaOnlyPlan(df: DataFrame): Double = {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    if (collectExec(df) { case l: LocalTableScanExec => l }.nonEmpty &&
+      collectExec(df) { case b: BatchScanExec => b }.isEmpty) 1.0 else 0.0
+  }
+
   /** `q_spj_agg` — DSv2 AGGREGATE PUSHDOWN answered from the ledgers
     * ([[graft.sources.spj.SpjMetaAgg]], the Iceberg
     * `SupportsPushDownAggregates` analog): a global
@@ -753,12 +763,10 @@ object Medallion {
     * LocalTableScanExec and NO BatchScanExec), so the oracle
     * hash-checks both the VALUES (bit-equal to DuckDB's scan) and the
     * SCALE PROPERTY: at 100 TB the whole readout is a metadata fold
-    * over O(files) ledger lines on the driver. Unlike [[sqlStatsAgg]]
-    * (the SQL-intercept route), this rides Spark's OWN pushdown
-    * machinery — any DataFrame/SQL client of the catalog gets it. */
+    * over O(files) ledger lines on the driver. [[sqlStatsAgg]] reaches
+    * the same pushdown through a registered name; this one addresses
+    * the catalog directly — any DataFrame/SQL client of it gets it. */
   def qSpjAgg(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.LocalTableScanExec
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import graft.sources.Lakehouse
     import graft.sources.spj.GraftSpjCatalog
     val root = java.nio.file.Files.createTempDirectory("graft-spjagg").toString
@@ -780,9 +788,7 @@ object Medallion {
          |  sum(o_orderkey) AS s_key, sum(o_price_d) AS s_price
          |FROM $cat.spjq_agg""".stripMargin)
     val r = q.collect().head
-    val metaOnly =
-      if (collectExec(q) { case l: LocalTableScanExec => l }.nonEmpty &&
-        collectExec(q) { case b: BatchScanExec => b }.isEmpty) 1.0 else 0.0
+    val metaOnly = metaOnlyPlan(q)
     import spark.implicits._
     Seq((r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3), r.getString(4),
       r.getLong(5), r.getDecimal(6).doubleValue(), metaOnly))
@@ -804,8 +810,6 @@ object Medallion {
     * plan-node walk (LocalTableScanExec present, no BatchScanExec), so
     * the oracle hash-checks values and the scale property together. */
   def qSpjGroupAgg(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.LocalTableScanExec
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import graft.sources.Lakehouse
     import graft.sources.spj.GraftSpjCatalog
     val root = java.nio.file.Files.createTempDirectory("graft-spjga").toString
@@ -825,9 +829,7 @@ object Medallion {
          |FROM $cat.spjq_gagg
          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
     val rows = q.collect()
-    val metaOnly =
-      if (collectExec(q) { case l: LocalTableScanExec => l }.nonEmpty &&
-        collectExec(q) { case b: BatchScanExec => b }.isEmpty) 1.0 else 0.0
+    val metaOnly = metaOnlyPlan(q)
     import spark.implicits._
     rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
       r.getLong(4), r.getDecimal(5).doubleValue(), metaOnly)).toSeq
@@ -850,8 +852,6 @@ object Medallion {
     * file pruning, shuffle-free fact-fact joins, and metadata-priced
     * gold rollups off ONE layout paid at write time. */
   def qSpjTwoLevel(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.LocalTableScanExec
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import graft.sources.Lakehouse
     import graft.sources.spj.GraftSpjCatalog
     val root = java.nio.file.Files.createTempDirectory("graft-spj2l").toString
@@ -896,9 +896,7 @@ object Medallion {
          |  sum(o_price_d) AS s_price
          |FROM $cat.spjq_2l GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
     val rows = g.collect()
-    val metaOnly =
-      if (collectExec(g) { case l: LocalTableScanExec => l }.nonEmpty &&
-        collectExec(g) { case b: BatchScanExec => b }.isEmpty) 1.0 else 0.0
+    val metaOnly = metaOnlyPlan(g)
     import spark.implicits._
     rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
       r.getDecimal(4).doubleValue(), metaOnly, colocated)).toSeq
@@ -921,8 +919,6 @@ object Medallion {
     * source rollup as a metadata readout without declaring a
     * partition level for the column. */
   def qSpjGroupStats(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.LocalTableScanExec
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import graft.sources.Lakehouse
     import graft.sources.spj.GraftSpjCatalog
     val root = java.nio.file.Files.createTempDirectory("graft-spjgs").toString
@@ -951,9 +947,7 @@ object Medallion {
          |  count(DISTINCT o_orderstatus) AS d_status
          |FROM $cat.spjq_gs GROUP BY o_orderstatus, gen""".stripMargin)
     val rows = g.collect()
-    val metaOnly =
-      if (collectExec(g) { case l: LocalTableScanExec => l }.nonEmpty &&
-        collectExec(g) { case b: BatchScanExec => b }.isEmpty) 1.0 else 0.0
+    val metaOnly = metaOnlyPlan(g)
     import spark.implicits._
     rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
       r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6), r.getLong(7),
@@ -977,8 +971,7 @@ object Medallion {
     * segment WHERE segment IN (...) — priced as a driver-local
     * metadata fold. */
   def qSpjFilterClaim(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.FilterExec
     import graft.sources.Lakehouse
     import graft.sources.spj.GraftSpjCatalog
     val root = java.nio.file.Files.createTempDirectory("graft-spjfc").toString
@@ -996,9 +989,7 @@ object Medallion {
          |FROM $cat.spjq_fc WHERE o_orderstatus IN ('F', 'O')
          |GROUP BY o_orderstatus""".stripMargin)
     val rows = g.collect()
-    val metaOnly =
-      if (collectExec(g) { case l: LocalTableScanExec => l }.nonEmpty &&
-        collectExec(g) { case b: BatchScanExec => b }.isEmpty) 1.0 else 0.0
+    val metaOnly = metaOnlyPlan(g)
     val noFilter =
       if (collectExec(g) { case f: FilterExec => f }.isEmpty) 1.0 else 0.0
     import spark.implicits._
@@ -1020,8 +1011,7 @@ object Medallion {
     * dirs. `meta_only` pins the LocalTableScan plan, `no_filter` the
     * vanished conjuncts. */
   def qSpjTimeClaim(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.FilterExec
     import graft.sources.Lakehouse
     import graft.sources.spj.GraftSpjCatalog
     val root = java.nio.file.Files.createTempDirectory("graft-spjtc").toString
@@ -1055,9 +1045,7 @@ object Medallion {
          |FROM $cat.spjq_tc
          |WHERE d BETWEEN DATE'1995-01-15' AND DATE'1995-02-14'""".stripMargin)
     val rows = g.collect()
-    val metaOnly =
-      if (collectExec(g) { case l: LocalTableScanExec => l }.nonEmpty &&
-        collectExec(g) { case b: BatchScanExec => b }.isEmpty) 1.0 else 0.0
+    val metaOnly = metaOnlyPlan(g)
     val noFilter =
       if (collectExec(g) { case f: FilterExec => f }.isEmpty) 1.0 else 0.0
     import spark.implicits._

@@ -1877,14 +1877,18 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     val snap = currentSnapshot(table, branch)
       .getOrElse(throw new IllegalArgumentException(s"no such table/branch: $table@$branch"))
     val entries = snapshots(table).find(_._1 == snap).get._2
-    entries.map(_.takeWhile(_ != '/')).distinct.sorted.foreach { dataDir =>
-      if (!fs.exists(new Path(new Path(tableDir(table), dataDir), "_sums.jsonl"))) {
-        val schema = dirSchema(table, dataDir)
-          .getOrElse(spark.read.option("mergeSchema", "true")
-            .parquet(new Path(tableDir(table), dataDir).toString).schema)
-        writeSums(table, dataDir, schema)
-      }
+    val unbuilt = entries.map(_.takeWhile(_ != '/')).distinct.sorted.filterNot { dataDir =>
+      fs.exists(new Path(new Path(tableDir(table), dataDir), "_sums.jsonl"))
     }
+    unbuilt.foreach { dataDir =>
+      val schema = dirSchema(table, dataDir)
+        .getOrElse(spark.read.option("mergeSchema", "true")
+          .parquet(new Path(tableDir(table), dataDir).toString).schema)
+      writeSums(table, dataDir, schema)
+    }
+    // the backfill adds ledgers without a new snapshot: a layout cached
+    // at this snapshot would keep serving files with no sums
+    if (unbuilt.nonEmpty) Lakehouse.catalogEpoch.incrementAndGet()
   }
 
   /** Can `rel`'s NATIVE parquet bloom filter possibly contain any of
@@ -3402,9 +3406,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
 
   /** The table's current read schema on `branch`, from metadata alone
     * whenever the per-dir schema records allow ([[metaSchema]]) — one
-    * manifest read, zero data-dir opens. The SQL front-end resolves
-    * aggregate output types through this so that intercepting
-    * `SELECT count(*) FROM t` stays free of data I/O end to end. */
+    * manifest read, zero data-dir opens. */
   def tableSchema(table: String, branch: String = "main"): org.apache.spark.sql.types.StructType = {
     val snap = currentSnapshot(table, branch)
       .getOrElse(throw new IllegalArgumentException(s"no such table/branch: $table@$branch"))
@@ -6632,7 +6634,9 @@ object Lakehouse {
     (String, Long), org.apache.spark.sql.types.StructType]()
 
   /** Monotone counter bumped on EVERY `_catalog.jsonl` mutation in
-    * this JVM (register/drop/rename/bucketed lines). Joins the
+    * this JVM (register/drop/rename/bucketed lines), and by a
+    * [[Lakehouse.computeSums]] backfill, which adds sums ledgers at an
+    * existing snapshot. Joins the
     * layout/probe cache keys because the file's (mtime, length) stamp
     * alone can miss a same-length rewrite within the filesystem's
     * mtime granularity (e.g. `SET PARTITION SPEC bucket(4,k)` →

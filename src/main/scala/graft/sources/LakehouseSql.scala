@@ -654,221 +654,6 @@ case class LakehouseDropCommand(view: String, purge: Boolean)
   }
 }
 
-object LakehouseMetaAggCommand {
-  private val CountStarRe =
-    """(?is)\s*COUNT\s*\(\s*(?:\*|1)\s*\)\s*(?:AS\s+`?([A-Za-z_]\w*)`?)?\s*""".r
-  private val MinMaxRe =
-    """(?is)\s*(MIN|MAX|SUM)\s*\(\s*`?([A-Za-z_]\w*)`?\s*\)\s*(?:AS\s+`?([A-Za-z_]\w*)`?)?\s*""".r
-
-  /** Parse a select list into metadata-answerable aggregate items;
-    * None if ANY item is something else (the statement then delegates
-    * to Spark untouched). Default output names replicate Spark's own
-    * (`count(1)`, `min(c)`) so the fast path is invisible to callers. */
-  def parseItems(selectList: String): Option[Seq[Lakehouse.MetaAggItem]] = {
-    val parsed = selectList.split(",").toSeq.map {
-      case CountStarRe(al) =>
-        Some(Lakehouse.MetaAggItem("count", None, Option(al).getOrElse("count(1)")))
-      case MinMaxRe(op, c, al) =>
-        Some(Lakehouse.MetaAggItem(op.toLowerCase, Some(c),
-          Option(al).getOrElse(s"${op.toLowerCase}($c)")))
-      case _ => None
-    }
-    if (parsed.nonEmpty && parsed.forall(_.isDefined)) Some(parsed.flatten) else None
-  }
-
-  /** Spark's own result type for `sum(<col of type dt>)` — the
-    * intercepted command's output must match the delegate path
-    * bit-for-bit, whichever leg answers. */
-  def sumResultType(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType => LongType
-      case d: DecimalType => DecimalType(math.min(38, d.precision + 10), d.scale)
-      case _ => DoubleType
-    }
-  }
-
-  /** The view's current schema when it resolves AND every referenced
-    * aggregate column exists on it; None delegates to Spark so the
-    * user gets the standard unresolved-column error, not a
-    * lakehouse-flavored one. Resolved ONCE at intercept time and
-    * threaded into the command — `output` and `run` must not re-read
-    * the manifest/schema ledgers for what the guard already knows. */
-  def resolvedSchema(spark: SparkSession, view: String,
-      items: Seq[Lakehouse.MetaAggItem]): Option[org.apache.spark.sql.types.StructType] =
-    scala.util.Try {
-      LakehouseRegistry.lookup(spark, view).map { case (lake, _) =>
-        lake.tableSchema(view, lake.sessionBranch)
-      }.filter { st =>
-        val names = st.fieldNames.toSet
-        items.forall(i => i.col.forall(names.contains))
-      }
-    }.toOption.flatten // unreadable view/branch: delegate, Spark reports it
-}
-
-/** `SELECT count(*) | min(c) | max(c) [, …] FROM <lakehouse view>
-  * [WHERE <simple predicate>]` — the Iceberg aggregate-pushdown
-  * surface: answered from manifest + stats-ledger metadata via
-  * [[Lakehouse.metaAgg]] whenever metadata can answer EXACTLY, else
-  * by the ordinary scan. Both paths produce identical rows — the
-  * statement's meaning never depends on which fired. Intercepted only
-  * for the tight shape above (single registered view, plain aggregate
-  * list, subquery-free WHERE); everything else delegates to Spark. */
-case class LakehouseMetaAggCommand(view: String, items: Seq[Lakehouse.MetaAggItem],
-    whereClause: Option[String],
-    viewSchema: Option[org.apache.spark.sql.types.StructType] = None)
-  extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = {
-    // schema resolved at intercept time ([[LakehouseMetaAggCommand
-    // .resolvedSchema]]) — no second metadata read here
-    val schema = viewSchema
-    items.map { i =>
-      lazy val colType = schema.flatMap(st => i.col.flatMap(c => st.fields.find(_.name == c)))
-        .map(_.dataType).getOrElse(StringType)
-      i.op match {
-        case "count" => AttributeReference(i.alias, LongType, nullable = false)()
-        case "sum" =>
-          AttributeReference(i.alias, LakehouseMetaAggCommand.sumResultType(colType))()
-        case _ => AttributeReference(i.alias, colType)()
-      }
-    }
-  }
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit, max, min}
-    val (lake, _) = LakehouseRegistry.lookup(spark, view)
-      .getOrElse(throw new IllegalStateException(s"$view is not a registered lakehouse view"))
-    val pred = whereClause.map(expr)
-    lake.metaAgg(view, items, pred, lake.sessionBranch) match {
-      case Some(df) => df.collect().toSeq
-      case None => // metadata can't answer exactly: ordinary scan, same rows
-        import org.apache.spark.sql.functions.sum
-        val base = pred.foldLeft(lake.sqlRelation(view, lake.sessionBranch))(_ where _)
-        val aggs = items.map { i =>
-          i.op match {
-            case "count" => count(lit(1)).as(i.alias)
-            case "min" => min(col(i.col.get)).as(i.alias)
-            case "max" => max(col(i.col.get)).as(i.alias)
-            case "sum" => sum(col(i.col.get)).as(i.alias)
-          }
-        }
-        base.agg(aggs.head, aggs.tail: _*).collect().toSeq
-    }
-  }
-}
-
-object LakehouseGroupAggCommand {
-  private val BareColRe = """\s*`?([A-Za-z_]\w*)`?\s*""".r
-  private val OrderItemRe = """(?is)\s*`?([A-Za-z_]\w*)`?(?:\s+(ASC|DESC))?\s*""".r
-
-  /** Bare column list (`a, b`) → names; None on anything else. */
-  def parseBareCols(s: String): Option[Seq[String]] = {
-    val parsed = s.split(",").toSeq.map {
-      case BareColRe(c) => Some(c)
-      case _ => None
-    }
-    if (parsed.nonEmpty && parsed.forall(_.isDefined)) Some(parsed.flatten) else None
-  }
-
-  /** Select list of a grouped aggregate: each entry either a bare
-    * GROUP BY column or a metadata-answerable aggregate. The bare
-    * columns must be exactly the GROUP BY set (SQL's grouping rule,
-    * and the shape [[Lakehouse.metaGroupAgg]] returns). */
-  def parseSelect(selectList: String, groupCols: Seq[String])
-      : Option[Seq[Either[String, Lakehouse.MetaAggItem]]] = {
-    val parsed: Seq[Option[Either[String, Lakehouse.MetaAggItem]]] =
-      selectList.split(",").toSeq.map { item =>
-        LakehouseMetaAggCommand.parseItems(item) match {
-          case Some(Seq(i)) => Some(Right(i))
-          case _ => item match {
-            case BareColRe(c) if groupCols.contains(c) => Some(Left(c))
-            case _ => None
-          }
-        }
-      }
-    if (parsed.isEmpty || parsed.exists(_.isEmpty)) return None
-    val sel = parsed.flatten
-    val bare = sel.collect { case Left(c) => c }
-    val aliases = sel.collect { case Right(i) => i.alias }
-    // exact group coverage, no duplicate/colliding output names
-    if (bare.sorted == groupCols.sorted && bare.distinct.size == bare.size &&
-      (bare ++ aliases).distinct.size == sel.size) Some(sel) else None
-  }
-
-  /** `ORDER BY` tail → (output column, ascending) pairs; names must
-    * be output columns of the select list. */
-  def parseOrder(s: String, outNames: Seq[String]): Option[Seq[(String, Boolean)]] = {
-    if (s == null) return Some(Seq.empty)
-    val parsed = s.split(",").toSeq.map {
-      case OrderItemRe(c, dir) if outNames.contains(c) =>
-        Some((c, dir == null || dir.equalsIgnoreCase("ASC")))
-      case _ => None
-    }
-    if (parsed.nonEmpty && parsed.forall(_.isDefined)) Some(parsed.flatten) else None
-  }
-}
-
-/** `SELECT <group cols + count/min/max/sum aggs> FROM <lakehouse
-  * view> [WHERE …] GROUP BY <cols> [ORDER BY <output cols>]` — the
-  * grouped aggregate-pushdown surface (the reference's gold report,
-  * spark_jobs/gold_reporting.py:70, priced as metadata): answered
-  * from partition paths + ledgers via [[Lakehouse.metaGroupAgg]]
-  * whenever metadata restates the grouped scan EXACTLY, else by that
-  * ordinary grouped scan. Both paths produce identical rows. */
-case class LakehouseGroupAggCommand(view: String,
-    select: Seq[Either[String, Lakehouse.MetaAggItem]],
-    groupCols: Seq[String], whereClause: Option[String],
-    order: Seq[(String, Boolean)],
-    viewSchema: org.apache.spark.sql.types.StructType)
-  extends LeafRunnableCommand {
-
-  override val output: Seq[Attribute] = select.map {
-    case Left(g) =>
-      AttributeReference(g,
-        viewSchema.fields.find(_.name == g).map(_.dataType).getOrElse(StringType))()
-    case Right(i) =>
-      lazy val colType = i.col.flatMap(c => viewSchema.fields.find(_.name == c))
-        .map(_.dataType).getOrElse(StringType)
-      i.op match {
-        case "count" => AttributeReference(i.alias, LongType, nullable = false)()
-        case "sum" =>
-          AttributeReference(i.alias, LakehouseMetaAggCommand.sumResultType(colType))()
-        case _ => AttributeReference(i.alias, colType)()
-      }
-  }
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, sum}
-    val (lake, _) = LakehouseRegistry.lookup(spark, view)
-      .getOrElse(throw new IllegalStateException(s"$view is not a registered lakehouse view"))
-    val pred = whereClause.map(expr)
-    val items = select.collect { case Right(i) => i }
-    val grouped = lake.metaGroupAgg(view, groupCols, items, pred, lake.sessionBranch)
-      .getOrElse {
-        // metadata can't answer exactly: ordinary grouped scan, same rows
-        val base = pred.foldLeft(lake.sqlRelation(view, lake.sessionBranch))(_ where _)
-        val aggs = items.map { i =>
-          i.op match {
-            case "count" => count(lit(1)).as(i.alias)
-            case "min" => min(col(i.col.get)).as(i.alias)
-            case "max" => max(col(i.col.get)).as(i.alias)
-            case "sum" => sum(col(i.col.get)).as(i.alias)
-          }
-        }
-        base.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      }
-    val projected = grouped.select(select.map {
-      case Left(g) => col(g)
-      case Right(i) => col(i.alias)
-    }: _*)
-    val ordered =
-      if (order.isEmpty) projected
-      else projected.orderBy(order.map { case (c, asc) =>
-        if (asc) col(c).asc else col(c).desc
-      }: _*)
-    ordered.collect().toSeq
-  }
-}
-
 /** Thin statement front-end: recognizes the two lakehouse DML shapes
   * against REGISTERED views, delegates everything else (including DML
   * on unregistered tables — Spark's own analyzer then reports its
@@ -987,27 +772,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   // SHOW NAMESPACES/TABLES intercept only when IN names a registered
   // lake — Spark's native statements keep working for everything else
   private val ShowCatalogsRe = """(?is)\s*SHOW\s+CATALOGS\s*;?\s*""".r
-  // metadata-answerable aggregate SELECT: a plain agg list over ONE
-  // registered view with an optional simple WHERE. The select list
-  // must not contain FROM (no subqueries) and the WHERE tail must be
-  // free of any further clause keyword — anything else falls through
-  // to Spark's parser untouched.
-  private val MetaAggRe =
-    ("""(?is)\s*SELECT\s+((?:(?!\bFROM\b).)+?)\s+FROM\s+`?([A-Za-z_]\w*)`?""" +
-      """(?:\s+WHERE\s+(.+?))?\s*;?\s*""").r
-  private val MetaAggStopRe =
-    """(?is).*\b(GROUP|ORDER|HAVING|LIMIT|JOIN|UNION|SELECT|INTERSECT|EXCEPT|WINDOW)\b.*""".r
-  // grouped aggregate SELECT over ONE registered view: the WHERE tail
-  // stops at GROUP BY, the GROUP BY tail at an optional ORDER BY —
-  // trailing HAVING/LIMIT/etc. land inside the captured groups and
-  // fail the bare-column parse, so those statements delegate
-  private val GroupAggRe =
-    ("""(?is)\s*SELECT\s+((?:(?!\bFROM\b).)+?)\s+FROM\s+`?([A-Za-z_]\w*)`?""" +
-      """(?:\s+WHERE\s+((?:(?!\bGROUP\b).)+?))?""" +
-      """\s+GROUP\s+BY\s+((?:(?!\bORDER\b).)+?)""" +
-      """(?:\s+ORDER\s+BY\s+(.+?))?\s*;?\s*""").r
-  private val GroupWhereStopRe =
-    """(?is).*\b(ORDER|HAVING|LIMIT|JOIN|UNION|SELECT|INTERSECT|EXCEPT|WINDOW)\b.*""".r
   private val ShowNamespacesRe =
     """(?is)\s*SHOW\s+(?:NAMESPACES|DATABASES|SCHEMAS)\s+IN\s+`?([A-Za-z_][\w.-]*)`?\s*;?\s*""".r
   private val ShowTablesRe =
@@ -1124,51 +888,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     if (keys.forall(_.isDefined)) Some(keys.flatten) else None
   }
 
-  /** Single-pass MetaAgg intercept: the regex match, item parse,
-    * WHERE guard and schema resolution each run ONCE (the previous
-    * guard chain re-ran `parseItems` three times and read the
-    * manifest/schema ledgers twice per intercepted SELECT), and the
-    * resolved schema rides into the command so `output` doesn't
-    * re-derive it. */
-  private object MetaAggIntercept {
-    def unapply(sqlText: String): Option[LakehouseMetaAggCommand] = sqlText match {
-      case MetaAggRe(selectList, table, where)
-          if LakehouseRegistry.isRegistered(table) &&
-            (where == null || (!SubqueryRe.matches(where) && !MetaAggStopRe.matches(where))) =>
-        for {
-          items <- LakehouseMetaAggCommand.parseItems(selectList)
-          spark <- SparkSession.getActiveSession
-          schema <- LakehouseMetaAggCommand.resolvedSchema(spark, table, items)
-        } yield LakehouseMetaAggCommand(table, items, Option(where), Some(schema))
-      case _ => None
-    }
-  }
-
-  /** Single-pass grouped-aggregate intercept, mirroring
-    * [[MetaAggIntercept]]: regex, select/group/order parses and
-    * schema resolution each run once; any miss (expression select
-    * items, mismatched grouping set, unknown columns, subquery WHERE)
-    * delegates to Spark untouched, and run() itself falls back to the
-    * ordinary grouped scan when metadata can't answer exactly. */
-  private object GroupAggIntercept {
-    def unapply(sqlText: String): Option[LakehouseGroupAggCommand] = sqlText match {
-      case GroupAggRe(selectList, table, where, groupBy, orderBy)
-          if LakehouseRegistry.isRegistered(table) &&
-            (where == null || (!SubqueryRe.matches(where) && !GroupWhereStopRe.matches(where))) =>
-        for {
-          groups <- LakehouseGroupAggCommand.parseBareCols(groupBy)
-          sel <- LakehouseGroupAggCommand.parseSelect(selectList, groups)
-          outNames = sel.map { case Left(g) => g; case Right(i) => i.alias }
-          ord <- LakehouseGroupAggCommand.parseOrder(orderBy, outNames)
-          spark <- SparkSession.getActiveSession
-          items = sel.collect { case Right(i) => i }
-          schema <- LakehouseMetaAggCommand.resolvedSchema(spark, table, items)
-          if groups.forall(schema.fieldNames.contains)
-        } yield LakehouseGroupAggCommand(table, sel, groups, Option(where), ord, schema)
-      case _ => None
-    }
-  }
-
   override def parsePlan(sqlText: String): LogicalPlan =
     parseStripped(GraftSqlParser.stripComments(sqlText), sqlText)
 
@@ -1184,8 +903,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     case CallRe(proc, argstr) if callTable(argstr).exists(LakehouseRegistry.isRegistered) =>
       LakehouseCallCommand(proc.toLowerCase, callArgs(argstr))
     case ShowCatalogsRe() => LakehouseShowCatalogsCommand()
-    case MetaAggIntercept(cmd) => cmd
-    case GroupAggIntercept(cmd) => cmd
     case ShowNamespacesRe(cat) if isLake(cat) => LakehouseShowNamespacesCommand(cat)
     case ShowTablesRe(cat) if isLake(cat) => LakehouseShowTablesCommand(cat)
     case CreateViewRe(orRepl, view, body)

@@ -157,20 +157,20 @@ class GroupAggSpec extends SparkSpec {
       "tombstoned snapshot must refuse")
   }
 
-  test("SQL: SELECT g, count/sum/min/max … GROUP BY g intercepts, matches Spark, zero opens") {
+  test("SQL: SELECT g, count/sum/min/max … GROUP BY g matches Spark, plans no scan") {
     import spark.implicits._
     val lake = new Lakehouse(spark, freshRoot())
     lake.declareSumColumns("tg", Seq("x"))
     val df = (0 until 150).map(i => (i.toLong, s"g${i % 3}", i * 2L)).toDF("k", "g", "x")
     lake.createOrReplace(df, "tg", partitionBy = Seq("g"))
     lake.registerView("tg", Seq("g"))
-    val before = Lakehouse.dataDirOpens.get()
     val got = spark.sql(
       """SELECT g, count(*) AS n, sum(x) AS s, min(k) AS lo, max(k) AS hi
         |FROM tg GROUP BY g ORDER BY s DESC""".stripMargin)
     val rows = got.collect().toSeq
-    assert(Lakehouse.dataDirOpens.get() - before === 0,
-      "the grouped SQL aggregate opened a data dir — the metadata path did not fire")
+    assert(graft.operators.Medallion.metaOnlyPlan(got) === 1.0,
+      "the grouped SQL aggregate planned a file scan — the ledger pushdown did not fire:\n" +
+        got.queryExecution.executedPlan)
     val want = lake.read("tg").groupBy("g")
       .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
         min(col("k")).as("lo"), max(col("k")).as("hi"))
@@ -179,16 +179,16 @@ class GroupAggSpec extends SparkSpec {
     assert(got.columns.toSeq === Seq("g", "n", "s", "lo", "hi"))
   }
 
-  test("SQL: non-interceptable grouped shapes delegate to Spark unchanged") {
+  test("SQL: grouped shapes the pushdown declines still answer through Spark") {
     import spark.implicits._
     val lake = new Lakehouse(spark, freshRoot())
     val df = (0 until 60).map(i => (i.toLong, s"g${i % 2}", i * 2L)).toDF("k", "g", "x")
     lake.createOrReplace(df, "tg2", partitionBy = Seq("g"))
     lake.registerView("tg2", Seq("g"))
-    // expression select item → Spark path; answer still correct
+    // expression aggregate input: no ledger answers it, the scan does
     val a = spark.sql("SELECT g, sum(x + 1) AS s FROM tg2 GROUP BY g ORDER BY g").collect()
     assert(a.map(_.getLong(1)).sum === (0 until 60).map(_ * 2L + 1).sum)
-    // HAVING lands in the captured group tail and delegates
+    // HAVING filters the grouped rows above the scan
     val b = spark.sql(
       "SELECT g, count(*) AS n FROM tg2 GROUP BY g HAVING count(*) > 10 ORDER BY g").collect()
     assert(b.length === 2 && b.forall(_.getLong(1) === 30))
@@ -209,12 +209,20 @@ class GroupAggSpec extends SparkSpec {
       else lake.append(df, "tg3", partitionBy = Seq("g"))
     }
     lake.registerView("tg3", Seq("g"))
-    val before = Lakehouse.dataDirOpens.get()
-    val rows = spark.sql(
+    val q = spark.sql(
       "SELECT g, count(*) AS n, sum(x) AS s FROM tg3 WHERE k < 250 GROUP BY g ORDER BY g")
-      .collect().toSeq
-    val opened = Lakehouse.dataDirOpens.get() - before
-    assert(opened === 1, s"expected only the straddling dir to open, got $opened")
+    val rows = q.collect().toSeq
+    // the k-ranges prune the fourth commit's two files (k >= 300) from
+    // the DSv2 scan at plan time; the other six files are planned
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import graft.sources.spj.GraftSpjScan
+    val scans = graft.operators.Medallion.collectExec(q) {
+      case b: BatchScanExec => b.scan
+    }.collect { case s: GraftSpjScan => s }
+    assert(scans.size === 1, s"expected one DSv2 scan:\n${q.queryExecution.executedPlan}")
+    assert(lake.spjLayout("tg3").files.valuesIterator.map(_.size).sum === 8)
+    assert(scans.head.plannedFileCount === 6,
+      s"expected the two k >= 300 files pruned, planned ${scans.head.plannedFileCount}")
     val want = lake.read("tg3").where(col("k") < 250).groupBy("g")
       .agg(count(lit(1)).as("n"), sum(col("x")).as("s")).orderBy("g").collect().toSeq
     assert(rows.map(_.toSeq) === want.map(_.toSeq))

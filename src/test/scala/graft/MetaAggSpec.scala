@@ -112,7 +112,7 @@ class MetaAggSpec extends SparkSpec {
     lake.createOrReplace((0 until 20).map(i => (i.toLong, s"v$i")).toDF("k", "v"), "tmetatomb")
     lake.deleteWhereMor(col("k") < 5, "tmetatomb")
     assert(lake.metaAgg("tmetatomb", items(("count", "", "n")), None).isEmpty)
-    // and the SQL surface still answers correctly via its scan fallback
+    // and the SQL surface still answers correctly through its scan
     lake.registerView("tmetatomb")
     assert(spark.sql("SELECT count(*) FROM tmetatomb").head().getLong(0) === 15)
   }
@@ -197,7 +197,7 @@ class MetaAggSpec extends SparkSpec {
       "a partition-exact predicate needs no data scan: the path value IS the stat")
   }
 
-  test("SQL: SELECT count(*)/min/max FROM t intercepts, matches Spark, keeps Spark's names") {
+  test("SQL: SELECT count(*)/min/max FROM t matches Spark and keeps Spark's names") {
     import spark.implicits._
     val lake = new Lakehouse(spark, freshRoot())
     lake.createOrReplace((0 until 40).map(i => (i.toLong, i * 3.0)).toDF("k", "x"), "tsqlagg")
@@ -205,12 +205,12 @@ class MetaAggSpec extends SparkSpec {
     lake.registerView("tsqlagg")
     val r = spark.sql("SELECT count(*), min(k) AS klo, max(x) FROM tsqlagg").head()
     assert(r.getLong(0) === 60 && r.getLong(1) === 0L && r.getDouble(2) === 177.0)
-    // default output names replicate Spark's own
+    // default output names are Spark's own
     val names = spark.sql("SELECT count(*), min(k), max(x) FROM tsqlagg").columns.toSeq
     assert(names === Seq("count(1)", "min(k)", "max(x)"))
     // predicated count through SQL
     assert(spark.sql("SELECT count(*) AS n FROM tsqlagg WHERE k >= 50").head().getLong(0) === 10)
-    // non-intercepted shapes still answer through Spark untouched
+    // grouped and sum shapes answer through the same relation
     assert(spark.sql("SELECT count(*) AS n FROM tsqlagg GROUP BY k % 2 ORDER BY n").count() === 2)
     assert(spark.sql("SELECT sum(x) FROM tsqlagg").head().getDouble(0) ===
       (0 until 60).map(_ * 3.0).sum)
@@ -227,7 +227,7 @@ class MetaAggSpec extends SparkSpec {
       sum(col("o_orderkey")),
       sum(col("o_totalprice").cast("decimal(12,2)"))).head()
     assert(out("meta_only") === 1.0,
-      "the unpredicated SQL aggregate opened a data dir — the metadata path did not fire")
+      "the unpredicated SQL aggregate planned a file scan — the ledger pushdown did not fire")
     assert(out("k_lo") === r.getAs[Number](0).doubleValue())
     assert(out("k_hi") === r.getAs[Number](1).doubleValue())
     assert(out("p_lo") === r.getAs[Number](2).doubleValue())
@@ -351,11 +351,15 @@ class MetaAggSpec extends SparkSpec {
     lake.createOrReplace((0 until 100).map(i => (i.toLong, i * 2L)).toDF("k", "x"), "t")
     lake.append((100 until 150).map(i => (i.toLong, i * 2L)).toDF("k", "x"), "t")
     lake.registerView("t")
+    // plan once before the backfill: the CALL commits no snapshot, so
+    // the scan layout cached here must not outlive the new ledgers
+    assert(spark.sql("SELECT count(*) AS n FROM t").head().getLong(0) === 150L)
     spark.sql("CALL system.compute_sums(table => 't', columns => 'x')").collect()
-    val before = Lakehouse.dataDirOpens.get()
-    val r = spark.sql("SELECT sum(x) AS s, count(*) AS n FROM t").head()
-    assert(Lakehouse.dataDirOpens.get() - before === 0,
-      "backfilled sums must answer SELECT sum() without opening data")
+    val q = spark.sql("SELECT sum(x) AS s, count(*) AS n FROM t")
+    val r = q.head()
+    assert(graft.operators.Medallion.metaOnlyPlan(q) === 1.0,
+      "backfilled sums must answer SELECT sum() from the ledgers, with no file scan:\n" +
+        q.queryExecution.executedPlan)
     assert(r.getLong(0) === (0 until 150).map(_ * 2L).sum)
     assert(r.getLong(1) === 150L)
   }

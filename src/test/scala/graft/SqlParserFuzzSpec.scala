@@ -19,11 +19,13 @@ import graft.sources.spj.GraftSpjCatalog
   *  1. DELEGATION IS EXACT — statements outside the intercept surface
   *     (including ones carrying registered view names, DML keywords,
   *     `WHEN MATCHED`, and intercept-shaped text inside string
-  *     literals and comments) parse to a plan `==` the delegate's.
-  *  2. INTERCEPTED OUTPUT ≡ DELEGATE OUTPUT — SELECT shapes that MAY
-  *     hit the metaAgg/groupAgg fast paths execute to the same rows
-  *     and column names as the identical statement against an
-  *     UNREGISTERED twin of the same data (which can only delegate).
+  *     literals and comments) parse to a plan `==` the delegate's. No
+  *     SELECT over a registered name parses to a `graft.*` command.
+  *  2. ONE READ ENGINE — aggregate and near-miss SELECT shapes execute
+  *     to the same rows and column names through the registered name
+  *     (pinned to its DSv2 relation, whose pushed aggregates answer
+  *     from the ledgers), through the same table in the DSv2 catalog,
+  *     and against an UNREGISTERED twin of the same data (plain Spark).
   *  3. REFUSALS ARE LOUD — the documented unsupported corners
   *     (subqueries in row-local predicates) throw
   *     `UnsupportedOperationException`, never parse to a command that
@@ -68,13 +70,41 @@ class SqlParserFuzzSpec extends SparkSpec {
     val df = (0L until 120L).map { i =>
       (i, s"name_$i WHERE x", Seq("red", "green", "blue")(i.toInt % 3), i * 7 % 100)
     }.toDF("k", "s", "p", "m")
-    // registered, identity-partitioned (so groupAgg COULD fire on p)
-    lake.createOrReplace(df, "fz", Seq("p"))
+    // registered, identity-partitioned (grouped pushdown on p), two commits
+    lake.createOrReplace(df.where(col("k") < 70), "fz", Seq("p"))
+    lake.append(df.where(col("k") >= 70), "fz", Seq("p"))
     lake.registerView("fz", Seq("p"))
-    // the unregistered twin: same rows, can only ever delegate
+    // the same table through the DSv2 catalog
+    spark.conf.set("spark.sql.catalog.fzcat", classOf[GraftSpjCatalog].getName)
+    spark.conf.set("spark.sql.catalog.fzcat.root", root)
+    // the unregistered twin: same rows, plain Spark
     df.createOrReplaceTempView("fz_twin")
     root
   }
+
+  // aggregate SELECTs the ledger pushdown may answer, and near-misses
+  // that must scan; `%T` is the table reference (`mutate` may lower it)
+  private val selectShapes = Seq(
+    "SELECT count(*) FROM %T",
+    "SELECT count(*) AS n FROM %T",
+    "SELECT COUNT( * ) AS n FROM %T WHERE k >= 17",
+    "SELECT min(k) AS lo, max(k) AS hi FROM %T",
+    "SELECT min(k) AS lo, max(k) AS hi, count(*) AS n FROM %T WHERE m < 50",
+    "SELECT sum(k) AS sk FROM %T",
+    "SELECT sum(m) AS sm, count(*) AS n FROM %T WHERE p = 'red'",
+    "SELECT min(s) AS lo FROM %T WHERE s LIKE 'name_1%%'",
+    "SELECT p, count(*) AS n FROM %T GROUP BY p",
+    "SELECT p, count(*) AS n, sum(m) AS sm FROM %T GROUP BY p ORDER BY p",
+    "SELECT p, min(k) AS lo, max(k) AS hi FROM %T WHERE k > 3 GROUP BY p",
+    "SELECT p, sum(k) AS sk FROM %T GROUP BY p ORDER BY sk DESC",
+    "SELECT count(*) + 1 AS n FROM %T",
+    "SELECT count(*) AS `a,b` FROM %T",
+    "SELECT min(k + 1) AS lo FROM %T",
+    "SELECT p, avg(m) AS am FROM %T GROUP BY p",
+    "SELECT upper(p) AS p2, count(*) AS n FROM %T GROUP BY upper(p)",
+    "SELECT count(*) AS n FROM %T WHERE s = 'DELETE FROM fz'",
+    "SELECT count(*) AS n FROM %T WHERE s LIKE '%%WHERE%%'",
+    "SELECT min(k) AS lo FROM %T WHERE p IN ('red', 'blue')")
 
   test("delegation is exact on >600 adversarial non-intercept statements") {
     setupRoot
@@ -124,7 +154,7 @@ class SqlParserFuzzSpec extends SparkSpec {
         "SHOW CREATE TABLE not_reg",
         "DESCRIBE EXTENDED not_reg",
         "DESC EXTENDED not_reg"),
-      // aggregate-LOOKING statements that must NOT hit metaAgg/groupAgg
+      // aggregate-looking statements over registered and plain names
       Seq("SELECT count(*) FROM not_reg",
         "SELECT count(*) FROM fz_twin",
         "SELECT min(k) OVER () FROM fz_twin",
@@ -132,7 +162,9 @@ class SqlParserFuzzSpec extends SparkSpec {
         "SELECT count(DISTINCT k) AS n, p FROM fz GROUP BY p HAVING n > 1",
         "SELECT p, count(*) FROM fz GROUP BY p ORDER BY rand()",
         "SELECT count(*) FROM (SELECT k FROM fz WHERE k < 10)",
-        "WITH c AS (SELECT k FROM fz) SELECT count(*) FROM c")
+        "WITH c AS (SELECT k FROM fz) SELECT count(*) FROM c"),
+      // every SELECT shape over the registered name reaches Spark's parser
+      selectShapes.map(_.replace("%T", "fz"))
     ).flatten
     var n = 0
     val statements = templates.flatMap(t => Seq(t) ++ (1 to 20).map(_ => mutate(t)))
@@ -158,54 +190,31 @@ class SqlParserFuzzSpec extends SparkSpec {
     assert(n >= 600, s"corpus too small: $n")
   }
 
-  test("intercepted SELECT output == delegate output on the same data (>200 executed pairs)") {
+  test("registered, catalog and plain SELECTs agree (>200 executed pairs)") {
     setupRoot
-    // shapes chosen to straddle the metaAgg/groupAgg boundary: some
-    // intercept, some miss it by one feature — every one must return
-    // the same rows + column names through either route
-    val shapes = Seq(
-      "SELECT count(*) FROM %T",
-      "SELECT count(*) AS n FROM %T",
-      "SELECT COUNT( * ) AS n FROM %T WHERE k >= 17",
-      "SELECT min(k) AS lo, max(k) AS hi FROM %T",
-      "SELECT min(k) AS lo, max(k) AS hi, count(*) AS n FROM %T WHERE m < 50",
-      "SELECT sum(k) AS sk FROM %T",
-      "SELECT sum(m) AS sm, count(*) AS n FROM %T WHERE p = 'red'",
-      "SELECT min(s) AS lo FROM %T WHERE s LIKE 'name_1%%'",
-      "SELECT p, count(*) AS n FROM %T GROUP BY p",
-      "SELECT p, count(*) AS n, sum(m) AS sm FROM %T GROUP BY p ORDER BY p",
-      "SELECT p, min(k) AS lo, max(k) AS hi FROM %T WHERE k > 3 GROUP BY p",
-      "SELECT p, sum(k) AS sk FROM %T GROUP BY p ORDER BY sk DESC",
-      // near-misses: expressions/aliases the fast path must not mangle
-      "SELECT count(*) + 1 AS n FROM %T",
-      "SELECT count(*) AS `a,b` FROM %T",
-      "SELECT min(k + 1) AS lo FROM %T",
-      "SELECT p, avg(m) AS am FROM %T GROUP BY p",
-      "SELECT upper(p) AS p2, count(*) AS n FROM %T GROUP BY upper(p)",
-      "SELECT count(*) AS n FROM %T WHERE s = 'DELETE FROM fz'",
-      "SELECT count(*) AS n FROM %T WHERE s LIKE '%%WHERE%%'",
-      "SELECT min(k) AS lo FROM %T WHERE p IN ('red', 'blue')")
     var pairs = 0
-    shapes.foreach { shape =>
+    selectShapes.foreach { shape =>
       val variants = Seq(shape) ++ (1 to 5).map(_ => mutate(shape))
       variants.foreach { v =>
-        val viaLake = Try(spark.sql(v.replace("%T", "fz")))
-        val viaTwin = Try(spark.sql(v.replace("%T", "fz_twin")))
-        (viaLake, viaTwin) match {
-          case (Success(a), Success(b)) =>
-            assert(a.columns.toSeq == b.columns.toSeq,
-              s"column names diverge for: $v\n ${a.columns.toSeq} vs ${b.columns.toSeq}")
-            val ra = a.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-            val rb = b.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-            assert(ra == rb, s"results diverge for: $v")
-          case (Failure(_), Failure(_)) => // both refuse the mutation: fine
-          case (a, b) =>
-            fail(s"asymmetric run outcomes for: $v\n lake=$a\n twin=$b")
+        val Seq(twin, viaName, viaCatalog) =
+          Seq("fz_twin", "fz", "fzcat.fz").map(t => t -> Try(spark.sql(v.replaceAll("(?i)%T", t))))
+        Seq(viaName, viaCatalog).foreach { case (t, run) =>
+          (run, twin._2) match {
+            case (Success(a), Success(b)) =>
+              assert(a.columns.toSeq == b.columns.toSeq,
+                s"column names diverge on $t for: $v\n ${a.columns.toSeq} vs ${b.columns.toSeq}")
+              val ra = a.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+              val rb = b.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+              assert(ra == rb, s"results diverge on $t for: $v")
+            case (Failure(_), Failure(_)) => // all refuse the mutation: fine
+            case (a, b) =>
+              fail(s"asymmetric run outcomes on $t for: $v\n $t=$a\n twin=$b")
+          }
+          pairs += 1
         }
-        pairs += 1
       }
     }
-    assert(pairs >= 120, s"executed corpus too small: $pairs")
+    assert(pairs >= 200, s"executed corpus too small: $pairs")
   }
 
   test("DML on the registered view routes to a graft command or refuses loudly (>300 statements)") {
@@ -282,10 +291,7 @@ class SqlParserFuzzSpec extends SparkSpec {
   }
 
   test("travel and metadata rewrites leave a catalog-qualified name alone, even when it is registered") {
-    val root = setupRoot
-    spark.conf.set("spark.sql.catalog.fzcat", classOf[GraftSpjCatalog].getName)
-    spark.conf.set("spark.sql.catalog.fzcat.root", root)
-    val lake = new Lakehouse(spark, root)
+    val lake = new Lakehouse(spark, setupRoot)
     val snap0 = lake.snapshots("fz").head._1
     // one case per rewrite pattern: `fz` IS registered, so matching
     // the last part of the dotted name would rewrite the statement
