@@ -16,10 +16,11 @@ import graft.functions.{ArrayDotLong, ArraySortedIntersectCount, Md5Lower64, Shi
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // SQL DML (MERGE INTO / DELETE FROM) over registered lakehouse
-    // views — the role Iceberg's extensions play for the reference
-    // (gold_reporting.py:70); everything else delegates to Spark's
-    // parser untouched.
+    // SQL DML, column DDL and the lakehouse-only statements over
+    // registered lakehouse views — the role Iceberg's extensions play
+    // for the reference (gold_reporting.py:70). DML and column DDL are
+    // mapped from Spark's parsed plan; everything else delegates to
+    // Spark's parser.
     ext.injectParser((_, delegate) => new graft.sources.GraftSqlParser(delegate))
     ext.injectFunction((
       new FunctionIdentifier("md5lower64"),

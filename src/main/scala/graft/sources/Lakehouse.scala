@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 import java.nio.charset.StandardCharsets
 
@@ -28,17 +28,17 @@ import java.nio.charset.StandardCharsets
   */
 /** One `WHEN MATCHED` MERGE clause: optional row-local condition,
   * DELETE vs UPDATE, and for UPDATE either `SET *` (None) or explicit
-  * `col = expr-SQL` assignments ([[Lakehouse.sqlMergeClauses]]). */
-case class MergeMatched(cond: Option[String], isDelete: Boolean,
-    assignments: Option[Seq[(String, String)]] = None)
+  * `col = expr` assignments ([[Lakehouse.sqlMergeClauses]]). */
+case class MergeMatched(cond: Option[Column], isDelete: Boolean,
+    assignments: Option[Seq[(String, Column)]] = None)
 
 /** The `WHEN NOT MATCHED` MERGE clause: optional row-local condition
   * and either `INSERT *` (None) or an explicit
-  * `INSERT (cols) VALUES (expr-SQLs)` — expressions reference the
-  * source alias; unlisted target columns insert NULL
+  * `INSERT (cols) VALUES (exprs)` — expressions reference the source
+  * alias; unlisted target columns insert NULL
   * ([[Lakehouse.sqlMergeClauses]]). */
-case class MergeInsert(cond: Option[String],
-    columns: Option[(Seq[String], Seq[String])] = None)
+case class MergeInsert(cond: Option[Column],
+    columns: Option[(Seq[String], Seq[Column])] = None)
 
 class Lakehouse(private[sources] val spark: SparkSession, private[sources] val root: String) {
 
@@ -606,16 +606,9 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       .getOrElse(throw new IllegalArgumentException(s"no such table/branch: $table@$branch"))
     val entries = snapshots(table).find(_._1 == snap).get._2
     val conf = spark.sparkContext.hadoopConfiguration
-    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory && (!st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.contains("="))) walk(st.getPath)
-        else if (st.isFile && st.getPath.getName.endsWith(".parquet")) Seq(st)
-        else Seq.empty
-      }
     val statuses = entries.flatMap { e =>
       val dataDir = e.takeWhile(_ != '/')
-      walk(new Path(tableDir(table), e)).map(st => (dataDir, st))
+      dataFiles(new Path(tableDir(table), e)).map(st => (dataDir, st))
     }.distinctBy(_._2.getPath.toString) // a leaf under several entries counts once
     val perFile = Lakehouse.parallelMeta(statuses) { case (dataDir, st) =>
       val full = st.getPath.toString
@@ -1292,23 +1285,13 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import scala.jdk.CollectionConverters._
     val dataDir = new Path(tableDir(table), dir)
-    def parquetFiles(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap {
-        case s if s.isFile && s.getPath.getName.endsWith(".parquet") => Seq(s.getPath)
-        // Spark's discovery rule: `_`-prefixed names are hidden UNLESS
-        // they're partition dirs (contain `=`) — hidden-partitioning
-        // leaves (`_p_days_ts=…`) must be walked
-        case s if s.isDirectory && (!s.getPath.getName.startsWith("_") ||
-          s.getPath.getName.contains("=")) => parquetFiles(s.getPath)
-        case _ => Seq.empty
-      }
     // Record the writer's schema next to the data: readers re-open the
     // dir with this EXPLICIT schema, so partition values keep their
     // declared types (Spark's path-value type inference would read a
     // StringType partition holding "9" back as an int — silently
     // changing the table's schema and its comparison semantics).
     writeFile(new Path(dataDir, "_schema.json"), writerSchema.json)
-    val files = parquetFiles(dataDir)
+    val files = dataFiles(dataDir).map(_.getPath)
     if (files.isEmpty) return // zero-row write (e.g. a delete emptied every partition)
     def esc(s: String) = s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"; case c => c.toString
@@ -1714,7 +1697,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     import WriteSumsFusion.{AllNull, NullV, Sep}
     try {
       val dataDir = new Path(tableDir(table), dir)
-      val files = dirParquetFiles(dataDir)
+      val files = dataFiles(dataDir).map(_.getPath)
       if (files.isEmpty) return true // zero-row write: the scan pass records nothing either
       val row = scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(30, java.util.concurrent.TimeUnit.SECONDS))
@@ -1773,13 +1756,15 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     } catch { case scala.util.control.NonFatal(_) => false }
   }
 
-  /** All parquet data files under one data dir (hidden `_` entries
-    * skipped unless they are `k=v` partition dirs). */
-  private def dirParquetFiles(dataDir: Path): Seq[Path] =
-    fs.listStatus(dataDir).toSeq.flatMap {
-      case s if s.isFile && s.getPath.getName.endsWith(".parquet") => Seq(s.getPath)
+  /** The parquet data files under `p`, by Spark's discovery rule:
+    * `_`-prefixed names are hidden UNLESS they are partition dirs
+    * (contain `=`) — hidden-partitioning leaves (`_p_days_ts=…`) must
+    * be walked. */
+  private def dataFiles(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(p).toSeq.flatMap {
+      case s if s.isFile && s.getPath.getName.endsWith(".parquet") => Seq(s)
       case s if s.isDirectory && (!s.getPath.getName.startsWith("_") ||
-        s.getPath.getName.contains("=")) => dirParquetFiles(s.getPath)
+        s.getPath.getName.contains("=")) => dataFiles(s.getPath)
       case _ => Seq.empty
     }
 
@@ -1797,14 +1782,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       .flatMap(f => sumScale(f.dataType).map(s => (f.name, s)))
     if (cols.isEmpty) return
     val dataDir = new Path(tableDir(table), dir)
-    def parquetFiles(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap {
-        case s if s.isFile && s.getPath.getName.endsWith(".parquet") => Seq(s.getPath)
-        case s if s.isDirectory && (!s.getPath.getName.startsWith("_") ||
-          s.getPath.getName.contains("=")) => parquetFiles(s.getPath)
-        case _ => Seq.empty
-      }
-    val files = parquetFiles(dataDir)
+    val files = dataFiles(dataDir).map(_.getPath)
     if (files.isEmpty) return
     val reader = dirSchema(table, dir) match {
       case Some(st) => spark.read.schema(st)
@@ -2027,16 +2005,9 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     if (stats.isEmpty) return Nil
     val dirPath = new Path(tableDir(table), dataDir)
     if (!fs.exists(dirPath)) return Nil
-    def walkFiles(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap {
-        case s if s.isFile && s.getPath.getName.endsWith(".parquet") => Seq(s.getPath)
-        case s if s.isDirectory && (!s.getPath.getName.startsWith("_") ||
-          s.getPath.getName.contains("=")) => walkFiles(s.getPath)
-        case _ => Seq.empty
-      }
     val marker = "/" + dataDir + "/"
-    val allFiles = walkFiles(dirPath).map { p =>
-      val f = p.toString; f.substring(f.indexOf(marker) + 1)
+    val allFiles = dataFiles(dirPath).map { st =>
+      val f = st.getPath.toString; f.substring(f.indexOf(marker) + 1)
     }.toSet
     if (allFiles.isEmpty) return Nil
     val b64 = java.util.Base64.getUrlEncoder.withoutPadding
@@ -2290,19 +2261,10 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     val byFileCol = stats.groupBy(s => (s._1, s._2))
     val bloomsByFileCol = readBlooms(table, dataDir).groupBy(b => (b._1, b._2))
     val nativeBloomCols = bloomDeclared(table)
-    def walkFiles(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap {
-        case s if s.isFile && s.getPath.getName.endsWith(".parquet") => Seq(s.getPath)
-        // `_`-prefixed dirs are hidden unless they're partition dirs
-        // (`=`), matching Spark's discovery and [[writeStats]]'s walk
-        case s if s.isDirectory && (!s.getPath.getName.startsWith("_") ||
-          s.getPath.getName.contains("=")) => walkFiles(s.getPath)
-        case _ => Seq.empty
-      }
     val entryPath = new Path(tableDir(table), entry)
     if (!fs.exists(entryPath)) return Seq.empty
-    walkFiles(entryPath).map { p =>
-      val full = p.toString
+    dataFiles(entryPath).map { st =>
+      val full = st.getPath.toString
       val marker = "/" + dataDir + "/"
       full.substring(full.indexOf(marker) + 1)
     }.filter { rel =>
@@ -3324,23 +3286,6 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
         }
       }
     }
-
-  /** [[updateWhereMor]] over SQL-text SET/WHERE clauses, re-registering
-    * the view afterwards — the programmatic MoR twin of [[sqlUpdate]]
-    * (same clause parsing, same subquery refusal). */
-  def sqlUpdateMor(table: String, setClause: String, whereClause: String): Long = {
-    import org.apache.spark.sql.functions.expr
-    val assignments = splitTopLevel(setClause).map {
-      case Assignment(c, rhs) => c -> expr(rhs)
-      case other => throw new IllegalArgumentException(
-        s"UPDATE SET expects `col = expr`; got: $other")
-    }
-    require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
-    val layout = LakehouseRegistry.lookup(spark, table).map(_._2).getOrElse(Nil)
-    val snap = updateWhereMor(assignments, expr(whereClause), table, layout, sessionBranch)
-    registerView(table, layout)
-    snap
-  }
 
   /** MERGE … WHEN MATCHED THEN DELETE: target rows whose key matches a
     * source row are removed (the Iceberg v2 merge-delete shape). The
@@ -4618,43 +4563,27 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     * parser accepts beyond the canonical upsert-all:
     * {{{
     * MERGE INTO t USING s ON t.k = s.k
-    *   WHEN MATCHED [AND <cond>] THEN UPDATE SET * | DELETE   (repeatable)
-    *   [WHEN NOT MATCHED [AND <cond>] THEN INSERT *]
+    *   WHEN MATCHED [AND <cond>] THEN UPDATE SET * | UPDATE SET col = expr, … | DELETE
+    *   [WHEN NOT MATCHED [AND <cond>] THEN INSERT * | INSERT (cols) VALUES (exprs)]
+    *   WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN UPDATE SET col = expr, … | DELETE
     * }}}
     * SQL MERGE semantics: per matched target row, the FIRST clause
     * whose condition is true applies (no clause → the row survives);
     * unmatched source rows insert iff the insert clause's condition
-    * holds. Conditions are row-local predicates qualified by the
-    * table/source view names and evaluate against the PRE-merge state.
-    * Commits ONE snapshot through the same copy-on-write cores as
-    * [[upsert]] — partition-scoped when `partitionBy` is given.
-    *
-    * `matched` is (condition, isDelete) in clause order;
-    * `notMatchedInsert` is None = no insert clause, Some(cond) = the
-    * clause with its optional condition. */
-  def sqlMergeConditional(table: String, sourceView: String, keyCols: Seq[String],
-      matched: Seq[(Option[String], Boolean)],
-      notMatchedInsert: Option[Option[String]],
-      partitionBy: Seq[String] = Nil, branch: String = sessionBranch): Long =
-    sqlMergeClauses(table, sourceView, keyCols,
-      matched.map { case (c, d) => MergeMatched(c, d) },
-      notMatchedInsert.map(MergeInsert(_)), partitionBy, branch)
-
-  /** Conditional MERGE with the FULL update grammar: each matched
-    * clause is `UPDATE SET *` (all columns from the source row),
-    * `UPDATE SET col = expr, …` (explicit assignments — expressions
-    * may reference both the table and source aliases; unassigned
-    * columns keep the TARGET row's values, SQL UPDATE semantics), or
-    * `DELETE`. First-applicable-clause semantics against the
-    * pre-merge state; assigned values cast back to the declared
-    * column types (no silent schema drift); one snapshot commit
-    * through the shared copy-on-write cores. */
+    * holds. Conditions and expressions are row-local, qualified by the
+    * table/source view names, and evaluate against the PRE-merge
+    * state. `UPDATE SET *` takes all columns from the source row;
+    * explicit assignments leave unassigned columns at the TARGET row's
+    * values (SQL UPDATE semantics); assigned values cast back to the
+    * declared column types (no silent schema drift). Commits ONE
+    * snapshot through the same copy-on-write cores as [[upsert]] —
+    * partition-scoped when `partitionBy` is given. */
   def sqlMergeClauses(table: String, sourceView: String, keyCols: Seq[String],
       matched: Seq[MergeMatched],
       notMatchedInsert: Option[MergeInsert],
       partitionBy: Seq[String] = Nil, branch: String = sessionBranch,
       notMatchedBySource: Seq[MergeMatched] = Nil): Long = {
-    import org.apache.spark.sql.functions.{col, expr, lit, when}
+    import org.apache.spark.sql.functions.{col, lit, when}
     notMatchedBySource.foreach(m => require(m.isDelete || m.assignments.isDefined,
       "WHEN NOT MATCHED BY SOURCE has no source row: UPDATE SET * is " +
         "meaningless there — use explicit assignments or DELETE"))
@@ -4668,7 +4597,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       // index of the FIRST applicable clause per matched row (1-based;
       // 0 = no clause applies, the row survives untouched)
       val action = matched.zipWithIndex.foldRight(lit(0)) { case ((m, i), rest) =>
-        when(m.cond.map(expr).getOrElse(lit(true)), lit(i + 1)).otherwise(rest)
+        when(m.cond.getOrElse(lit(true)), lit(i + 1)).otherwise(rest)
       }
       val pairs = t.join(s, joinCond).withColumn("__act", action)
       val tCols = target.columns.toSeq
@@ -4687,7 +4616,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
             // in one projection; unassigned columns keep target values
             subset.select(tCols.map { c =>
               byName.get(c)
-                .map(e => expr(e).cast(target.schema(c).dataType).as(c))
+                .map(e => e.cast(target.schema(c).dataType).as(c))
                 .getOrElse(col(s"$table.$c").as(c))
             }: _*)
         }
@@ -4697,7 +4626,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       val insRows = notMatchedInsert match {
         case Some(ins) =>
           val unmatched = s.join(t, joinCond, "left_anti")
-          val filtered = ins.cond.map(c => unmatched.where(expr(c))).getOrElse(unmatched)
+          val filtered = ins.cond.map(unmatched.where).getOrElse(unmatched)
           ins.columns match {
             case None => filtered.select(sCols.map(col): _*)
             case Some((cols, vals)) =>
@@ -4712,7 +4641,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
               // all cast to the declared types
               filtered.select(tCols.map { c =>
                 byName.get(c)
-                  .map(e => expr(e).cast(target.schema(c).dataType).as(c))
+                  .map(e => e.cast(target.schema(c).dataType).as(c))
                   .getOrElse(lit(null).cast(target.schema(c).dataType).as(c))
               }: _*)
           }
@@ -4731,7 +4660,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
         val unmatchedT = t.join(s, joinCond, "left_anti")
         val actionB = notMatchedBySource.zipWithIndex.foldRight(lit(0)) {
           case ((m, i), rest) =>
-            when(m.cond.map(expr).getOrElse(lit(true)), lit(i + 1)).otherwise(rest)
+            when(m.cond.getOrElse(lit(true)), lit(i + 1)).otherwise(rest)
         }
         val tagged = unmatchedT.withColumn("__act", actionB)
         val ups = notMatchedBySource.zipWithIndex.collect { case (m, i) if !m.isDelete =>
@@ -4742,7 +4671,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
               unknown.mkString(", "))
           tagged.where(col("__act") === (i + 1)).select(tCols.map { c =>
             byName.get(c)
-              .map(e => expr(e).cast(target.schema(c).dataType).as(c))
+              .map(e => e.cast(target.schema(c).dataType).as(c))
               .getOrElse(col(c))
           }: _*)
         }.reduceOption(_.unionByName(_)).getOrElse(target.where(lit(false)))
@@ -5209,69 +5138,8 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     * their explicit branch parameters. */
   def sessionBranch: String = spark.conf.get("spark.graft.branch", "main")
 
-  /** SQL `DELETE FROM table WHERE …` — parses the clause and routes
-    * through [[deleteWhere]]'s stat-pruned copy-on-write on the
-    * session branch. */
-  def sqlDelete(table: String, whereClause: String,
-      partitionBy: Seq[String] = Nil): Long = {
-    val snap = deleteWhere(org.apache.spark.sql.functions.expr(whereClause), table,
-      partitionBy, sessionBranch)
-    registerView(table, partitionBy)
-    snap
-  }
-
-  /** SQL DELETE routed through the write-optimized MERGE-ON-READ path
-    * ([[deleteWhereMor]]): positional tombstones, zero data rewritten.
-    * Re-registers the view with the layout already in the registry —
-    * a MoR delete touches no data dirs, so the partition layout the
-    * next copy-on-write DML must preserve is unchanged. */
-  def sqlDeleteMor(table: String, whereClause: String): Long = {
-    val snap = deleteWhereMor(org.apache.spark.sql.functions.expr(whereClause), table,
-      sessionBranch)
-    val layout = LakehouseRegistry.lookup(spark, table).map(_._2).getOrElse(Nil)
-    registerView(table, layout)
-    snap
-  }
-
-  /** Split `s` on commas at paren/quote depth 0 — SET-clause
-    * assignments whose right-hand sides contain function calls or
-    * string literals with commas stay intact. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var depth = 0; var inStr = false; var start = 0
-    for (i <- s.indices) s(i) match {
-      case '\'' => inStr = !inStr
-      case '(' if !inStr => depth += 1
-      case ')' if !inStr => depth -= 1
-      case ',' if !inStr && depth == 0 => parts += s.substring(start, i); start = i + 1
-      case _ =>
-    }
-    parts += s.substring(start)
-    parts.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  private val Assignment = """(?s)\s*`?([A-Za-z_]\w*)`?\s*=\s*(.+)""".r
-
-  /** SQL `UPDATE table SET col = expr[, …] [WHERE pred]` — parses the
-    * assignments and routes through [[updateWhere]]'s stat-pruned
-    * copy-on-write rewrite. No WHERE updates every row. */
-  def sqlUpdate(table: String, setClause: String, whereClause: Option[String],
-      partitionBy: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.expr
-    val assignments = splitTopLevel(setClause).map {
-      case Assignment(c, rhs) => c -> expr(rhs)
-      case other => throw new IllegalArgumentException(
-        s"UPDATE SET expects `col = expr`; got: $other")
-    }
-    require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
-    val snap = updateWhere(assignments, expr(whereClause.getOrElse("true")), table,
-      partitionBy, sessionBranch)
-    registerView(table, partitionBy)
-    snap
-  }
-
-  /** SQL `INSERT INTO table [(col, …)] <query>` — appends the query's
-    * rows as a new delta dir (O(rows inserted), nothing rewritten).
+  /** SQL `INSERT INTO table [(col, …)] <query>` — appends `df`, the
+    * query's rows, as a new delta dir (O(rows inserted), nothing rewritten).
     * Without a column list, columns map POSITIONALLY onto the table
     * schema (the SQL rule); with one, the query's columns map
     * positionally onto the LISTED target columns and every unlisted
@@ -5280,10 +5148,9 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     * table's declared type or the insert FAILS (Iceberg's rule) —
     * appending a differently-typed delta dir would silently
     * union-widen the whole column on every subsequent read. */
-  def sqlInsert(table: String, query: String, partitionBy: Seq[String] = Nil,
+  def sqlInsert(table: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       cols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val df = spark.sql(query)
     // the DECLARED schema, not read().schema — the read projection's
     // aliases drop StructField metadata, and the CURRENT_DEFAULT keys
     // (ADD COLUMN ... DEFAULT) must reach the unlisted-column fill
@@ -5896,7 +5763,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     * LIMIT/TopN caps, zero data-dir opens at plan time — else the
     * ordinary per-dir union of [[readSnapshot]]. Both return the same
     * rows; the relation is read-only, so DML on the name keeps routing
-    * through the lakehouse intercepts. */
+    * through the lakehouse commands. */
   private[graft] def sqlRelation(table: String, branch: String,
       atSnapshot: Option[Long] = None): DataFrame = {
     val snap = atSnapshot.orElse(currentSnapshot(table, branch)).getOrElse(
@@ -6030,13 +5897,6 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
                 strips.exists(_.equalsIgnoreCase(f.name)))),
             evoLines.filter(l => l._1 > seqD && l._1 <= snap).flatMap(_._3))
         }.toMap
-      def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-        fs.listStatus(p).toSeq.flatMap {
-          case s if s.isFile && s.getPath.getName.endsWith(".parquet") => Seq(s)
-          case s if s.isDirectory && (!s.getPath.getName.startsWith("_") ||
-            s.getPath.getName.contains("=")) => walk(s.getPath)
-          case _ => Seq.empty
-        }
       val fileEntries = entries.filterNot(e => markerDirs.contains(e.takeWhile(_ != '/')))
       val files = fileEntries.groupBy(_.takeWhile(_ != '/')).toSeq
         .flatMap { case (dataDir, es) =>
@@ -6052,7 +5912,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
           val strips = stripsOf(dataDir)
           roots.flatMap { e =>
             val p = new Path(tableDir(table), e)
-            if (fs.exists(p)) walk(p) else Seq.empty
+            if (fs.exists(p)) dataFiles(p) else Seq.empty
           }.map { st =>
             val full = st.getPath.toString
             val rel = full.substring(full.indexOf(dirMarker) + 1)
@@ -6145,13 +6005,6 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       require(at >= 0, s"data file outside the partition layout: $full")
       full.substring(at + marker.length).takeWhile(_ != '/')
     }
-    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap {
-        case s if s.isFile && s.getPath.getName.endsWith(".parquet") => Seq(s)
-        case s if s.isDirectory && (!s.getPath.getName.startsWith("_") ||
-          s.getPath.getName.contains("=")) => walk(s.getPath)
-        case _ => Seq.empty
-      }
     // marker dirs hold no data files — walking them would trip the
     // outside-the-layout guard on their schema-bearing empty parquet
     val fileEntries = entries.filterNot(e => markerDirs.contains(e.takeWhile(_ != '/')))
@@ -6170,7 +6023,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       val dirMarker = "/" + dataDir + "/"
       roots.flatMap { e =>
         val p = new Path(tableDir(table), e)
-        (if (fs.exists(p)) walk(p) else Seq.empty).map(e -> _)
+        (if (fs.exists(p)) dataFiles(p) else Seq.empty).map(e -> _)
       }.map { case (e, st) =>
         val full = st.getPath.toString
         val outerVal = outerMarker.map(segmentAfter(full, _))

@@ -1,23 +1,28 @@
 package graft.sources
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Column, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.{AsOfTimestamp, RelationTimeTravel, TimeTravelSpec,
-  UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, Literal}
+  UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo,
+  Expression, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, AlterColumnSpec, AlterColumns,
+  Assignment, DeleteAction, DeleteFromTable, DropColumns, DropTable, InsertAction,
+  InsertIntoStatement, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, RenameColumn,
+  SubqueryAlias, UnresolvedWith, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.execution.command.{ExplainCommand, LeafRunnableCommand}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
+import org.apache.spark.sql.graftshim.RelationShim
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** SQL DML over lakehouse tables — the surface the reference gets from
   * Iceberg's SparkSessionExtensions (reference: gold_reporting.py:70
   * `IcebergSparkSessionExtensions` is what makes `MERGE INTO` /
   * `DELETE FROM` real SQL there). [[graft.GraftExtensions]] injects
-  * [[GraftSqlParser]], which intercepts the two DML statements for
-  * REGISTERED lakehouse views and routes them through the snapshot-
-  * committing [[Lakehouse.sqlMerge]]/[[Lakehouse.sqlDelete]] paths;
-  * every other statement delegates untouched to Spark's parser.
+  * [[GraftSqlParser]], which maps the DML and column DDL Spark's
+  * grammar parses on REGISTERED lakehouse views onto the snapshot-
+  * committing lakehouse commands below; every other statement
+  * delegates to Spark's parser.
   */
 object LakehouseRegistry {
   // keyed by (session UUID, lowercase view name): two sessions over two
@@ -105,16 +110,17 @@ private object WriteMode {
   * Iceberg supports); returns the snapshot id. Copy-on-write by
   * default; `spark.graft.delete-mode=merge-on-read` routes through
   * the positional-tombstone path ([[WriteMode]]). */
-case class LakehouseDeleteCommand(view: String, whereClause: Option[String])
+case class LakehouseDeleteCommand(view: String, condition: Column)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(AttributeReference("snapshot_id", LongType)())
   override def run(spark: SparkSession): Seq[Row] = {
     val (lake, partitionBy) = LakehouseRegistry.lookup(spark, view)
       .getOrElse(throw new IllegalStateException(s"$view is not a registered lakehouse view"))
-    Seq(Row(
-      if (WriteMode.isMor(spark, "delete"))
-        lake.sqlDeleteMor(view, whereClause.getOrElse("true"))
-      else lake.sqlDelete(view, whereClause.getOrElse("true"), partitionBy)))
+    val snap =
+      if (WriteMode.isMor(spark, "delete")) lake.deleteWhereMor(condition, view, lake.sessionBranch)
+      else lake.deleteWhere(condition, view, partitionBy, lake.sessionBranch)
+    lake.registerView(view, partitionBy)
+    Seq(Row(snap))
   }
 }
 
@@ -122,16 +128,18 @@ case class LakehouseDeleteCommand(view: String, whereClause: Option[String])
   * stat-pruned row-level update committed as a new snapshot.
   * Copy-on-write by default; `spark.graft.update-mode=merge-on-read`
   * routes through the tombstone+delta path ([[WriteMode]]). */
-case class LakehouseUpdateCommand(view: String, setClause: String,
-    whereClause: Option[String]) extends LeafRunnableCommand {
+case class LakehouseUpdateCommand(view: String, assignments: Seq[(String, Column)],
+    condition: Column) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(AttributeReference("snapshot_id", LongType)())
   override def run(spark: SparkSession): Seq[Row] = {
     val (lake, partitionBy) = LakehouseRegistry.lookup(spark, view)
       .getOrElse(throw new IllegalStateException(s"$view is not a registered lakehouse view"))
-    Seq(Row(
+    val snap =
       if (WriteMode.isMor(spark, "update"))
-        lake.sqlUpdateMor(view, setClause, whereClause.getOrElse("true"))
-      else lake.sqlUpdate(view, setClause, whereClause, partitionBy)))
+        lake.updateWhereMor(assignments, condition, view, partitionBy, lake.sessionBranch)
+      else lake.updateWhere(assignments, condition, view, partitionBy, lake.sessionBranch)
+    lake.registerView(view, partitionBy)
+    Seq(Row(snap))
   }
 }
 
@@ -140,14 +148,15 @@ case class LakehouseUpdateCommand(view: String, setClause: String,
   * the query maps positionally onto the whole schema; with one, onto
   * the listed columns, and unlisted columns insert NULL (must be
   * nullable) — the partial-insert shape an evolved schema makes
-  * routine (new columns exist, old INSERT statements keep working). */
-case class LakehouseInsertCommand(view: String, query: String,
+  * routine (new columns exist, old INSERT statements keep working).
+  * `query` is the parsed query plan, analyzed when the command runs. */
+case class LakehouseInsertCommand(view: String, query: LogicalPlan,
     cols: Seq[String] = Nil) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(AttributeReference("snapshot_id", LongType)())
   override def run(spark: SparkSession): Seq[Row] = {
     val (lake, partitionBy) = LakehouseRegistry.lookup(spark, view)
       .getOrElse(throw new IllegalStateException(s"$view is not a registered lakehouse view"))
-    Seq(Row(lake.sqlInsert(view, query, partitionBy, cols)))
+    Seq(Row(lake.sqlInsert(view, RelationShim.ofRows(spark, query), partitionBy, cols)))
   }
 }
 
@@ -207,101 +216,18 @@ case class LakehouseAlterSpecCommand(view: String, spec: Seq[String])
 /** `ALTER TABLE t ADD COLUMNS (c1 type1, c2 type2, …)` — SQL SCHEMA
   * EVOLUTION (the Iceberg DDL the reference's catalog tables get for
   * free): an additive, metadata-only snapshot commit. Existing dirs
-  * are untouched and read NULL for the new columns; subsequent
-  * INSERT/MERGE take the evolved schema; time travel below the
-  * commit shows the old schema. Narrowing is refused by construction
-  * (no type-change surface) and added columns must be nullable. */
-case class LakehouseAddColumnsCommand(view: String, colsDdl: String)
+  * are untouched and read NULL (or the column's DEFAULT) for the new
+  * columns; subsequent INSERT/MERGE take the evolved schema; time
+  * travel below the commit shows the old schema. Narrowing is refused
+  * by construction (no type-change surface) and added columns must be
+  * nullable. A dotted name (`shipping_address.country`) is a NESTED
+  * add; a `DEFAULT` rides the field metadata ([[ColumnDefaults]]). */
+case class LakehouseAddColumnsCommand(view: String, cols: StructType)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(AttributeReference("snapshot_id", LongType)())
   override def run(spark: SparkSession): Seq[Row] = {
     val (lake, partitionBy) = LakehouseRegistry.lookup(spark, view)
       .getOrElse(throw new IllegalStateException(s"$view is not a registered lakehouse view"))
-    // DOTTED names (`shipping_address.country string`) are NESTED adds
-    // — `StructType.fromDDL` can't parse them, so split the list at
-    // depth-0 commas and build the fields by hand; plain lists keep
-    // the stock DDL parser (comments, char types, …)
-    // QUOTE-AWARE scanning (r16): both the depth-0 comma split and the
-    // DEFAULT keyword search skip SQL string literals — single- OR
-    // double-quoted (Spark's default dialect treats both as strings),
-    // doubled same-char = escape — otherwise `DEFAULT 'a,b'` splits
-    // mid-literal and a COMMENT containing " default " false-positives
-    // into the hand parser.
-    def splitTop(ddl: String): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var depth = 0; var start = 0; var i = 0; var q: Char = 0
-      while (i < ddl.length) {
-        val c = ddl.charAt(i)
-        if (q != 0) {
-          if (c == q) {
-            if (i + 1 < ddl.length && ddl.charAt(i + 1) == q) i += 1
-            else q = 0
-          }
-        } else c match {
-          case '\'' | '"' => q = c
-          case '(' | '<' => depth += 1
-          case ')' | '>' => depth -= 1
-          case ',' if depth == 0 => out += ddl.substring(start, i); start = i + 1
-          case _ => ()
-        }
-        i += 1
-      }
-      out += ddl.substring(start)
-      out.toSeq.map(_.trim).filter(_.nonEmpty)
-    }
-    // index of a depth-0, unquoted, whitespace-bounded DEFAULT keyword
-    // (-1 = none) — the split point between the type DDL and the
-    // default's SQL text
-    def defaultIdx(item: String): Int = {
-      var depth = 0; var i = 0; var q: Char = 0
-      while (i < item.length) {
-        val c = item.charAt(i)
-        if (q != 0) {
-          if (c == q) {
-            if (i + 1 < item.length && item.charAt(i + 1) == q) i += 1
-            else q = 0
-          }
-        } else c match {
-          case '\'' | '"' => q = c
-          case '(' | '<' => depth += 1
-          case ')' | '>' => depth -= 1
-          case _ if depth == 0 && i > 0 && item.charAt(i - 1).isWhitespace &&
-            i + 7 <= item.length && item.regionMatches(true, i, "DEFAULT", 0, 7) &&
-            (i + 7 == item.length || item.charAt(i + 7).isWhitespace) =>
-            return i
-          case _ => ()
-        }
-        i += 1
-      }
-      -1
-    }
-    val cols =
-      if (!splitTop(colsDdl).exists(i =>
-        i.takeWhile(!_.isWhitespace).contains('.') || defaultIdx(i) >= 0))
-        try StructType.fromDDL(colsDdl) catch {
-          case e: Exception => throw new IllegalArgumentException(
-            s"cannot parse ADD COLUMNS list: ($colsDdl): ${e.getMessage}")
-        }
-      else StructType(splitTop(colsDdl).map { item =>
-        val name = item.takeWhile(!_.isWhitespace).stripPrefix("`").stripSuffix("`")
-        val rest = item.drop(item.takeWhile(!_.isWhitespace).length).trim
-        // `name type [DEFAULT <literal>]` — the default's SQL text
-        // rides the field metadata (graft.sources.ColumnDefaults)
-        val (typeDdl, defaultSql) = defaultIdx(rest) match {
-          case -1 => (rest, None)
-          case k =>
-            val d = rest.substring(k + 7).trim
-            if (d.isEmpty) throw new IllegalArgumentException(
-              s"ADD COLUMNS: DEFAULT for $name names no literal: ($item)")
-            (rest.substring(0, k).trim, Some(d))
-        }
-        val dt = try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-          .parseDataType(typeDdl)
-        catch { case e: Exception => throw new IllegalArgumentException(
-          s"cannot parse ADD COLUMNS type for $name: $typeDdl: ${e.getMessage}") }
-        val f = org.apache.spark.sql.types.StructField(name, dt)
-        defaultSql.fold(f)(graft.sources.ColumnDefaults.withDefault(f, _))
-      })
     val snap = lake.addColumns(view, cols, lake.sessionBranch)
     lake.registerView(view, partitionBy) // temp view takes the evolved schema
     Seq(Row(snap))
@@ -376,16 +302,13 @@ case class LakehouseFastForwardCommand(view: String, from: String,
 /** `ALTER TABLE t ALTER COLUMN c TYPE <wider>` — widening type
   * promotion (int→bigint, float→double, decimal precision) as a
   * metadata-only snapshot; everything else refused. */
-case class LakehouseAlterTypeCommand(view: String, col: String, typeDdl: String)
+case class LakehouseAlterTypeCommand(view: String, col: String, dataType: DataType)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(AttributeReference("snapshot_id", LongType)())
   override def run(spark: SparkSession): Seq[Row] = {
     val (lake, partitionBy) = LakehouseRegistry.lookup(spark, view)
       .getOrElse(throw new IllegalStateException(s"$view is not a registered lakehouse view"))
-    val dt = try org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType(typeDdl)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"cannot parse ALTER COLUMN type: $typeDdl: ${e.getMessage}") }
-    val snap = lake.alterColumnType(view, col, dt, lake.sessionBranch)
+    val snap = lake.alterColumnType(view, col, dataType, lake.sessionBranch)
     lake.registerView(view, partitionBy)
     Seq(Row(snap))
   }
@@ -654,77 +577,26 @@ case class LakehouseDropCommand(view: String, purge: Boolean)
   }
 }
 
-/** Thin statement front-end: recognizes the two lakehouse DML shapes
-  * against REGISTERED views, delegates everything else (including DML
-  * on unregistered tables — Spark's own analyzer then reports its
-  * usual v2-table error) to the session's default parser. */
+/** Statement front end for REGISTERED lakehouse views. DML (`DELETE`,
+  * `UPDATE`, `INSERT INTO`, `MERGE INTO`), column DDL (`ADD`/`RENAME`/
+  * `DROP COLUMN`, `ALTER COLUMN … TYPE`) and `DROP TABLE` are parsed
+  * by Spark's grammar and mapped from the parsed plan onto the
+  * lakehouse commands ([[lakeCommand]]). Statements Spark's grammar
+  * lacks — partition-spec and branch DDL, `FAST FORWARD`, `VACUUM`,
+  * materialized views, CTAS into the default lake, persisted views,
+  * `SHOW`/`DESCRIBE` and `CALL` — still match regexes first.
+  * Everything else, including DML on unregistered tables (Spark's
+  * analyzer then reports its usual error), is Spark's own plan. */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
-  // names may be backquoted; DELETE's WHERE is optional (no WHERE =
-  // full-table delete, the form Iceberg supports)
-  private val DeleteRe =
-    """(?is)\s*DELETE\s+FROM\s+`?([A-Za-z_]\w*)`?(?:\s+WHERE\s+(.+?))?\s*;?\s*""".r
-  private val MergeRe =
-    ("""(?is)\s*MERGE\s+INTO\s+`?([A-Za-z_]\w*)`?\s+USING\s+`?([A-Za-z_]\w*)`?""" +
-      // ON must stop at the FIRST WHEN: a lazy (.+?) would swallow a
-      // leading conditional clause whenever a later canonical
-      // `SET * … INSERT *` pair exists, mis-routing the statement
-      """\s+ON\s+((?:(?!\bWHEN\b).)+?)""" +
-      """\s+WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*""" +
-      """\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*;?\s*""").r
-  // general MERGE head: everything from the first WHEN on is the
-  // clause list, tokenized by splitClauses
-  private val MergeHeadRe =
-    ("""(?is)\s*MERGE\s+INTO\s+`?([A-Za-z_]\w*)`?\s+USING\s+`?([A-Za-z_]\w*)`?""" +
-      """\s+ON\s+(.+?)\s+(WHEN\s+.+?)\s*;?\s*""").r
-  private val MatchedUpdateRe =
-    """(?is)\s*WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+UPDATE\s+SET\s+\*\s*""".r
-  private val MatchedUpdateSetRe =
-    """(?is)\s*WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+UPDATE\s+SET\s+(.+?)\s*""".r
-  private val MatchedDeleteRe =
-    """(?is)\s*WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+DELETE\s*""".r
-  // BY TARGET is the standard's optional alias for the insert side
-  private val NotMatchedInsertRe =
-    """(?is)\s*WHEN\s+NOT\s+MATCHED\s+(?:BY\s+TARGET\s+)?(?:AND\s+(.+?)\s+)?THEN\s+INSERT\s+\*\s*""".r
-  private val NotMatchedInsertValsRe =
-    ("""(?is)\s*WHEN\s+NOT\s+MATCHED\s+(?:BY\s+TARGET\s+)?(?:AND\s+(.+?)\s+)?THEN\s+INSERT\s*""" +
-      """\(([^)]*)\)\s*VALUES\s*\((.+)\)\s*""").r
-  // the full-sync side: target rows with no source match
-  private val BySourceDeleteRe =
-    """(?is)\s*WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s+(?:AND\s+(.+?)\s+)?THEN\s+DELETE\s*""".r
-  private val BySourceUpdateSetRe =
-    ("""(?is)\s*WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s+(?:AND\s+(.+?)\s+)?THEN\s+""" +
-      """UPDATE\s+SET\s+(.+?)\s*""").r
-  private val SubqueryRe = """(?is).*\(\s*SELECT\b.*""".r
-  private val UpdateRe =
-    """(?is)\s*UPDATE\s+`?([A-Za-z_]\w*)`?\s+SET\s+(.+?)(?:\s+WHERE\s+(.+?))?\s*;?\s*""".r
-  private val InsertRe =
-    """(?is)\s*INSERT\s+INTO\s+`?([A-Za-z_]\w*)`?\s+((?:SELECT|VALUES|FROM|WITH|TABLE)\b.+?)\s*;?\s*""".r
-  // explicit column list: the paren group sits between the table name
-  // and the query keyword ([^()]* keeps it from swallowing VALUES parens)
-  private val InsertColsRe =
-    ("""(?is)\s*INSERT\s+INTO\s+`?([A-Za-z_]\w*)`?\s*\(([^()]*)\)""" +
-      """\s*((?:SELECT|VALUES|FROM|WITH|TABLE)\b.+?)\s*;?\s*""").r
   private val AlterSpecRe =
     """(?is)\s*ALTER\s+TABLE\s+`?([A-Za-z_]\w*)`?\s+SET\s+PARTITION\s+SPEC\s*\((.*)\)\s*;?\s*""".r
-  private val AlterAddColsRe =
-    """(?is)\s*ALTER\s+TABLE\s+`?([A-Za-z_]\w*)`?\s+ADD\s+COLUMNS?\s*\((.*)\)\s*;?\s*""".r
-  private val AlterRenameColRe =
-    ("""(?is)\s*ALTER\s+TABLE\s+`?([A-Za-z_]\w*)`?\s+RENAME\s+COLUMN\s+""" +
-      """`?([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)`?\s+TO\s+`?([A-Za-z_]\w*)`?\s*;?\s*""").r
-  private val AlterDropColRe =
-    """(?is)\s*ALTER\s+TABLE\s+`?([A-Za-z_]\w*)`?\s+DROP\s+COLUMNS?\s+`?([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)`?\s*;?\s*""".r
-  private val AlterTypeRe =
-    ("""(?is)\s*ALTER\s+TABLE\s+`?([A-Za-z_]\w*)`?\s+ALTER\s+COLUMN\s+""" +
-      """`?([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)`?\s+TYPE\s+(\w+(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)\s*;?\s*""").r
   private val BranchDdlRe =
     ("""(?is)\s*ALTER\s+TABLE\s+`?([A-Za-z_]\w*)`?\s+(CREATE|DROP)\s+BRANCH\s+""" +
       """`?([A-Za-z_]\w*)`?(?:\s+AS\s+OF\s+VERSION\s+(\d+))?\s*;?\s*""").r
   private val FastForwardRe =
     ("""(?is)\s*ALTER\s+TABLE\s+`?([A-Za-z_]\w*)`?\s+FAST\s+FORWARD\s+(?:BRANCH\s+)?""" +
       """`?([A-Za-z_]\w*)`?(?:\s+INTO\s+`?([A-Za-z_]\w*)`?)?\s*;?\s*""").r
-  private val DropRe =
-    """(?is)\s*DROP\s+TABLE\s+`?([A-Za-z_]\w*)`?(\s+PURGE)?\s*;?\s*""".r
   private val VacuumRe =
     """(?is)\s*VACUUM\s+`?([A-Za-z_]\w*)`?(?:\s+RETAIN\s+(\d+)\s+SNAPSHOTS)?\s*;?\s*""".r
   private val CtasRe =
@@ -792,9 +664,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       LakehouseRegistry.lakes(s).exists(_._1.equalsIgnoreCase(name)))
   private val NamedArgRe = """(?s)\s*([A-Za-z_]\w*)\s*=>\s*(.+?)\s*""".r
 
-  /** `CALL` argument list → (name, raw value) pairs; positional args
-    * carry None. Split is quote-aware ([[splitSpecs]]), so a string
-    * literal holding a comma survives. */
   /** The restricted mview select shape shared by the plain and join
     * CREATE MATERIALIZED VIEW forms: bare group columns (must match
     * GROUP BY) + aliased mergeable aggregates. */
@@ -819,6 +688,9 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     (groups, aggs)
   }
 
+  /** `CALL` argument list → (name, raw value) pairs; positional args
+    * carry None. Split is quote-aware ([[splitSpecs]]), so a string
+    * literal holding a comma survives. */
   private def callArgs(argstr: String): Seq[(Option[String], String)] =
     splitSpecs(argstr).map {
       case NamedArgRe(k, v) => (Some(k), v)
@@ -839,11 +711,11 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       }
   }
 
-  /** Split a partition-spec / expression list on TOP-LEVEL commas
+  /** Split a partition-spec / argument list on TOP-LEVEL commas
     * only — transform entries carry commas inside their parens
-    * (`bucket(8,k)`), and the MERGE SET / INSERT VALUES reuse carries
-    * string literals whose commas, parens and doubled-quote escapes
-    * (`SET v = concat(x, ',')`) must not split or unbalance. */
+    * (`bucket(8,k)`), and CALL arguments carry string literals whose
+    * commas, parens and doubled-quote escapes (`where => 'x = ','`)
+    * must not split or unbalance. */
   private def splitSpecs(s: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var depth = 0
@@ -873,32 +745,15 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     out.toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Equality key columns of the ON clause when every conjunct is
-    * `t.k = s.k` with matching column names; None = not the canonical
-    * shape, let Spark's parser handle (and reject) it. */
-  private def keyColsOf(on: String, target: String, source: String): Option[Seq[String]] = {
-    val conjuncts = on.split("(?i)\\s+AND\\s+").toSeq
-    val keys = conjuncts.map {
-      case OnConjunct(q1, c1, q2, c2)
-        if c1.equalsIgnoreCase(c2) &&
-          Seq(q1, q2).forall(q => q == null ||
-            q.equalsIgnoreCase(target) || q.equalsIgnoreCase(source)) => Some(c1)
-      case _ => None
-    }
-    if (keys.forall(_.isDefined)) Some(keys.flatten) else None
-  }
-
   override def parsePlan(sqlText: String): LogicalPlan =
     parseStripped(GraftSqlParser.stripComments(sqlText), sqlText)
 
   /** The intercept regexes match the COMMENT-STRIPPED text (`stripped`;
     * quote-aware, so comment markers inside a string literal survive) —
-    * a trailing `-- note` must not make a registered-view DELETE fall
-    * through to the delegate, and a comment inside a WHERE tail must
-    * not be captured into a predicate that then fails `expr()` at run.
-    * Captured fragments therefore come comment-free; the DELEGATE
-    * always receives the ORIGINAL statement, so delegation stays
-    * byte-exact (fuzz-pinned by SqlParserFuzzSpec). */
+    * a trailing `-- note` must not make a registered-view VACUUM fall
+    * through to the delegate. Captured fragments therefore come
+    * comment-free; the DELEGATE always receives the ORIGINAL statement,
+    * so delegation stays byte-exact (fuzz-pinned by SqlParserFuzzSpec). */
   private def parseStripped(stripped: String, sqlText: String): LogicalPlan = stripped match {
     case CallRe(proc, argstr) if callTable(argstr).exists(LakehouseRegistry.isRegistered) =>
       LakehouseCallCommand(proc.toLowerCase, callArgs(argstr))
@@ -923,40 +778,8 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
           SparkSession.getActiveSession
             .exists(s => LakehouseSqlUtil.viewLake(s, table).isDefined) =>
       LakehouseDescribeCommand(table)
-    case DeleteRe(table, where) if LakehouseRegistry.isRegistered(table) =>
-      if (where != null && SubqueryRe.matches(where))
-        throw new UnsupportedOperationException(
-          s"lakehouse DELETE supports row-local WHERE predicates, not subqueries; " +
-            s"got: WHERE $where")
-      LakehouseDeleteCommand(table, Option(where))
-    case UpdateRe(table, set, where) if LakehouseRegistry.isRegistered(table) =>
-      if (where != null && SubqueryRe.matches(where))
-        throw new UnsupportedOperationException(
-          s"lakehouse UPDATE supports row-local WHERE predicates, not subqueries; " +
-            s"got: WHERE $where")
-      if (SubqueryRe.matches(set))
-        throw new UnsupportedOperationException(
-          s"lakehouse UPDATE supports row-local SET expressions, not subqueries; " +
-            s"got: SET $set")
-      LakehouseUpdateCommand(table, set, Option(where))
-    case InsertRe(table, query) if LakehouseRegistry.isRegistered(table) =>
-      LakehouseInsertCommand(table, query)
-    case InsertColsRe(table, cols, query) if LakehouseRegistry.isRegistered(table) =>
-      val colNames = cols.split(",").toSeq
-        .map(_.trim.stripPrefix("`").stripSuffix("`")).filter(_.nonEmpty)
-      if (colNames.isEmpty) throw new UnsupportedOperationException(
-        s"INSERT INTO $table () — empty column list")
-      LakehouseInsertCommand(table, query, colNames)
     case AlterSpecRe(table, specs) if LakehouseRegistry.isRegistered(table) =>
       LakehouseAlterSpecCommand(table, splitSpecs(specs))
-    case AlterAddColsRe(table, cols) if LakehouseRegistry.isRegistered(table) =>
-      LakehouseAddColumnsCommand(table, cols)
-    case AlterRenameColRe(table, from, to) if LakehouseRegistry.isRegistered(table) =>
-      LakehouseRenameColumnCommand(table, from, to)
-    case AlterDropColRe(table, colName) if LakehouseRegistry.isRegistered(table) =>
-      LakehouseDropColumnCommand(table, colName)
-    case AlterTypeRe(table, colName, typeDdl) if LakehouseRegistry.isRegistered(table) =>
-      LakehouseAlterTypeCommand(table, colName, typeDdl)
     case BranchDdlRe(table, verb, branch, asOf) if LakehouseRegistry.isRegistered(table) =>
       val create = verb.equalsIgnoreCase("CREATE")
       if (!create && asOf != null) throw new UnsupportedOperationException(
@@ -964,8 +787,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       LakehouseBranchCommand(table, create, branch, Option(asOf).map(_.toLong))
     case FastForwardRe(table, from, into) if LakehouseRegistry.isRegistered(table) =>
       LakehouseFastForwardCommand(table, from, Option(into))
-    case DropRe(table, purge) if LakehouseRegistry.isRegistered(table) =>
-      LakehouseDropCommand(table, purge != null)
     case CreateMviewJoinRe(view, selectList, src, joinChain, where, groupBy)
         if LakehouseRegistry.isRegistered(src) &&
           MviewJoinHopRe.findAllMatchIn(joinChain).forall(m =>
@@ -1002,81 +823,129 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
         Option(sortBy).map(splitSpecs).getOrElse(Nil), query)
     case VacuumRe(table, retain) if LakehouseRegistry.isRegistered(table) =>
       LakehouseVacuumCommand(table, Option(retain).map(_.toInt).getOrElse(1))
-    case MergeRe(table, source, on) if LakehouseRegistry.isRegistered(table) =>
-      keyColsOf(on, table, source) match {
-        case Some(keys) if keys.nonEmpty => LakehouseMergeCommand(table, source, keys)
-        case _ => throw new UnsupportedOperationException(
-          s"lakehouse MERGE supports ON <equi-key conjunction> " +
-            s"WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *; got: ON $on")
+    case _ => lakeCommand(delegate.parsePlan(sqlText))
+  }
+
+  /** Spark's parsed plan, with DML and column DDL on a single-part
+    * registered name mapped onto the lakehouse commands. Predicates,
+    * SET right-hand sides and INSERT values stay Catalyst expressions
+    * (as `Column`s), so a string literal holding `WHERE`, `WHEN` or
+    * `(SELECT` is only ever a literal. Shapes the commands do not take
+    * — an aliased target, `INSERT OVERWRITE`, `BY NAME`, a partition
+    * spec, a MERGE source other than a bare view name — stay Spark's
+    * plan. A DML target is never pinned ([[pinReferencedViews]]): the
+    * commands read the table through the lakehouse, and the
+    * copy-on-write rewrite's files depend on that read. */
+  private def lakeCommand(plan: LogicalPlan): LogicalPlan = plan match {
+    case DeleteFromTable(Registered(t), cond) =>
+      LakehouseDeleteCommand(t, rowLocal(cond,
+        s"lakehouse DELETE supports row-local WHERE predicates, not subqueries; got: WHERE ${cond.sql}"))
+    case UpdateTable(Registered(t), asgs, cond) =>
+      val where = cond.getOrElse(Literal.TrueLiteral)
+      LakehouseUpdateCommand(t,
+        setList("UPDATE SET", asgs, e => s"lakehouse UPDATE supports row-local SET expressions, " +
+          s"not subqueries; got: SET ${e.sql}"),
+        rowLocal(where,
+          s"lakehouse UPDATE supports row-local WHERE predicates, not subqueries; got: WHERE ${where.sql}"))
+    case InsertIntoStatement(Registered(t), part, cols, query, false, false, false) if part.isEmpty =>
+      LakehouseInsertCommand(t, resolveLakeRefs(query, pin = true), cols)
+    case MergeIntoTable(Registered(t), UnresolvedRelation(Seq(src), _, _), on,
+        matched, notMatched, bySource, false) =>
+      mergeCommand(t, src, on, matched, notMatched, bySource)
+    case AddColumns(Registered(t), cols) =>
+      LakehouseAddColumnsCommand(t, StructType(cols.map { c =>
+        if (c.position.isDefined) throw new UnsupportedOperationException(
+          s"lakehouse ADD COLUMNS appends; FIRST/AFTER positions are not supported: ${c.colName}")
+        val f = StructField(c.name.mkString("."), c.dataType, c.nullable)
+        val commented = c.comment.fold(f)(f.withComment)
+        c.default.fold(commented)(d => ColumnDefaults.withDefault(commented, d.originalSQL))
+      }))
+    case RenameColumn(Registered(t), col, to) =>
+      LakehouseRenameColumnCommand(t, col.name.mkString("."), to)
+    case DropColumns(Registered(t), Seq(col), false) =>
+      LakehouseDropColumnCommand(t, col.name.mkString("."))
+    case AlterColumns(Registered(t), Seq(AlterColumnSpec(col, Some(dt), None, None, None, None, false))) =>
+      LakehouseAlterTypeCommand(t, col.name.mkString("."), dt)
+    case DropTable(Registered(t), false, purge) => LakehouseDropCommand(t, purge)
+    case other => resolveLakeRefs(other, pin = true)
+  }
+
+  /** A write target naming a registered view by one unqualified part. */
+  private object Registered {
+    def unapply(p: LogicalPlan): Option[String] = (p match {
+      case UnresolvedRelation(Seq(n), _, _) => Some(n)
+      case UnresolvedTable(Seq(n), _, _) => Some(n)
+      case UnresolvedIdentifier(Seq(n), _) => Some(n)
+      case _ => None
+    }).filter(LakehouseRegistry.isRegistered)
+  }
+
+  /** `e` as a `Column` for the row-local lakehouse paths, which read
+    * one table (and the MERGE source) row by row: a subquery is
+    * refused with `refusal`, never planned. */
+  private def rowLocal(e: Expression, refusal: => String): Column =
+    if (e.exists(_.isInstanceOf[SubqueryExpression])) throw new UnsupportedOperationException(refusal)
+    else GraftShim.column(e)
+
+  /** `SET col = expr, …` (or `INSERT (cols) VALUES (…)`) as
+    * (column, value) pairs; a qualified or nested key is refused. */
+  private def setList(stmt: String, asgs: Seq[Assignment],
+      refusal: Expression => String): Seq[(String, Column)] = asgs.map {
+    case Assignment(UnresolvedAttribute(Seq(c)), v) => c -> rowLocal(v, refusal(v))
+    case a => throw new UnsupportedOperationException(
+      s"unsupported $stmt assignment: ${a.sql} (expected col = expr)")
+  }
+
+  /** `MERGE INTO t USING s ON <t.k = s.k AND …> WHEN …`: the canonical
+    * `UPDATE SET * / INSERT *` pair goes to [[Lakehouse.sqlMerge]],
+    * every other clause list to [[Lakehouse.sqlMergeClauses]]. The ON
+    * clause must be a conjunction of equalities between same-named
+    * columns, each side bare or qualified by `t` or `s`. */
+  private def mergeCommand(t: String, src: String, on: Expression, matched: Seq[MergeAction],
+      notMatched: Seq[MergeAction], bySource: Seq[MergeAction]): LogicalPlan = {
+    object KeyCol {
+      def unapply(e: Expression): Option[String] = e match {
+        case UnresolvedAttribute(Seq(c)) => Some(c)
+        case UnresolvedAttribute(Seq(q, c)) if q.equalsIgnoreCase(t) || q.equalsIgnoreCase(src) => Some(c)
+        case _ => None
       }
-    case MergeHeadRe(table, source, on, clauses) if LakehouseRegistry.isRegistered(table) =>
-      val keys = keyColsOf(on, table, source) match {
-        case Some(ks) if ks.nonEmpty => ks
-        case _ => throw new UnsupportedOperationException(
-          s"lakehouse MERGE supports ON <equi-key conjunction>; got: ON $on")
-      }
-      // tokenize at each WHEN keyword; every token must parse as a clause
-      val tokens = clauses.split("(?i)(?=\\bWHEN\\b)").toSeq.filter(_.trim.nonEmpty)
-      var matched = Seq.empty[MergeMatched]
-      var insert: Option[MergeInsert] = None
-      var bySource = Seq.empty[MergeMatched]
-      // explicit assignments: SET a = expr, b = expr (top-level comma
-      // split — function calls and string literals keep their commas)
-      val AsgRe = """(?s)\s*`?([A-Za-z_]\w*)`?\s*=\s*(.+?)\s*""".r
-      def parseAssignments(sets: String): Seq[(String, String)] =
-        splitSpecs(sets).map {
-          case AsgRe(c, e) => (c, e)
-          case bad => throw new UnsupportedOperationException(
-            s"unsupported MERGE SET assignment: $bad (expected col = expr)")
+    }
+    def keysOf(e: Expression): Option[Seq[String]] = e match {
+      case And(l, r) => for (a <- keysOf(l); b <- keysOf(r)) yield a ++ b
+      case EqualTo(KeyCol(a), KeyCol(b)) if a.equalsIgnoreCase(b) => Some(Seq(a))
+      case _ => None
+    }
+    val keys = keysOf(on).getOrElse(throw new UnsupportedOperationException(
+      s"lakehouse MERGE supports ON <equi-key conjunction>; got: ON ${on.sql}"))
+    def cond(a: MergeAction): Option[Column] = a.condition.map(c => rowLocal(c,
+      s"lakehouse MERGE clause conditions are row-local predicates, not subqueries; got: AND ${c.sql}"))
+    def sets(asgs: Seq[Assignment]) = setList("MERGE SET", asgs,
+      e => s"lakehouse MERGE SET expressions are row-local, not subqueries; got: SET ${e.sql}")
+    def unsupported(a: MergeAction) = throw new UnsupportedOperationException(
+      s"unsupported MERGE clause: $a")
+    def rowAction(a: MergeAction): MergeMatched = a match {
+      case _: UpdateStarAction => MergeMatched(cond(a), isDelete = false)
+      case _: DeleteAction => MergeMatched(cond(a), isDelete = true)
+      case u: UpdateAction => MergeMatched(cond(a), isDelete = false, Some(sets(u.assignments)))
+      case _ => unsupported(a)
+    }
+    (matched, notMatched, bySource) match {
+      case (Seq(UpdateStarAction(None)), Seq(InsertStarAction(None)), Seq()) =>
+        LakehouseMergeCommand(t, src, keys)
+      case _ =>
+        if (notMatched.length > 1) throw new UnsupportedOperationException(
+          "lakehouse MERGE takes at most one WHEN NOT MATCHED clause")
+        val insert = notMatched.headOption.map {
+          case a: InsertStarAction => MergeInsert(cond(a))
+          case a: InsertAction =>
+            val vals = setList("MERGE INSERT", a.assignments, e => "lakehouse MERGE INSERT " +
+              s"values are row-local, not subqueries; got: VALUES (${e.sql})")
+            MergeInsert(cond(a), Some((vals.map(_._1), vals.map(_._2))))
+          case a => unsupported(a)
         }
-      tokens.foreach { tok =>
-        def checked(cond: String): Option[String] = Option(cond).map { c =>
-          if (SubqueryRe.matches(c)) throw new UnsupportedOperationException(
-            s"lakehouse MERGE clause conditions are row-local predicates, " +
-              s"not subqueries; got: AND $c")
-          c
-        }
-        tok match {
-          // BY SOURCE first (most specific), then the insert side, then
-          // matched — the patterns are disjoint, the order documents it
-          case BySourceDeleteRe(cond) =>
-            bySource :+= MergeMatched(checked(cond), isDelete = true)
-          case BySourceUpdateSetRe(cond, sets) =>
-            if (SubqueryRe.matches(sets)) throw new UnsupportedOperationException(
-              s"lakehouse MERGE SET expressions are row-local, not subqueries; got: SET $sets")
-            bySource :+= MergeMatched(checked(cond), isDelete = false,
-              Some(parseAssignments(sets)))
-          case NotMatchedInsertRe(cond) =>
-            if (insert.isDefined) throw new UnsupportedOperationException(
-              "lakehouse MERGE takes at most one WHEN NOT MATCHED clause")
-            insert = Some(MergeInsert(checked(cond)))
-          // explicit-column insert: INSERT (a, b) VALUES (e1, e2)
-          case NotMatchedInsertValsRe(cond, cols, vals) =>
-            if (insert.isDefined) throw new UnsupportedOperationException(
-              "lakehouse MERGE takes at most one WHEN NOT MATCHED clause")
-            if (SubqueryRe.matches(vals)) throw new UnsupportedOperationException(
-              s"lakehouse MERGE INSERT values are row-local, not subqueries; got: VALUES ($vals)")
-            val colNames = cols.split(",").toSeq
-              .map(_.trim.stripPrefix("`").stripSuffix("`")).filter(_.nonEmpty)
-            insert = Some(MergeInsert(checked(cond), Some((colNames, splitSpecs(vals)))))
-          case MatchedUpdateRe(cond) => matched :+= MergeMatched(checked(cond), false)
-          case MatchedDeleteRe(cond) => matched :+= MergeMatched(checked(cond), true)
-          // explicit assignments: SET a = expr, b = expr (top-level
-          // comma split — function calls keep their inner commas)
-          case MatchedUpdateSetRe(cond, sets) =>
-            if (SubqueryRe.matches(sets)) throw new UnsupportedOperationException(
-              s"lakehouse MERGE SET expressions are row-local, not subqueries; got: SET $sets")
-            matched :+= MergeMatched(checked(cond), isDelete = false,
-              Some(parseAssignments(sets)))
-          case other => throw new UnsupportedOperationException(
-            s"unsupported MERGE clause: $other (supported: WHEN MATCHED [AND cond] THEN " +
-              "UPDATE SET * | UPDATE SET col = expr, ... | DELETE, " +
-              "WHEN NOT MATCHED [BY TARGET] [AND cond] THEN INSERT …, " +
-              "WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET col = expr, ... | DELETE)")
-        }
-      }
-      LakehouseMergeCondCommand(table, source, keys, matched, insert, bySource)
-    case _ => resolveLakeRefs(delegate.parsePlan(sqlText), pin = true)
+        LakehouseMergeCondCommand(t, src, keys, matched.map(rowAction), insert,
+          bySource.map(rowAction))
+    }
   }
 
   // Iceberg-style metadata tables, addressable as `<registered view>.<m>`
@@ -1174,7 +1043,7 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     * snapshot, when the layout is servable — no manifest walk or
     * data-dir open per statement — and the ordinary per-dir union of
     * `Lakehouse.read` otherwise. Either way the view is read-only:
-    * DML on the name keeps routing through the lakehouse intercepts.
+    * DML on the name keeps routing through the lakehouse commands.
     *
     * `refs` come from [[resolveLakeRefs]]'s walk of the parsed plan,
     * not a word-regex over the SQL text: a registered name inside a

@@ -176,20 +176,20 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
 
   test("conditional MERGE equals a straightforward first-applicable-clause model") {
     // randomized target/source tables + clause lists, executed through
-    // sqlMergeConditional (cond strings -> expr -> the copy-on-write
-    // cores) and compared against a direct Scala evaluation of SQL
-    // MERGE semantics. The conds cover target-only, source-only, and
+    // sqlMergeClauses (cond Columns -> the copy-on-write cores) and
+    // compared against a direct Scala evaluation of SQL MERGE
+    // semantics. The conds cover target-only, source-only, and
     // cross-side predicates.
     type R = (Long, Long, String)
-    // cond pool: index -> (SQL text over mtp/mtp_src, Scala semantics)
-    val conds: Seq[(Option[String], (R, R) => Boolean)] = Seq(
+    // cond pool: index -> (Column over mtp/mtp_src, Scala semantics)
+    val conds: Seq[(Option[org.apache.spark.sql.Column], (R, R) => Boolean)] = Seq(
       (None, (_, _) => true),
-      (Some("mtp.x > 5"), (t, _) => t._2 > 5),
-      (Some("mtp_src.x % 2 = 0"), (_, s) => s._2 % 2 == 0),
-      (Some("mtp.x < mtp_src.x"), (t, s) => t._2 < s._2))
-    val insertConds: Seq[(Option[String], R => Boolean)] = Seq(
+      (Some(col("mtp.x") > 5), (t, _) => t._2 > 5),
+      (Some(col("mtp_src.x") % 2 === 0), (_, s) => s._2 % 2 == 0),
+      (Some(col("mtp.x") < col("mtp_src.x")), (t, s) => t._2 < s._2))
+    val insertConds: Seq[(Option[org.apache.spark.sql.Column], R => Boolean)] = Seq(
       (None, _ => true),
-      (Some("mtp_src.x > 3"), s => s._2 > 3))
+      (Some(col("mtp_src.x") > 3), s => s._2 > 3))
     val cases = sample(for {
       tn <- Gen.choose(0, 8)
       tKeys <- Gen.pick(tn, 0L until 12L)
@@ -214,9 +214,9 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
       val sTyped: Seq[(Long, Long, String)] = sRows.toSeq
       lake.createOrReplace(tTyped.toDF("k", "x", "v"), "mtp")
       sTyped.toDF("k", "x", "v").createOrReplaceTempView("mtp_src")
-      lake.sqlMergeConditional("mtp", "mtp_src", Seq("k"),
-        matched.map { case (c, d) => (conds(c)._1, d) },
-        ins.map(insertConds(_)._1))
+      lake.sqlMergeClauses("mtp", "mtp_src", Seq("k"),
+        matched.map { case (c, d) => graft.sources.MergeMatched(conds(c)._1, d) },
+        ins.map(i => graft.sources.MergeInsert(insertConds(i)._1)))
       val got = lake.read("mtp").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
       // the model: per matched target row, first clause whose cond

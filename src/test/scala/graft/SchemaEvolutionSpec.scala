@@ -143,8 +143,8 @@ class SchemaEvolutionSpec extends SparkSpec {
         |FROM sq GROUP BY tag ORDER BY tag""".stripMargin).collect()
     assert(got.map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
       === Seq(("new", 1L, 30.0, 9.5), ("old", 2L, 30.0, 0.0)))
-    // unparsable column list is refused loudly
-    intercept[IllegalArgumentException](
+    // unparsable column list is refused loudly, by Spark's grammar
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException](
       spark.sql("ALTER TABLE sq ADD COLUMNS (bad nosuchtype)"))
   }
 
