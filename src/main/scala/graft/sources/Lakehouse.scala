@@ -1429,9 +1429,9 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
         // (a chunk without a usable count poisons that column — the
         // line OMITS it, so a reader can never mistake unknown for
         // zero). Partition-path columns are constant per file and
-        // non-null whenever a value segment is present. [[metaAgg]]'s
-        // count(*) / all-rows-match classification rides on these
-        // without opening any data file.
+        // non-null whenever a value segment is present. The DSv2
+        // aggregate pushdown ([[graft.sources.spj.SpjMetaAgg]]) answers
+        // count(*) / count(col) from these without opening any data file.
         val nRows = footer.getBlocks.asScala.map(_.getRowCount).sum
         val nullAcc = scala.collection.mutable.Map.empty[String, Long]
         val nullUnknown = scala.collection.mutable.Set.empty[String]
@@ -1645,7 +1645,8 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
 
   /** Declare columns whose per-file SUMS are recorded at write time
     * (`_sums.jsonl` beside `_stats.jsonl`), making `sum(col)` a
-    * metadata-only readout through [[metaAgg]] / [[metaGroupAgg]] —
+    * metadata-only readout through the DSv2 aggregate pushdown
+    * ([[graft.sources.spj.SpjMetaAgg]]) —
     * parquet footers carry min/max but not sums, so this is the one
     * stat that costs an extra aggregation pass over the FRESH data
     * (only the new files, computed while they're hot; never a
@@ -1954,9 +1955,8 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
 
   /** Parsed `_rowcounts.jsonl` of one data dir: relative file path →
     * (row count, per-column NULL counts). Written by [[writeStats]];
-    * absent for dirs written before the ledger existed — callers fall
-    * back to footer reads ([[footerRowCounts]]) for row counts and
-    * treat null counts as unknown (never as zero). */
+    * absent for dirs written before the ledger existed — callers
+    * treat a missing row or null count as unknown (never as zero). */
   private def readRowCounts(table: String, dataDir: String): Map[String, (Long, Map[String, Long])] = {
     val RowRe = """\{"file":"(.*)","rows":(\d+),"nulls":\{(.*)\}\}""".r
     val PairRe = """"((?:[^"\\]|\\.)*)":(-?\d+)""".r
@@ -1966,28 +1966,6 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
           .map(p => unesc(p.group(1)) -> p.group(2).toLong).filter(_._2 >= 0).toMap
         unesc(g.group(1)) -> ((g.group(2).toLong, nulls))
       }
-    }.toMap
-  }
-
-  /** Row counts straight from the parquet footers (bounded parallel
-    * metadata I/O, no data pages read) — the fallback for dirs that
-    * predate the `_rowcounts.jsonl` ledger. Unreadable files are
-    * OMITTED from the result (the caller must scan them). */
-  private def footerRowCounts(table: String, rels: Seq[String]): Map[String, Long] = {
-    if (rels.isEmpty) return Map.empty
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    // rel paths carry the `data-N/` prefix (the stats-ledger keying
-    // convention) — resolve against the TABLE dir
-    val base = tableDir(table)
-    Lakehouse.parallelMeta(rels) { rel =>
-      scala.util.Try {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(base, rel), conf))
-        try Seq(rel -> r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-        finally r.close()
-      }.getOrElse(Seq.empty)
     }.toMap
   }
 
@@ -2097,19 +2075,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     * looked through only when numeric→numeric (monotone, so min/max
     * comparison stays sound). */
   private def skippableConjuncts(pred: org.apache.spark.sql.Column,
-      relation: DataFrame): Seq[(String, String, Any)] =
-    skippableConjunctsCovered(pred, relation)._1
-
-  /** [[skippableConjuncts]] plus a COVERAGE verdict: `true` iff the
-    * analyzed predicate is exactly an AND of the recognized conjuncts
-    * — no residual leaf (OR trees, IS NULL, UDFs, subqueries) was
-    * dropped. Pruning only needs the conjuncts (conservative either
-    * way); ALL-ROWS-MATCH classification in [[metaAgg]] additionally
-    * needs the verdict, because "every row satisfies these conjuncts"
-    * implies "every row satisfies the predicate" only when the
-    * conjuncts ARE the predicate. */
-  private def skippableConjunctsCovered(pred: org.apache.spark.sql.Column,
-      relation: DataFrame): (Seq[(String, String, Any)], Boolean) = {
+      relation: DataFrame): Seq[(String, String, Any)] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.{DateType, NumericType, StringType, TimestampType}
     def name(e: Expression): Option[String] = e match {
@@ -2143,12 +2109,9 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       case c: Cast if c.dataType.isInstanceOf[NumericType] => litVal(c.child)
       case _ => None
     }
-    def walk(e: Expression): (Seq[(String, String, Any)], Boolean) = e match {
-      case And(l, r) =>
-        val (ls, lc) = walk(l); val (rs, rc) = walk(r); (ls ++ rs, lc && rc)
-      case other =>
-        val found = leaf(other)
-        (found, found.nonEmpty)
+    def walk(e: Expression): Seq[(String, String, Any)] = e match {
+      case And(l, r) => walk(l) ++ walk(r)
+      case other => leaf(other)
     }
     def leaf(e: Expression): Seq[(String, String, Any)] = e match {
       case EqualTo(a, b) =>
@@ -2179,7 +2142,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     }
     relation.where(pred).queryExecution.analyzed
       .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
-      .map(walk).getOrElse((Seq.empty, false))
+      .map(walk).getOrElse(Seq.empty)
   }
 
   /** Can a file whose recorded [fLo, fHi] for the conjunct's column
@@ -2210,31 +2173,6 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     // literal coerced against a numeric column) must degrade to
     // "may match" — no pruning — never crash the read
   }.getOrElse(true)
-
-  /** Does EVERY non-null value in a file's recorded [fLo, fHi]
-    * satisfy `op v`? The dual of [[rangeMayMatch]], with the opposite
-    * failure direction: anything unparseable degrades to `false`
-    * ("can't prove all-match" — the caller scans the file), never to
-    * a wrong metadata-only answer. */
-  private def rangeAllMatch(t: String, fLo: String, fHi: String,
-      op: String, v: Any): Boolean = scala.util.Try {
-    val vc: Any = v match {
-      case Transforms.DateDays(d) => d
-      case Transforms.TsMicros(m) => m
-      case other => other
-    }
-    def cmp(bound: String): Int =
-      if (t == "string") bound.compareTo(vc.toString)
-      else BigDecimal(bound).compare(BigDecimal(vc.toString))
-    op match {
-      case "=" => cmp(fLo) == 0 && cmp(fHi) == 0
-      case ">" => cmp(fLo) > 0
-      case ">=" => cmp(fLo) >= 0
-      case "<" => cmp(fHi) < 0
-      case "<=" => cmp(fHi) <= 0
-      case _ => false
-    }
-  }.getOrElse(false)
 
   /** Files under a snapshot entry (whole dir or partition leaf) that
     * may contain rows matching every conjunct, as table-relative
@@ -2403,7 +2341,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     * filter is a broadcast LEFT SEMI join against the key set — a
     * per-row hash probe, identical surviving rows (equi-join and IN
     * drop NULL keys alike), with plan/render cost O(1) in the key
-    * count. Values are normalized to [[skippableConjunctsCovered]]'s
+    * count. Values are normalized to [[skippableConjuncts]]'s
     * litVal forms (dates/timestamps to their internal-scale wrappers)
     * so stats/bloom/transform pruning sees exactly what an IN-literal
     * would have produced. */
@@ -2460,573 +2398,6 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       st <- metaSchema(table, entries, snap)
     } yield spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
     rel.getOrElse(read(table, branch).where(lit(false)))
-  }
-
-  /** METADATA-ONLY AGGREGATES — the Iceberg aggregate-pushdown
-    * analog: answer `count(*)` / `min(col)` / `max(col)` from the
-    * manifest, `_stats.jsonl` and `_rowcounts.jsonl` ledgers instead
-    * of scanning data. At 100 TB this is the difference between a
-    * sub-second driver-side readout and a full-table scan — the
-    * table's row count is already recorded in its footers, and a
-    * time-range count touches only the handful of files whose stats
-    * straddle the range boundary.
-    *
-    * Exactness contract (this is a FAST path, never an approximate
-    * one):
-    *  - `count(*)` with no predicate sums ledger/footer row counts.
-    *  - A predicated count classifies each may-match file (after the
-    *    usual range/bloom/transform pruning) as ALL-ROWS-MATCH (its
-    *    recorded range lies entirely inside every conjunct, zero
-    *    recorded nulls on the tested columns, and the conjuncts fully
-    *    cover the predicate — [[skippableConjunctsCovered]]) or
-    *    BOUNDARY; all-match files contribute their recorded row count,
-    *    boundary files are scanned with the exact predicate. The scan
-    *    is proportional to the range BOUNDARY, not the table.
-    *  - `min`/`max` answer from the stats ledger only when EVERY
-    *    file of every dir records a usable bound for the column
-    *    (the [[dirStatsJson]] coverage rule at query time); ledger
-    *    bounds are exact (oversized/non-ASCII strings are never
-    *    recorded, which fails coverage rather than weakening it).
-    *
-    * Returns None when metadata cannot answer exactly — tombstoned
-    * snapshots (MoR deletes change counts), min/max under a
-    * predicate, coverage gaps, unmapped column types — and the caller
-    * falls back to the ordinary scan. Either way the ANSWER is
-    * identical; only the I/O differs. */
-  /** One data dir's file classification under a predicate: the
-    * may-match files (after range/bloom/transform pruning), the
-    * ALL-ROWS-MATCH subset (recorded range fully inside every
-    * conjunct, zero recorded nulls on tested columns, conjuncts
-    * covering the predicate), plus its row-count and stat ledgers.
-    * Shared by [[metaAgg]] and [[metaGroupAgg]]. */
-  private case class DirCls(dataDir: String, may: Seq[String], all: Set[String],
-      rcs: Map[String, (Long, Map[String, Long])],
-      stats: Map[(String, String), Seq[(String, String, String, String, String)]])
-
-  /** Metadata-only classification of a snapshot's files against a
-    * predicate — the shared front half of the metadata-aggregate
-    * paths. Returns the snapshot's READ schema (resolved from
-    * metadata when possible) and per-dir [[DirCls]] records; touches
-    * ledgers and manifests only, never data. */
-  private def classifyForMeta(table: String, snap: Long,
-      pred: Option[org.apache.spark.sql.Column], branch: String)
-      : (org.apache.spark.sql.types.StructType, Seq[DirCls]) = {
-    val entries = snapshots(table).find(_._1 == snap).get._2
-    // Schema WITHOUT opening any data dir: the declared (evolved)
-    // schema if one exists, else the per-dir `_schema.json` records
-    // merged by name — pure metadata, so the fully-covered path below
-    // touches zero data files. A disagreeing/unrecorded dir falls back
-    // to the ordinary relation (rare: pre-ledger tables only).
-    val schema = metaSchema(table, entries, snap).getOrElse(read(table, branch).schema)
-    // analysis-only relation: attribute names/types for conjunct
-    // extraction — never executed
-    val relation = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val sums = dirSummaries(table)
-    val byDataDir = entries.groupBy(_.takeWhile(_ != '/')).toSeq.sortBy(_._1)
-    val (conj, covered) = pred match {
-      case None => (Seq.empty[(String, String, Any)], true)
-      case Some(p) => skippableConjunctsCovered(p, relation)
-    }
-    val derived = Transforms.derivedConjuncts(conj, snapshotPhysLayouts(table, entries))
-    val cls = byDataDir.flatMap { case (dataDir, dirEntries) =>
-      val may = dirEntries.flatMap(matchingFiles(table, _, derived, sums)).distinct
-      if (may.isEmpty) None
-      else {
-        val rcs = readRowCounts(table, dataDir)
-        val stats = readStats(table, dataDir).groupBy(s => (s._1, s._2))
-        val all = may.filter { rel =>
-          covered && conj.forall { case (c, op, v) =>
-            // zero RECORDED nulls (unknown ≠ zero) and a range fully
-            // inside the conjunct — only then does every row match
-            rcs.get(rel).exists(_._2.get(c).contains(0L)) &&
-              stats.get((rel, c)).exists(ls => ls.size == 1 && {
-                val (_, _, t, lo, hi) = ls.head
-                if (op == "in") v.asInstanceOf[Seq[Any]]
-                  .exists(x => rangeAllMatch(t, lo, hi, "=", x))
-                else rangeAllMatch(t, lo, hi, op, v)
-              })
-          }
-        }.toSet
-        Some(DirCls(dataDir, may, all, rcs, stats))
-      }
-    }
-    (schema, cls)
-  }
-
-  def metaAgg(table: String, items: Seq[Lakehouse.MetaAggItem],
-      pred: Option[org.apache.spark.sql.Column],
-      branch: String = "main"): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{date_from_unix_date, lit, timestamp_micros}
-    import org.apache.spark.sql.types._
-    val snap = currentSnapshot(table, branch)
-      .getOrElse(throw new IllegalArgumentException(s"no such table/branch: $table@$branch"))
-    if (snapshotDeletes(table).getOrElse(snap, Nil).nonEmpty) return None
-    if (items.exists(i => !Set("count", "min", "max", "sum").contains(i.op))) return None
-    val (schema, cls) = classifyForMeta(table, snap, pred, branch)
-    // one filtered scan over an explicit file set — the exception
-    // path, proportional to the files metadata could not answer for
-    def scanOver(sets: Seq[(String, Seq[String])]): Option[DataFrame] =
-      if (sets.forall(_._2.isEmpty)) None
-      else Some {
-        val one = sets.filter(_._2.nonEmpty)
-          .map { case (d, fs) => openDirGroup(table, d, fs) }
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-        pred.fold(one)(one.where)
-      }
-    def canon(sets: Seq[(String, Seq[String])]): Seq[(String, Seq[String])] =
-      sets.filter(_._2.nonEmpty).map { case (d, fs) => (d, fs.sorted) }.sortBy(_._1)
-
-    def tagOf(dt: DataType): String = dt match {
-      case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType => "long"
-      case FloatType | DoubleType => "double"
-      case StringType => "string"
-      case _ => ""
-    }
-
-    val sumLedgers: Map[String, Map[String, Map[String, Option[java.math.BigDecimal]]]] =
-      if (items.exists(_.op == "sum"))
-        cls.map(d => d.dataDir -> readSumsLedger(table, d.dataDir)).toMap
-      else Map.empty
-
-    // ---- per-item planning: classify which files each item answers
-    // from metadata and which it must scan. NOTHING executes here —
-    // the scans below are shared across items, so a multi-item call
-    // pays ONE boundary scan, not one per item.
-    sealed trait ItemPlan
-    case class CountPlan(alias: String, metaRows: Long,
-      sets: Seq[(String, Seq[String])]) extends ItemPlan
-    case class SumPlan(alias: String, col: String,
-      metaSum: Option[java.math.BigDecimal], sets: Seq[(String, Seq[String])],
-      resultType: DataType) extends ItemPlan
-    case class BoundPlan(alias: String, col: String, wantMin: Boolean,
-      ledgerCol: Option[org.apache.spark.sql.Column],
-      sets: Seq[(String, Seq[String])], fieldType: DataType) extends ItemPlan
-
-    // count(*): all-match files contribute recorded/footer row counts,
-    // boundary files are counted by the exact-predicate scan
-    def countPlan(alias: String): Option[ItemPlan] = {
-      var metaRows = 0L
-      val sets = cls.map { d =>
-        val allFiles = d.may.filter(d.all.contains)
-        val fromFooter = footerRowCounts(table, allFiles.filterNot(d.rcs.contains))
-        val counted = allFiles.map(rel => rel -> d.rcs.get(rel).map(_._1).orElse(fromFooter.get(rel)))
-        metaRows += counted.flatMap(_._2).sum
-        (d.dataDir, d.may.filterNot(d.all.contains) ++ counted.collect { case (rel, None) => rel })
-      }
-      Some(CountPlan(alias, metaRows, sets))
-    }
-
-    // sum: exact only for integral/decimal columns (double addition is
-    // order-dependent — those reject so BOTH paths mean Spark's own
-    // scan order). All-match files with a recorded `_sums.jsonl` value
-    // contribute exactly; a recorded all-NULL file contributes nothing
-    // (SQL sum skips nulls) but still counts as metadata-answered.
-    def sumPlan(alias: String, c: String): Option[ItemPlan] = {
-      val field = schema.fields.find(_.name == c).getOrElse(return None)
-      val resultType: DataType = field.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => LongType
-        case d: DecimalType => DecimalType(math.min(38, d.precision + 10), d.scale)
-        case _ => return None
-      }
-      var acc = java.math.BigDecimal.ZERO
-      var any = false
-      val sets = cls.map { d =>
-        val ledger = sumLedgers.getOrElse(d.dataDir, Map.empty)
-        val needScan = d.may.filterNot { rel =>
-          d.all.contains(rel) && (ledger.get(rel).flatMap(_.get(c)) match {
-            case Some(Some(v)) => acc = acc.add(v); any = true; true
-            case Some(None) => true
-            case None => false
-          })
-        }
-        (d.dataDir, needScan)
-      }
-      Some(SumPlan(alias, c, if (any) Some(acc) else None, sets, resultType))
-    }
-
-    // min/max: ledger bounds answer for all-match files carrying a
-    // usable stat (nulls are irrelevant — SQL min/max ignores them,
-    // and so do the stats); every other may-match file is scanned
-    // with the exact predicate, and the two legs combine through
-    // Spark's own least/greatest (null-skipping, same as min/max).
-    // Unpredicated calls are the pred-None special case of the same
-    // machinery — a stat-less file now scans instead of failing the
-    // whole call closed.
-    def boundPlan(alias: String, c: String, wantMin: Boolean): Option[ItemPlan] = {
-      val field = schema.fields.find(_.name == c).getOrElse(return None)
-      val tag = tagOf(field.dataType)
-      if (tag.isEmpty) return None
-      val ledger = scala.collection.mutable.Buffer.empty[String]
-      val scanSets = cls.map { d =>
-        val needScan = d.may.filterNot { rel =>
-          d.all.contains(rel) && (d.stats.get((rel, c)) match {
-            case Some(Seq((_, _, t, lo, hi))) if t == tag =>
-              ledger += (if (wantMin) lo else hi); true
-            case _ => false
-          })
-        }
-        (d.dataDir, needScan)
-      }
-      val ledgerCol: Option[org.apache.spark.sql.Column] =
-        if (ledger.isEmpty) None
-        else scala.util.Try[org.apache.spark.sql.Column] {
-          val pick =
-            if (tag == "string") { if (wantMin) ledger.min else ledger.max }
-            else if (wantMin) ledger.minBy(BigDecimal(_)) else ledger.maxBy(BigDecimal(_))
-          (tag, field.dataType) match {
-            // internal-scale stats surface back at the column's type
-            case ("long", DateType) => date_from_unix_date(lit(pick.toInt))
-            case ("long", TimestampType) => timestamp_micros(lit(pick.toLong))
-            case ("long", dt) => lit(pick.toLong).cast(dt)
-            case ("double", dt) => lit(pick.toDouble).cast(dt)
-            case _ => lit(pick)
-          }
-        }.toOption match {
-          case None => return None // unparseable bound: give up exactly
-          case some => some
-        }
-      Some(BoundPlan(alias, c, wantMin, ledgerCol, scanSets, field.dataType))
-    }
-
-    val plans: Seq[ItemPlan] = items.map { i =>
-      (i.op match {
-        case "count" => countPlan(i.alias)
-        case "sum" => i.col.flatMap(sumPlan(i.alias, _))
-        case "min" => i.col.flatMap(boundPlan(i.alias, _, wantMin = true))
-        case "max" => i.col.flatMap(boundPlan(i.alias, _, wantMin = false))
-      }).getOrElse(return None)
-    }
-
-    // ---- shared scan execution ----
-    import org.apache.spark.sql.functions.{count => countF, greatest, least, max => maxF, min => minF, sum => sumF}
-    val scanned = scala.collection.mutable.Map.empty[Int, Any]
-    val scannedHit = scala.collection.mutable.Set.empty[Int]
-    // count/sum need their EXACT boundary sets (overlap double-counts)
-    // — one scan per DISTINCT set, each computing every item on it
-    plans.zipWithIndex
-      .collect { case (p @ (_: CountPlan | _: SumPlan), i) => (p, i) }
-      .groupBy { case (p, _) => canon(p match {
-        case c: CountPlan => c.sets; case s: SumPlan => s.sets; case _ => Nil }) }
-      .foreach { case (sets, group) =>
-        scanOver(sets).foreach { df =>
-          // sums scan at DECIMAL(38, s) like the write-time ledger and
-          // metaGroupAgg's scan leg: a raw integral sum could wrap Long
-          // in the partial and a raw decimal sum could overflow to null
-          // — either silently diverges from the plain-scan answer. The
-          // paired non-null count distinguishes a genuine all-null sum
-          // from a (38, s) overflow, which gives up to the ordinary scan.
-          val aggs = group.flatMap {
-            case (_: CountPlan, _) => Seq(countF(lit(1)))
-            case (s: SumPlan, _) =>
-              val scale = s.resultType match {
-                case d: DecimalType => d.scale
-                case _ => 0
-              }
-              Seq(sumF(df(s.col).cast(DecimalType(38, scale))), countF(df(s.col)))
-            case _ => throw new IllegalStateException
-          }
-          val row = df.agg(aggs.head, aggs.tail: _*).head()
-          var k = 0
-          group.foreach { case (p, pi) =>
-            p match {
-              case _: CountPlan =>
-                scanned(pi) = row.get(k); k += 1
-              case _: SumPlan =>
-                val s = row.get(k); val nonNull = row.getLong(k + 1); k += 2
-                if (s == null && nonNull > 0) return None // (38,s) overflow
-                scanned(pi) = s
-              case _ => throw new IllegalStateException
-            }
-            scannedHit += pi
-          }
-        }
-      }
-    // min/max are overlap-safe (idempotent): ONE scan over the UNION
-    // of every bound item's boundary files computes them all
-    val boundItems = plans.zipWithIndex.collect { case (b: BoundPlan, i) => (b, i) }
-    if (boundItems.nonEmpty) {
-      val unionSets = boundItems.flatMap(_._1.sets).groupBy(_._1)
-        .map { case (d, fs) => (d, fs.flatMap(_._2).distinct) }.toSeq
-      scanOver(canon(unionSets)).foreach { df =>
-        val aggs = boundItems.map { case (b, _) =>
-          if (b.wantMin) minF(df(b.col)) else maxF(df(b.col))
-        }
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        boundItems.zipWithIndex.foreach { case ((_, pi), k) =>
-          scanned(pi) = row.get(k); scannedHit += pi
-        }
-      }
-    }
-
-    // ---- combine metadata + scan legs per item ----
-    val cols: Seq[org.apache.spark.sql.Column] = plans.zipWithIndex.map {
-      case (CountPlan(alias, metaRows, _), i) =>
-        val extra = if (scannedHit(i)) scanned(i).asInstanceOf[Long] else 0L
-        lit(metaRows + extra).as(alias)
-      case (SumPlan(alias, _, metaSum, _, resultType), i) =>
-        val scanBD: Option[java.math.BigDecimal] =
-          if (!scannedHit(i) || scanned(i) == null) None
-          else scanned(i) match {
-            case l: java.lang.Long => Some(java.math.BigDecimal.valueOf(l))
-            case d: java.math.BigDecimal => Some(d)
-            case _ => return None // unexpected runtime type: give up exactly
-          }
-        (metaSum, scanBD) match {
-          case (None, None) => lit(null).cast(resultType).as(alias)
-          case (a, b) =>
-            val total = (a, b) match {
-              case (Some(x), Some(y)) => x.add(y)
-              case _ => a.orElse(b).get
-            }
-            if (resultType == LongType) {
-              // Spark's sum(<integral>) is LongType with silent wrap;
-              // an exact total outside Long can't restate that — fall
-              // back to the ordinary scan rather than diverge
-              val asLong = scala.util.Try(total.longValueExact).toOption
-                .getOrElse(return None)
-              lit(asLong).as(alias)
-            } else lit(total).cast(resultType).as(alias)
-        }
-      case (b: BoundPlan, i) =>
-        val scanCol: Option[org.apache.spark.sql.Column] =
-          if (!scannedHit(i)) None
-          else Some(if (scanned(i) == null) lit(null).cast(b.fieldType)
-            else lit(scanned(i)).cast(b.fieldType))
-        ((b.ledgerCol, scanCol) match {
-          case (Some(l), Some(s)) => if (b.wantMin) least(l, s) else greatest(l, s)
-          case (Some(l), None) => l
-          case (None, Some(s)) => s
-          case (None, None) => lit(null).cast(b.fieldType) // no matching file: SQL NULL
-        }).as(b.alias)
-    }
-    Some(spark.range(1).select(cols: _*))
-  }
-
-  /** GROUPED metadata aggregates — the partition-stats answer to the
-    * reference's gold query shape (`GROUP BY city … sum/count`,
-    * reference: spark_jobs/gold_reporting.py:70): when the grouping
-    * columns are PARTITION PATH columns, every all-rows-match file
-    * belongs to exactly one group (its partition leaf), so per-group
-    * count/sum/min/max assemble from the row-count, `_sums.jsonl` and
-    * stats ledgers without opening data. Files metadata can't answer
-    * for — predicate-straddling, unrecorded, or not path-keyed on
-    * every group column — fall to ONE grouped scan of exactly those
-    * files, and the two legs merge through their partial-aggregate
-    * algebra (counts add, decimal sums add, bounds min/max). At
-    * 100 TB the daily report over a city/date-partitioned table is a
-    * driver-side metadata fold over O(partitions), not a table scan.
-    *
-    * Exactness contract matches [[metaAgg]]: both legs restate the
-    * ordinary grouped scan bit-for-bit (sums only for integral and
-    * decimal columns — doubles refuse), or the method returns None
-    * and the caller runs that scan. Integral sums assume group totals
-    * fit in Long (Spark's own sum(<integral>) contract). */
-  def metaGroupAgg(table: String, groupCols: Seq[String],
-      items: Seq[Lakehouse.MetaAggItem],
-      pred: Option[org.apache.spark.sql.Column],
-      branch: String = "main"): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.{col, count => countF, lit, max => maxF, min => minF, sum => sumF}
-    import org.apache.spark.sql.types._
-    val snap = currentSnapshot(table, branch)
-      .getOrElse(throw new IllegalArgumentException(s"no such table/branch: $table@$branch"))
-    if (snapshotDeletes(table).getOrElse(snap, Nil).nonEmpty) return None
-    if (items.exists(i => !Set("count", "min", "max", "sum").contains(i.op))) return None
-    if (groupCols.isEmpty) return metaAgg(table, items, pred, branch)
-    val aliases = items.map(_.alias)
-    if (aliases.distinct.size != aliases.size || aliases.exists(groupCols.contains)) return None
-    val (schema, cls) = classifyForMeta(table, snap, pred, branch)
-    val groupFields = groupCols.map(c => schema.fields.find(_.name == c).getOrElse(return None))
-    // group-key types must round-trip through partition path strings
-    if (!groupFields.forall(_.dataType match {
-      case StringType | ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType | DateType | BooleanType => true
-      case _ => false
-    })) return None
-
-    def statTagOf(dt: DataType): String = dt match {
-      case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType => "long"
-      case FloatType | DoubleType => "double"
-      case StringType => "string"
-      case _ => ""
-    }
-    case class ItemTy(op: String, c: Option[String], alias: String, field: StructField,
-        partial: DataType, result: DataType, statTag: String, scale: Int)
-    val tys: Seq[ItemTy] = items.map { i =>
-      i.op match {
-        case "count" => ItemTy("count", None, i.alias, null, LongType, LongType, "", 0)
-        case "sum" =>
-          val f = i.col.flatMap(c => schema.fields.find(_.name == c)).getOrElse(return None)
-          val res: DataType = f.dataType match {
-            case ByteType | ShortType | IntegerType | LongType => LongType
-            case d: DecimalType => DecimalType(math.min(38, d.precision + 10), d.scale)
-            case _ => return None // double sums: order-dependent, not restatable
-          }
-          val sc = sumScale(f.dataType).getOrElse(return None)
-          ItemTy("sum", i.col, i.alias, f, DecimalType(38, sc), res, "", sc)
-        case op =>
-          val f = i.col.flatMap(c => schema.fields.find(_.name == c)).getOrElse(return None)
-          val tag = statTagOf(f.dataType)
-          if (tag.isEmpty) return None
-          ItemTy(op, i.col, i.alias, f, f.dataType, f.dataType, tag, 0)
-      }
-    }
-
-    // ---- path → typed group key ----
-    val unescape = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName _
-    def pathValue(f: StructField, raw: String): Option[Any] = {
-      val v = unescape(raw)
-      if (v == "__HIVE_DEFAULT_PARTITION__") Some(null)
-      else scala.util.Try[Any] {
-        f.dataType match {
-          case StringType => v
-          case ByteType => v.toByte
-          case ShortType => v.toShort
-          case IntegerType => v.toInt
-          case LongType => v.toLong
-          case FloatType => v.toFloat
-          case DoubleType => v.toDouble
-          case BooleanType => v.toBoolean
-          case DateType => java.sql.Date.valueOf(java.time.LocalDate.parse(v))
-          case other => throw new IllegalArgumentException(other.toString)
-        }
-      }.toOption
-    }
-    def fileGroupKey(rel: String): Option[Seq[Any]] = {
-      val segs = rel.split("/").dropRight(1).filter(_.contains("="))
-        .map { s => val Array(k, raw) = s.split("=", 2); (k, raw) }.toMap
-      val vals = groupFields.map(f => segs.get(f.name).flatMap(pathValue(f, _)))
-      if (vals.forall(_.isDefined)) Some(vals.map(_.get).toSeq) else None
-    }
-    // stat-ledger string → external value at the column's type
-    def statValue(f: StructField, tag: String, s: String): Option[Any] = scala.util.Try[Any] {
-      (tag, f.dataType) match {
-        case ("long", DateType) =>
-          java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(s.toLong))
-        case ("long", TimestampType) =>
-          val micros = s.toLong
-          val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-          ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt); ts
-        case ("long", ByteType) => s.toByte
-        case ("long", ShortType) => s.toShort
-        case ("long", IntegerType) => s.toInt
-        case ("long", LongType) => s.toLong
-        case ("double", FloatType) => s.toFloat
-        case ("double", DoubleType) => s.toDouble
-        case ("string", StringType) => s
-        case other => throw new IllegalArgumentException(other.toString)
-      }
-    }.toOption
-    def rawLess(tag: String, a: String, b: String): Boolean =
-      if (tag == "string") a < b else BigDecimal(a) < BigDecimal(b)
-
-    // ---- accumulate the metadata leg, route the rest to ONE scan ----
-    sealed trait Contrib
-    case class CountC(rows: Long) extends Contrib
-    case class SumC(v: Option[java.math.BigDecimal]) extends Contrib
-    case class BoundC(raw: String, v: Any) extends Contrib
-    class Acc {
-      val counts: Array[Long] = Array.fill(tys.length)(0L)
-      val sums: Array[java.math.BigDecimal] = Array.fill(tys.length)(null)
-      val bounds: Array[(String, Any)] = Array.fill(tys.length)(null)
-    }
-    val needSums = tys.exists(_.op == "sum")
-    val needCounts = tys.exists(_.op == "count")
-    val metaGroups = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Acc]
-    val scanSets = scala.collection.mutable.Buffer.empty[(String, Seq[String])]
-    cls.foreach { d =>
-      val sumLedger = if (needSums) readSumsLedger(table, d.dataDir)
-        else Map.empty[String, Map[String, Option[java.math.BigDecimal]]]
-      val scanFiles = scala.collection.mutable.Buffer.empty[String]
-      d.may.foreach { rel =>
-        val contribs: Option[(Seq[Any], Seq[Contrib])] =
-          if (!d.all.contains(rel)) None
-          else fileGroupKey(rel).flatMap { key =>
-            val cs = tys.map { t =>
-              t.op match {
-                case "count" =>
-                  if (needCounts) d.rcs.get(rel).map(r => CountC(r._1)) else Some(CountC(0))
-                case "sum" =>
-                  sumLedger.get(rel).flatMap(_.get(t.c.get)).map(SumC)
-                case op =>
-                  d.stats.get((rel, t.c.get)) match {
-                    case Some(Seq((_, _, tg, lo, hi))) if tg == t.statTag =>
-                      val raw = if (op == "min") lo else hi
-                      // raw must both convert to the column type AND
-                      // compare numerically — either failing sends the
-                      // file to the scan leg, never a wrong bound
-                      statValue(t.field, tg, raw)
-                        .filter(_ => scala.util.Try(rawLess(tg, raw, raw)).isSuccess)
-                        .map(BoundC(raw, _))
-                    case _ => None
-                  }
-              }
-            }
-            if (cs.forall(_.isDefined)) Some((key, cs.map(_.get))) else None
-          }
-        contribs match {
-          case Some((key, cs)) =>
-            val acc = metaGroups.getOrElseUpdate(key, new Acc)
-            cs.zipWithIndex.foreach {
-              case (CountC(rows), i) => acc.counts(i) += rows
-              case (SumC(Some(v)), i) =>
-                acc.sums(i) = if (acc.sums(i) == null) v else acc.sums(i).add(v)
-              case (SumC(None), _) => // recorded all-NULL file: SQL sum skips it
-              case (BoundC(raw, v), i) =>
-                val keep = acc.bounds(i) == null ||
-                  (if (tys(i).op == "min") rawLess(tys(i).statTag, raw, acc.bounds(i)._1)
-                   else rawLess(tys(i).statTag, acc.bounds(i)._1, raw))
-                if (keep) acc.bounds(i) = (raw, v)
-            }
-          case None => scanFiles += rel
-        }
-      }
-      if (scanFiles.nonEmpty) scanSets += ((d.dataDir, scanFiles.toSeq))
-    }
-
-    // ---- assemble partial-aggregate legs and merge ----
-    val partialSchema = StructType(
-      groupFields.map(f => StructField(f.name, f.dataType)) ++
-        tys.map(t => StructField(t.alias, t.partial)))
-    val metaRows: Seq[Row] = metaGroups.toSeq.map { case (key, acc) =>
-      Row.fromSeq(key ++ tys.zipWithIndex.map { case (t, i) =>
-        t.op match {
-          case "count" => acc.counts(i)
-          case "sum" => if (acc.sums(i) == null) null else acc.sums(i).setScale(t.scale)
-          case _ => if (acc.bounds(i) == null) null else acc.bounds(i)._2
-        }
-      })
-    }
-    import scala.jdk.CollectionConverters._
-    val metaDF = spark.createDataFrame(metaRows.asJava, partialSchema)
-    val scanPartial: Option[DataFrame] =
-      if (scanSets.isEmpty) None
-      else Some {
-        val one = scanSets.toSeq
-          .map { case (d, fs) => openDirGroup(table, d, fs) }
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-        val filtered = pred.fold(one)(one.where)
-        val aggs = tys.map { t =>
-          t.op match {
-            case "count" => countF(lit(1)).as(t.alias)
-            case "sum" => sumF(col(t.c.get).cast(DecimalType(38, t.scale))).as(t.alias)
-            case "min" => minF(col(t.c.get)).as(t.alias)
-            case "max" => maxF(col(t.c.get)).as(t.alias)
-          }
-        }
-        filtered.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      }
-    val partials = scanPartial.fold(metaDF)(metaDF.unionByName(_, allowMissingColumns = false))
-    val mergeAggs = tys.map { t =>
-      t.op match {
-        case "count" => sumF(col(t.alias)).cast(LongType).as(t.alias)
-        case "sum" => sumF(col(t.alias)).cast(t.result).as(t.alias)
-        case "min" => minF(col(t.alias)).as(t.alias)
-        case "max" => maxF(col(t.alias)).as(t.alias)
-      }
-    }
-    Some(partials.groupBy(groupCols.map(col): _*).agg(mergeAggs.head, mergeAggs.tail: _*))
   }
 
   // ---- row-level DELETE (copy-on-write) ----
@@ -4209,23 +3580,22 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     * commit the result as a new snapshot. */
   def sqlMerge(table: String, sourceView: String, keyCols: Seq[String],
       partitionBy: Seq[String] = Nil): Long = {
-    registerView(table, partitionBy)
-    // the target is the ordinary read registerView just pinned: SQL
-    // text naming `table` would re-pin it to the statement relation
-    // ([[sqlRelation]]), whose scan partitioning changes the files
-    // this rewrite writes
+    // the target is THIS lake's ordinary read — never the session name,
+    // which may be registered to another lake, and whose statement
+    // relation ([[sqlRelation]]) partitions its scan differently,
+    // changing the files this rewrite writes
     val source = spark.sql(s"SELECT * FROM $sourceView")
-    val target = spark.table(table)
+    val target = read(table, sessionBranch)
     val merged = source.union(target.join(source,
       keyCols.map(k => target(k) === source(k)).reduce(_ && _), "left_anti"))
     // the partitioned path goes through upsert, which runs the same check
     if (partitionBy.isEmpty)
-      assertMergeCardinality(spark.table(table), spark.table(sourceView), table, keyCols)
+      assertMergeCardinality(target, spark.table(sourceView), table, keyCols)
     val snap =
       if (partitionBy.nonEmpty)
         upsert(spark.table(sourceView), table, keyCols, partitionBy, sessionBranch)
       else createOrReplace(merged, table, branch = sessionBranch)
-    registerView(table, partitionBy)
+    refreshOwnView(table, partitionBy)
     snap
   }
 
@@ -4683,7 +4053,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     val snap =
       if (partitionBy.isEmpty) rewriteUnpartitioned(table, branch, keyCols)(changes)
       else rewriteChangedPartitions(table, branch, keyCols, partitionBy)(changes)
-    registerView(table, partitionBy)
+    refreshOwnView(table, partitionBy)
     snap
   }
 
@@ -5217,7 +4587,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     val snap = append(
       aligned.select(target.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*),
       table, partitionBy, sessionBranch)
-    registerView(table, partitionBy)
+    refreshOwnView(table, partitionBy)
     snap
   }
 
@@ -5241,6 +4611,15 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
     // final pass restores the rest.
     registerSqlViews(touching = Some(table))
   }
+
+  /** Re-point the session name at the snapshot a programmatic write
+    * just committed — unless the name is registered to ANOTHER lake:
+    * a same-named table in a second lake must not capture the SQL
+    * name (and every later `SELECT`/`MERGE INTO` on it) just because
+    * a write went through this handle. */
+  private def refreshOwnView(table: String, partitionBy: Seq[String]): Unit =
+    if (LakehouseRegistry.lookup(spark, table).forall(_._1.root == root))
+      registerView(table, partitionBy)
 
   // ---- persisted plain SQL views ------------------------------------------
   //
@@ -6543,10 +5922,12 @@ object Lakehouse {
     * ledgers for matching dirs only, not per table-history dir). */
   private[graft] val ledgerReads = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Count of data-dir DataFrame opens — observability for the
-    * metadata-only paths (specs assert [[Lakehouse.metaAgg]] answers
-    * a fully-covered aggregate without opening ANY data dir, and a
-    * boundary-straddling count opens only the straddling dirs). */
+  /** Count of per-dir DataFrame opens on the ordinary read path
+    * (`openDirGroup`) — observability for the paths that must not
+    * touch data (specs assert a pruned or metadata-served read opens
+    * only the dirs it needs, or none). The DSv2 scan does not open
+    * dirs this way, so a metadata-only aggregate is checked by its
+    * plan instead (`Medallion.metaOnlyPlan`). */
   private[graft] val dataDirOpens = new java.util.concurrent.atomic.AtomicLong()
 
   /** Observability for the write-pass sums fusion: ledgers written
@@ -6560,11 +5941,6 @@ object Lakehouse {
     * write scope — see `withMicrosTimestamps`. */
   private val microsScopes =
     scala.collection.mutable.Map.empty[SparkSession, (Int, String)]
-
-  /** One `count/min/max` item of a metadata-answerable aggregate —
-    * `op` ∈ count|min|max, `col` None for count(*), `alias` the
-    * output column name. */
-  case class MetaAggItem(op: String, col: Option[String], alias: String)
 
   /** Run `f` over metadata-scale items on a bounded driver pool.
     * Footer/manifest reads are independent I/O round-trips whose

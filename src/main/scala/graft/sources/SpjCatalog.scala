@@ -589,15 +589,17 @@ private[spj] class GraftSpjScanBuilder(layout: SpjLayout,
     * recorded counts/stats of the pruned file map stay exact. */
   private def allClaimed: Boolean = pushed.forall(claimed.contains)
 
-  /** GLOBAL aggregates answered from the ledgers — count(*) /
-    * count(col) / min / max / sum read out of the row-count, null-
-    * count, bound and sum ledgers the writer recorded, zero data
-    * opens (the Iceberg `SupportsPushDownAggregates` shape). Accepted
-    * ONLY when the answer is provably bit-equal to the ordinary
-    * scan-and-aggregate: no pushed filters, no grouping, every file's
-    * ledger complete for every referenced column — anything else
-    * declines and Spark plans the ordinary scan. Complete pushdown
-    * (never partial): the scan returns THE one finished row. */
+  /** Aggregates answered from the ledgers by [[SpjMetaAgg]] — global
+    * or grouped count / min / max / sum / avg / count(DISTINCT) read
+    * out of the row-count, null-count, bound and sum ledgers the
+    * writer recorded, zero data opens (the Iceberg
+    * `SupportsPushDownAggregates` shape). Accepted ONLY when the
+    * answer is provably bit-equal to the ordinary scan-and-aggregate:
+    * every pushed filter CLAIMED (so the kept dirs' rows all match),
+    * every file's ledger complete for every referenced column —
+    * anything else declines and Spark plans the ordinary scan.
+    * Complete pushdown (never partial): the scan returns the finished
+    * rows, one per group. */
   // Spark probes supportCompletePushDown BEFORE pushAggregation with
   // the same Aggregation instance — cache the ledger fold so the
   // O(files × agg-legs) metadata walk prices once per query, and only
@@ -2580,16 +2582,25 @@ private[spj] object SpjPruning {
   }
 }
 
-/** Pushed-aggregate readouts from the write-time ledgers — the DSv2
-  * twin of [[graft.sources.Lakehouse.metaAgg]], restricted to the
-  * GLOBAL, UNFILTERED case where every answer is a pure metadata fold:
-  * count(*) from row counts, count(col) from null counts, min/max from
-  * stat bounds, sum from the per-file decimal-exact sums ledger. The
-  * exactness contract is the same: answer bit-for-bit what the
-  * ordinary scan-and-aggregate would, or decline (None) and let Spark
-  * plan that scan. Anything unrecorded, type-unmapped, distinct, or
-  * grouped declines — the one bug class this surface must never have
-  * is a fast wrong answer. */
+/** Pushed-aggregate readouts from the write-time ledgers — graft's
+  * one metadata-aggregate engine, reached by every SQL aggregate on a
+  * registered name or a `lakecat.` table through
+  * [[GraftSpjScanBuilder]]'s `pushAggregation`. The answer is a pure
+  * metadata fold over the scan's file map: count(*) from row counts,
+  * count(col) from null counts, min/max from stat bounds, sum from the
+  * per-file decimal-exact sums ledger, avg over non-negative integral
+  * columns, and count(DISTINCT) over per-file constants. GROUP BY
+  * answers when every group column is provably constant per file (an
+  * identity dir, a DATE calendar derivation of the layout's transform,
+  * or a ledger single-valuedness proof). Claimed identity/calendar
+  * filters fold in by dropping the non-matching dirs first (the
+  * builder's `aggLayout`); any other filter leaves a residual, and
+  * Spark then never pushes the aggregate. The exactness contract:
+  * answer bit-for-bit what the ordinary scan-and-aggregate would, or
+  * decline (None) and let Spark plan that scan. Tombstoned snapshots,
+  * unrecorded ledgers, double sums, Long/decimal overflow and
+  * un-provable groupings decline — the one bug class this surface
+  * must never have is a fast wrong answer. */
 private[spj] object SpjMetaAgg {
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate._

@@ -1,26 +1,39 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Medallion.{collectExec, metaOnlyPlan}
 import graft.sources.Lakehouse
 
 /** Metadata-only aggregates (Iceberg aggregate-pushdown analog):
-  * `count(*)` / `min` / `max` answered from the manifest +
-  * `_stats.jsonl` + `_rowcounts.jsonl` ledgers. The scale property
-  * under test: a fully-covered aggregate opens ZERO data dirs (the
-  * 100 TB table's row count is a driver-side metadata readout), and a
-  * predicated count scans only the files whose ranges STRADDLE the
-  * predicate boundary — never the interior. Exactness is
-  * non-negotiable: every fast-path answer must equal the scan's. */
+  * `count` / `min` / `max` / `sum` answered by the DSv2 aggregate
+  * pushdown ([[graft.sources.spj.SpjMetaAgg]]) from the
+  * `_stats.jsonl` + `_rowcounts.jsonl` + `_sums.jsonl` ledgers. Every
+  * case reads through the relation SQL statements use
+  * (`Lakehouse.sqlRelation`, the registered name's DSv2 scan). The
+  * scale property under test: a fully-ledgered aggregate plans NO file
+  * scan (`metaOnlyPlan = 1.0` — the 100 TB table's row count is a
+  * driver-side readout), and a predicated aggregate prunes files by
+  * their stats and scans the survivors. Exactness is non-negotiable:
+  * every answer must equal the ordinary `lake.read` scan's, and every
+  * shape the ledgers cannot prove declines to that scan. */
 class MetaAggSpec extends SparkSpec {
 
   private def freshRoot(): String =
     java.nio.file.Files.createTempDirectory("graft-metaagg").toString
 
-  private def items(specs: (String, String, String)*): Seq[Lakehouse.MetaAggItem] =
-    specs.map { case (op, c, al) =>
-      Lakehouse.MetaAggItem(op, if (c.isEmpty) None else Some(c), al)
-    }
+  /** `aggs` over the table's SQL relation (the DSv2 scan) and over the
+    * ordinary `lake.read` scan, both under `pred`: (answer, scan
+    * answer, the answer's metadata-only verdict, its plan). */
+  private def both(lake: Lakehouse, t: String, pred: Option[Column] = None)(
+      aggs: Column*): (Row, Row, Double, DataFrame) = {
+    def q(df: DataFrame) = pred.fold(df)(df.where).agg(aggs.head, aggs.tail: _*)
+    val got = q(lake.sqlRelation(t, "main"))
+    (got.head(), q(lake.read(t)).head(), metaOnlyPlan(got), got)
+  }
+
+  private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
   test("count(*) with no predicate: zero data-dir opens, exact across appends") {
     import spark.implicits._
@@ -29,37 +42,87 @@ class MetaAggSpec extends SparkSpec {
     lake.append((100 until 250).map(i => (i.toLong, s"v$i")).toDF("k", "v"), "t")
     lake.append((250 until 260).map(i => (i.toLong, s"v$i")).toDF("k", "v"), "t")
     val before = Lakehouse.dataDirOpens.get()
-    val df = lake.metaAgg("t", items(("count", "", "n")), None)
-    assert(df.isDefined)
-    val n = df.get.head().getLong(0)
+    val q = lake.sqlRelation("t", "main").agg(count(lit(1)))
+    val n = q.head().getLong(0)
     assert(Lakehouse.dataDirOpens.get() - before === 0,
       "unpredicated count(*) must not open any data dir")
+    assert(metaOnlyPlan(q) === 1.0, plan(q))
     assert(n === 260)
     assert(n === lake.read("t").count())
   }
 
-  test("predicated count scans ONLY the boundary dir, not the interior") {
+  /** Four ONE-FILE dirs with disjoint k-ranges [0,100) [100,200)
+    * [200,300) [300,400) and a declared sum column `x = 2k`: one file
+    * per dir, so [200,300) genuinely straddles a `k < 250` boundary. */
+  private def fourDirs(): Lakehouse = {
     import spark.implicits._
     val lake = new Lakehouse(spark, freshRoot())
-    // four ONE-FILE dirs with disjoint k-ranges: [0,100) [100,200)
-    // [200,300) [300,400) — single files so [200,300) genuinely
-    // straddles the 250 boundary (a multi-file dir would split into
-    // all-match + pruned files and need no scan at all)
+    lake.declareSumColumns("t", Seq("x"))
     lake.createOrReplace(
-      (0 until 100).map(i => (i.toLong, i * 2.0)).toDF("k", "x").repartition(1), "t")
+      (0 until 100).map(i => (i.toLong, i * 2L)).toDF("k", "x").repartition(1), "t")
     (1 to 3).foreach { d =>
-      lake.append((d * 100 until (d + 1) * 100).map(i => (i.toLong, i * 2.0))
+      lake.append((d * 100 until (d + 1) * 100).map(i => (i.toLong, i * 2L))
         .toDF("k", "x").repartition(1), "t")
     }
-    val before = Lakehouse.dataDirOpens.get()
-    val df = lake.metaAgg("t", items(("count", "", "n")), Some(col("k") < 250))
-    val n = df.get.head().getLong(0)
-    val opened = Lakehouse.dataDirOpens.get() - before
-    assert(n === 250)
-    // dirs 1+2 are ALL-MATCH (metadata), dir 3 straddles 250 (scanned),
-    // dir 4 is pruned — exactly one data-dir open
-    assert(opened === 1, s"expected 1 boundary dir open, got $opened")
-    assert(n === lake.read("t").where(col("k") < 250).count())
+    lake
+  }
+
+  /** `aggs` under `pred` over the SQL relation. Asserts the answer
+    * equals the filtered `lake.read` scan's, that the plan is not
+    * metadata-only (a residual predicate: Spark never pushes the
+    * aggregate) and that every item reads ONE DSv2 scan of `planned`
+    * files (the rest pruned by their stats); returns the answer. */
+  private def prunedExact(lake: Lakehouse, pred: Column, planned: Int)(aggs: Column*): Row = {
+    val (got, want, metaOnly, q) = both(lake, "t", Some(pred))(aggs: _*)
+    assert(got === want, s"pred=$pred")
+    assert(metaOnly === 0.0, plan(q))
+    val scans = collectExec(q) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.collect { case s: graft.sources.spj.GraftSpjScan => s }
+    assert(scans.size === 1, plan(q))
+    assert(scans.head.plannedFileCount === planned, s"pred=$pred\n${plan(q)}")
+    got
+  }
+
+  // The interior dirs (all rows match) are read by the same scan as the
+  // boundary dir: the stats prune only the dirs no row of which matches.
+  test("predicated count scans ONLY the boundary dir, not the interior") {
+    val lake = fourDirs()
+    // dir 3 straddles 250, dir 4 is pruned: three files planned
+    val r = prunedExact(lake, col("k") < 250, 3)(count(lit(1)))
+    assert(r.getLong(0) === 250)
+  }
+
+  test("predicated sum scans ONLY the boundary dir; interior dirs answer from the ledger") {
+    val lake = fourDirs()
+    val r = prunedExact(lake, col("k") < 250, 3)(sum(col("x")))
+    assert(r.getLong(0) === (0 until 250).map(_ * 2L).sum)
+    // the same sum unpredicated is a ledger readout
+    val (all, allScan, metaOnly, q) = both(lake, "t")(sum(col("x")))
+    assert(metaOnly === 1.0, plan(q))
+    assert(all === allScan && all.getLong(0) === (0 until 400).map(_ * 2L).sum)
+  }
+
+  test("count+sum+min/max in one call share scans: one open per boundary dir") {
+    val lake = fourDirs()
+    val r = prunedExact(lake, col("k") < 250, 3)(count(lit(1)), sum(col("x")),
+      min(col("x")), max(col("x")), min(col("k")), max(col("k")))
+    assert(r.getLong(0) === 250)
+    assert(r.getLong(1) === (0 until 250).map(_ * 2L).sum)
+    assert(r.getLong(2) === 0L && r.getLong(3) === 498L)
+    assert(r.getLong(4) === 0L && r.getLong(5) === 249L)
+  }
+
+  test("predicated min/max: all-match dirs answer from the ledger, boundary dirs scan") {
+    val lake = fourDirs()
+    // k >= 100 AND k < 250 prunes dirs 1 and 4
+    val r = prunedExact(lake, col("k") >= 100 && col("k") < 250, 2)(
+      min(col("k")), max(col("k")), max(col("x")))
+    assert(r.getLong(0) === 100L && r.getLong(1) === 249L && r.getLong(2) === 498L)
+    // SQL surface: the same shape through a registered view
+    lake.registerView("t")
+    val s = spark.sql("SELECT min(k) AS lo, max(k) AS hi FROM t WHERE k >= 100 AND k < 250").head()
+    assert(s.getLong(0) === 100L && s.getLong(1) === 249L)
   }
 
   test("recorded nulls block all-match: null rows are excluded, count stays exact") {
@@ -68,11 +131,15 @@ class MetaAggSpec extends SparkSpec {
     val rows = (0 until 50).map(i =>
       (i.toLong, if (i % 5 == 0) None else Some(i * 1.0))).toDF("k", "x")
     lake.createOrReplace(rows, "t")
-    // every non-null x is >= 0, but the file has nulls → all-match must
-    // NOT fire (a null fails x >= 0); the scan gives the exact answer
-    val n = lake.metaAgg("t", items(("count", "", "n")), Some(col("x") >= 0.0)).get.head().getLong(0)
-    assert(n === 40)
-    assert(n === lake.read("t").where(col("x") >= 0.0).count())
+    // every non-null x is >= 0, but a null fails x >= 0: the scan
+    // answers the predicated count exactly
+    val (n, want, _, _) = both(lake, "t", Some(col("x") >= 0.0))(count(lit(1)))
+    assert(n.getLong(0) === 40)
+    assert(n === want)
+    // unpredicated count(x) is the recorded NULL counts' readout
+    val (nx, wantX, metaOnly, q) = both(lake, "t")(count(col("x")))
+    assert(nx.getLong(0) === 40 && nx === wantX)
+    assert(metaOnly === 1.0, plan(q))
   }
 
   test("min/max answer from the ledger: long, double, string — zero data opens") {
@@ -80,18 +147,15 @@ class MetaAggSpec extends SparkSpec {
     val lake = new Lakehouse(spark, freshRoot())
     lake.createOrReplace(Seq((5L, 2.5, "mango"), (17L, -3.25, "apple")).toDF("k", "x", "s"), "t")
     lake.append(Seq((2L, 9.75, "zebra"), (11L, 0.5, "kiwi")).toDF("k", "x", "s"), "t")
-    val before = Lakehouse.dataDirOpens.get()
-    val df = lake.metaAgg("t", items(
-      ("min", "k", "klo"), ("max", "k", "khi"),
-      ("min", "x", "xlo"), ("max", "x", "xhi"),
-      ("min", "s", "slo"), ("max", "s", "shi"), ("count", "", "n")), None)
-    assert(df.isDefined)
-    val r = df.get.head()
-    assert(Lakehouse.dataDirOpens.get() - before === 0)
+    val (r, want, metaOnly, q) = both(lake, "t")(
+      min(col("k")), max(col("k")), min(col("x")), max(col("x")),
+      min(col("s")), max(col("s")), count(lit(1)))
+    assert(metaOnly === 1.0, "no file scan, so no data opens:\n" + plan(q))
     assert(r.getLong(0) === 2L && r.getLong(1) === 17L)
     assert(r.getDouble(2) === -3.25 && r.getDouble(3) === 9.75)
     assert(r.getString(4) === "apple" && r.getString(5) === "zebra")
     assert(r.getLong(6) === 4L)
+    assert(r === want)
   }
 
   test("timestamp min/max surface at TimestampType, equal to the scan's") {
@@ -100,10 +164,11 @@ class MetaAggSpec extends SparkSpec {
     val ts = Seq("2024-03-01 10:00:00", "2024-03-05 23:59:59", "2024-02-28 00:00:01")
       .map(java.sql.Timestamp.valueOf)
     lake.createOrReplace(ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("k", "ts"), "t")
-    val got = lake.metaAgg("t", items(("min", "ts", "lo"), ("max", "ts", "hi")), None)
-    assert(got.isDefined)
-    val expect = lake.read("t").agg(min(col("ts")), max(col("ts"))).head()
-    assert(got.get.head() === expect)
+    val (got, want, metaOnly, q) = both(lake, "t")(min(col("ts")), max(col("ts")))
+    assert(metaOnly === 1.0, plan(q))
+    assert(q.schema.fields.map(_.dataType).toSeq ===
+      Seq(org.apache.spark.sql.types.TimestampType, org.apache.spark.sql.types.TimestampType))
+    assert(got === want)
   }
 
   test("tombstoned snapshots refuse the metadata path (MoR delete changed the counts)") {
@@ -111,78 +176,48 @@ class MetaAggSpec extends SparkSpec {
     val lake = new Lakehouse(spark, freshRoot())
     lake.createOrReplace((0 until 20).map(i => (i.toLong, s"v$i")).toDF("k", "v"), "tmetatomb")
     lake.deleteWhereMor(col("k") < 5, "tmetatomb")
-    assert(lake.metaAgg("tmetatomb", items(("count", "", "n")), None).isEmpty)
+    val (n, want, metaOnly, q) = both(lake, "tmetatomb")(count(lit(1)))
+    assert(metaOnly === 0.0, plan(q))
+    assert(n.getLong(0) === 15 && n === want)
     // and the SQL surface still answers correctly through its scan
     lake.registerView("tmetatomb")
     assert(spark.sql("SELECT count(*) FROM tmetatomb").head().getLong(0) === 15)
   }
 
-  test("coverage gap (missing stats ledger): min scans ONLY the blinded dir, stays exact") {
+  test("coverage gap (missing stats ledger): min/max decline to the scan, stay exact") {
     import spark.implicits._
     val root = freshRoot()
     val lake = new Lakehouse(spark, root)
     lake.createOrReplace(Seq((3L, "a"), (9L, "b")).toDF("k", "v"), "t")
     lake.append(Seq((1L, "c")).toDF("k", "v"), "t")
     // blind the LAST dir's ledger (it holds k=1, the true min): the
-    // ledger leg answers the covered dir, the blinded dir scans —
-    // exact answer, one data-dir open, never a wrong metadata answer
+    // bounds are no longer provable from metadata, so the scan answers
+    // — never a wrong metadata answer
     val statsFiles = new java.io.File(root, "t").listFiles().filter(_.isDirectory)
       .map(d => new java.io.File(d, "_stats.jsonl")).filter(_.exists)
     assert(statsFiles.nonEmpty)
     val last = statsFiles.maxBy(_.getParentFile.getName.stripPrefix("data-").toLong)
     assert(last.delete())
-    val before = Lakehouse.dataDirOpens.get()
-    val got = lake.metaAgg("t", items(("min", "k", "lo"), ("max", "k", "hi")), None)
-    assert(got.isDefined)
-    val r = got.get.head()
-    assert(r.getLong(0) === 1L && r.getLong(1) === 9L)
-    assert(Lakehouse.dataDirOpens.get() - before <= 2, // one per min/max leg
-      "only the blinded dir may be scanned")
-    val n = lake.metaAgg("t", items(("count", "", "n")), None)
-    assert(n.isDefined && n.get.head().getLong(0) === 3)
+    val (r, want, metaOnly, q) = both(lake, "t")(min(col("k")), max(col("k")))
+    assert(metaOnly === 0.0, plan(q))
+    assert(r.getLong(0) === 1L && r.getLong(1) === 9L && r === want)
+    // the row-count ledger is intact: count(*) still answers from it
+    val (n, _, nMeta, nq) = both(lake, "t")(count(lit(1)))
+    assert(nMeta === 1.0, plan(nq))
+    assert(n.getLong(0) === 3)
   }
 
-  test("predicated min/max: all-match dirs answer from the ledger, boundary dirs scan") {
-    import spark.implicits._
-    val lake = new Lakehouse(spark, freshRoot())
-    // three one-file dirs: [0,100) [100,200) [200,300)
-    lake.createOrReplace((0 until 100).map(i => (i.toLong, i * 1.5)).toDF("k", "x")
-      .repartition(1), "t")
-    lake.append((100 until 200).map(i => (i.toLong, i * 1.5)).toDF("k", "x").repartition(1), "t")
-    lake.append((200 until 300).map(i => (i.toLong, i * 1.5)).toDF("k", "x").repartition(1), "t")
-    val before = Lakehouse.dataDirOpens.get()
-    val got = lake.metaAgg("t",
-      items(("min", "k", "lo"), ("max", "k", "hi"), ("max", "x", "xhi")),
-      Some(col("k") >= 100 && col("k") < 250))
-    assert(got.isDefined)
-    val r = got.get.head()
-    assert(r.getLong(0) === 100L && r.getLong(1) === 249L && r.getDouble(2) === 249 * 1.5)
-    // dir 2 is all-match (ledger); dir 3 straddles 250 (scan, once per
-    // bound that needs it); dir 1 pruned
-    val opened = Lakehouse.dataDirOpens.get() - before
-    assert(opened <= 3 && opened >= 1, s"boundary-only scans expected, got $opened opens")
-    val want = lake.read("t").where(col("k") >= 100 && col("k") < 250)
-      .agg(min(col("k")), max(col("k")), max(col("x"))).head()
-    assert(r === want)
-    // SQL surface: the same shape through a registered view
-    lake.createOrReplace(lake.read("t"), "tpredmm")
-    lake.registerView("tpredmm")
-    val s = spark.sql("SELECT min(k) AS lo, max(k) AS hi FROM tpredmm WHERE k >= 100 AND k < 250").head()
-    assert(s.getLong(0) === 100L && s.getLong(1) === 249L)
-  }
-
-  test("rowcounts ledger absent (pre-ledger dir): footer fallback keeps it metadata-only") {
+  test("rowcounts ledger absent (pre-ledger dir): count declines to the scan, exact") {
     import spark.implicits._
     val root = freshRoot()
     val lake = new Lakehouse(spark, root)
     lake.createOrReplace((0 until 30).map(i => (i.toLong, s"v$i")).toDF("k", "v"), "t")
     new java.io.File(root, "t").listFiles().filter(_.isDirectory)
       .map(d => new java.io.File(d, "_rowcounts.jsonl")).filter(_.exists).foreach(_.delete())
-    val before = Lakehouse.dataDirOpens.get()
-    val n = lake.metaAgg("t", items(("count", "", "n")), None)
-    assert(n.isDefined && n.get.head().getLong(0) === 30)
-    assert(Lakehouse.dataDirOpens.get() - before === 0,
-      "footer row counts are metadata reads, not data-dir opens")
+    // an unrecorded row count is unknown, never zero: the scan counts
+    val (n, want, metaOnly, q) = both(lake, "t")(count(lit(1)))
+    assert(metaOnly === 0.0, plan(q))
+    assert(n.getLong(0) === 30 && n === want)
   }
 
   test("partition-predicate count over a partitioned table: all-match partitions by metadata") {
@@ -190,11 +225,10 @@ class MetaAggSpec extends SparkSpec {
     val lake = new Lakehouse(spark, freshRoot())
     val df = (0 until 90).map(i => (i.toLong, Seq("a", "b", "c")(i % 3))).toDF("k", "p")
     lake.createOrReplace(df, "t", partitionBy = Seq("p"))
-    val before = Lakehouse.dataDirOpens.get()
-    val n = lake.metaAgg("t", items(("count", "", "n")), Some(col("p") === "b")).get.head().getLong(0)
-    assert(n === 30)
-    assert(Lakehouse.dataDirOpens.get() - before === 0,
-      "a partition-exact predicate needs no data scan: the path value IS the stat")
+    val (n, want, metaOnly, q) = both(lake, "t", Some(col("p") === "b"))(count(lit(1)))
+    assert(n.getLong(0) === 30 && n === want)
+    assert(metaOnly === 1.0,
+      "a partition-exact predicate needs no data scan: the path value IS the stat\n" + plan(q))
   }
 
   test("SQL: SELECT count(*)/min/max FROM t matches Spark and keeps Spark's names") {
@@ -256,60 +290,12 @@ class MetaAggSpec extends SparkSpec {
       .withColumn("price", col("price").cast("decimal(18,2)"))
     lake.createOrReplace(df(0, 100), "t")
     lake.append(df(100, 250), "t")
-    val before = Lakehouse.dataDirOpens.get()
-    val out = lake.metaAgg("t",
-      items(("sum", "k", "sk"), ("sum", "price", "sp"), ("count", "", "n")), None)
-    assert(out.isDefined)
-    val r = out.get.head()
-    assert(Lakehouse.dataDirOpens.get() - before === 0,
-      "declared-sum aggregate must not open any data dir")
-    val exact = lake.read("t").agg(sum(col("k")), sum(col("price")), count(lit(1))).head()
+    val (r, exact, metaOnly, q) =
+      both(lake, "t")(sum(col("k")), sum(col("price")), count(lit(1)))
+    assert(metaOnly === 1.0, "declared-sum aggregate must not scan data:\n" + plan(q))
     assert(r.getLong(0) === exact.getLong(0))
     assert(r.getDecimal(1) === exact.getDecimal(1))
     assert(r.getLong(2) === exact.getLong(2))
-  }
-
-  test("predicated sum scans ONLY the boundary dir; interior dirs answer from the ledger") {
-    import spark.implicits._
-    val lake = new Lakehouse(spark, freshRoot())
-    lake.declareSumColumns("t", Seq("x"))
-    lake.createOrReplace(
-      (0 until 100).map(i => (i.toLong, i * 2L)).toDF("k", "x").repartition(1), "t")
-    (1 to 3).foreach { d =>
-      lake.append((d * 100 until (d + 1) * 100).map(i => (i.toLong, i * 2L))
-        .toDF("k", "x").repartition(1), "t")
-    }
-    val before = Lakehouse.dataDirOpens.get()
-    val out = lake.metaAgg("t", items(("sum", "x", "s")), Some(col("k") < 250)).get.head()
-    val opened = Lakehouse.dataDirOpens.get() - before
-    assert(opened === 1, s"expected 1 boundary dir open, got $opened")
-    assert(out.getLong(0) === (0 until 250).map(_ * 2L).sum)
-  }
-
-  test("count+sum+min/max in one call share scans: one open per boundary dir") {
-    import spark.implicits._
-    val lake = new Lakehouse(spark, freshRoot())
-    lake.declareSumColumns("t", Seq("x"))
-    lake.createOrReplace(
-      (0 until 100).map(i => (i.toLong, i * 2L)).toDF("k", "x").repartition(1), "t")
-    (1 to 3).foreach { d =>
-      lake.append((d * 100 until (d + 1) * 100).map(i => (i.toLong, i * 2L))
-        .toDF("k", "x").repartition(1), "t")
-    }
-    val before = Lakehouse.dataDirOpens.get()
-    val r = lake.metaAgg("t", items(
-      ("count", "", "n"), ("sum", "x", "s"),
-      ("min", "x", "lo"), ("max", "x", "hi"),
-      ("min", "k", "klo"), ("max", "k", "khi")), Some(col("k") < 250)).get.head()
-    val opened = Lakehouse.dataDirOpens.get() - before
-    // count and sum share one exact-set scan of the straddling dir;
-    // the four bounds share one union scan of the same dir — 2 opens,
-    // never one per item (the old shape paid 5)
-    assert(opened <= 2, s"expected at most 2 boundary opens for 6 items, got $opened")
-    assert(r.getLong(0) === 250)
-    assert(r.getLong(1) === (0 until 250).map(_ * 2L).sum)
-    assert(r.getLong(2) === 0L && r.getLong(3) === 498L)
-    assert(r.getLong(4) === 0L && r.getLong(5) === 249L)
   }
 
   test("sum over an all-NULL file contributes nothing; all-NULL table sums to SQL NULL") {
@@ -318,13 +304,13 @@ class MetaAggSpec extends SparkSpec {
     lake.declareSumColumns("t", Seq("x"))
     lake.createOrReplace(
       (0 until 10).map(i => (i.toLong, Option.empty[Long])).toDF("k", "x"), "t")
-    val r0 = lake.metaAgg("t", items(("sum", "x", "s")), None).get.head()
-    assert(r0.isNullAt(0), "sum over only NULLs must be SQL NULL")
+    val (r0, want0, meta0, q0) = both(lake, "t")(sum(col("x")))
+    assert(r0.isNullAt(0) && r0 === want0, "sum over only NULLs must be SQL NULL")
+    assert(meta0 === 1.0, plan(q0))
     lake.append((0 until 10).map(i => (i.toLong, Some(i.toLong))).toDF("k", "x"), "t")
-    val before = Lakehouse.dataDirOpens.get()
-    val r1 = lake.metaAgg("t", items(("sum", "x", "s")), None).get.head()
-    assert(Lakehouse.dataDirOpens.get() - before === 0)
-    assert(r1.getLong(0) === 45L)
+    val (r1, want1, meta1, q1) = both(lake, "t")(sum(col("x")))
+    assert(meta1 === 1.0, plan(q1))
+    assert(r1.getLong(0) === 45L && r1 === want1)
   }
 
   test("double sums refuse the metadata path (order-dependent addition is not restatable)") {
@@ -332,17 +318,18 @@ class MetaAggSpec extends SparkSpec {
     val lake = new Lakehouse(spark, freshRoot())
     lake.declareSumColumns("t", Seq("x"))
     lake.createOrReplace((0 until 10).map(i => (i.toLong, i * 1.5)).toDF("k", "x"), "t")
-    assert(lake.metaAgg("t", items(("sum", "x", "s")), None).isEmpty)
+    val (r, want, metaOnly, q) = both(lake, "t")(sum(col("x")))
+    assert(metaOnly === 0.0, plan(q))
+    assert(r === want)
   }
 
   test("undeclared table: sum item scans (still exact), declaration is per-table opt-in") {
     import spark.implicits._
     val lake = new Lakehouse(spark, freshRoot())
     lake.createOrReplace((0 until 50).map(i => (i.toLong, i * 3L)).toDF("k", "x"), "t")
-    val before = Lakehouse.dataDirOpens.get()
-    val r = lake.metaAgg("t", items(("sum", "x", "s")), None).get.head()
-    assert(Lakehouse.dataDirOpens.get() - before >= 1, "no recorded sums: must scan")
-    assert(r.getLong(0) === (0 until 50).map(_ * 3L).sum)
+    val (r, want, metaOnly, q) = both(lake, "t")(sum(col("x")))
+    assert(metaOnly === 0.0, "no recorded sums: must scan\n" + plan(q))
+    assert(r.getLong(0) === (0 until 50).map(_ * 3L).sum && r === want)
   }
 
   test("compute_sums CALL backfills existing dirs; sum then answers metadata-only") {
@@ -357,7 +344,7 @@ class MetaAggSpec extends SparkSpec {
     spark.sql("CALL system.compute_sums(table => 't', columns => 'x')").collect()
     val q = spark.sql("SELECT sum(x) AS s, count(*) AS n FROM t")
     val r = q.head()
-    assert(graft.operators.Medallion.metaOnlyPlan(q) === 1.0,
+    assert(metaOnlyPlan(q) === 1.0,
       "backfilled sums must answer SELECT sum() from the ledgers, with no file scan:\n" +
         q.queryExecution.executedPlan)
     assert(r.getLong(0) === (0 until 150).map(_ * 2L).sum)
@@ -370,8 +357,9 @@ class MetaAggSpec extends SparkSpec {
     lake.declareSumColumns("t", Seq("x"))
     lake.createOrReplace((0 until 100).map(i => (i.toLong, i * 2L)).toDF("k", "x"), "t")
     lake.deleteWhereMor(col("k") % 10 === 0, "t")
-    assert(lake.metaAgg("t", items(("sum", "x", "s")), None).isEmpty,
-      "MoR tombstones change sums — metadata must refuse")
+    val (s, want, metaOnly, q) = both(lake, "t")(sum(col("x")))
+    assert(metaOnly === 0.0, "MoR tombstones change sums — metadata must refuse\n" + plan(q))
+    assert(s === want)
     lake.registerView("t")
     val r = spark.sql("SELECT sum(x) AS s FROM t").head()
     assert(r.getLong(0) === (0 until 100).filter(_ % 10 != 0).map(_ * 2L).sum)
@@ -383,6 +371,11 @@ class MetaAggSpec extends SparkSpec {
     lake.declareSumColumns("t", Seq("x"))
     lake.createOrReplace(Seq((1L, Long.MaxValue - 10L)).toDF("k", "x"), "t")
     lake.append(Seq((2L, Long.MaxValue - 10L)).toDF("k", "x"), "t")
-    assert(lake.metaAgg("t", items(("sum", "x", "s")), None).isEmpty)
+    val q = lake.sqlRelation("t", "main").agg(sum(col("x")))
+    assert(metaOnlyPlan(q) === 0.0, plan(q))
+    // the same outcome as the ordinary scan: its wrapped total, or the
+    // same overflow error under ANSI arithmetic
+    def outcome(df: DataFrame) = scala.util.Try(df.head()).toEither.left.map(_.getClass)
+    assert(outcome(q) === outcome(lake.read("t").agg(sum(col("x")))))
   }
 }

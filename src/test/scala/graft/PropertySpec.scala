@@ -244,42 +244,93 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
     }
   }
 
-  test("metaAgg equals the full scan on randomized range/equality/IN predicates") {
+  test("DSv2 aggregate pushdown equals the full scan on randomized predicates") {
+    import graft.operators.Medallion.metaOnlyPlan
     import graft.sources.Lakehouse
+    import graft.sources.spj.GraftSpjCatalog
     val root = java.nio.file.Files.createTempDirectory("graft-maprop").toString
     val lake = new Lakehouse(spark, root)
-    // three appends, overlapping k ranges, nulls in x, a string col
+    // three appends, overlapping k ranges, nulls in x, a string col; the
+    // flat table `pt` and its identity-partitioned twin `pp` (on p)
     def mk(lo: Int, hi: Int) = (lo until hi).map { i =>
-      (i.toLong, if (i % 7 == 0) None else Some(i * 0.5), s"s${i % 13}")
-    }.toDF("k", "x", "s")
-    lake.createOrReplace(mk(0, 120).repartition(2), "pt")
-    lake.append(mk(80, 200).repartition(1), "pt")
-    lake.append(mk(150, 260).repartition(2), "pt")
-    val full = lake.read("pt")
-    val preds: Seq[org.apache.spark.sql.Column] = {
-      val bounds = sample(Gen.chooseNum(-10L, 270L), 24)
-      bounds.grouped(2).toSeq.flatMap { case Seq(a, b) =>
-        Seq(
-          col("k") >= math.min(a, b) && col("k") < math.max(a, b),
-          col("x") > a * 0.5,
-          col("k") === a,
-          col("s").isin(s"s${math.floorMod(a, 13)}", s"s${math.floorMod(b, 13)}"),
-          col("k") <= b && col("s") > "s3")
+      (i.toLong, if (i % 7 == 0) None else Some(i * 0.5), s"s${i % 13}", (i % 5).toLong)
+    }.toDF("k", "x", "s", "p")
+    Seq("pt" -> Nil, "pp" -> Seq("p")).foreach { case (t, part) =>
+      lake.declareSumColumns(t, Seq("k"))
+      lake.createOrReplace(mk(0, 120).repartition(2), t, partitionBy = part)
+      lake.append(mk(80, 200).repartition(1), t, partitionBy = part)
+      lake.append(mk(150, 260).repartition(2), t, partitionBy = part)
+      lake.registerView(t, part)
+      // the ordinary per-dir scan, as a plain temp view
+      lake.read(t).createOrReplaceTempView(s"${t}_scan")
+    }
+    spark.conf.set("spark.sql.catalog.propcat", classOf[GraftSpjCatalog].getName)
+    spark.conf.set("spark.sql.catalog.propcat.root", root)
+
+    val ledgerAggs = "count(*) AS n, min(k) AS klo, max(k) AS khi, sum(k) AS sk, " +
+      "avg(k) AS ak, min(x) AS xlo, max(s) AS shi"
+    val distinctAggs = "count(DISTINCT p) AS dp, count(DISTINCT s) AS ds"
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    /** Runs `sql` (`%T` = table) on the registered name and through the
+      * catalog, asserts both equal the scan, and returns the verdicts. */
+    def check(t: String, sql: String): Seq[Double] = {
+      val want = rows(spark.sql(sql.replace("%T", s"${t}_scan")))
+      Seq(t, s"propcat.$t").map { name =>
+        val q = spark.sql(sql.replace("%T", name))
+        assert(rows(q) === want, s"$name: $sql")
+        metaOnlyPlan(q)
       }
     }
-    val its = Seq(
-      Lakehouse.MetaAggItem("count", None, "n"),
-      Lakehouse.MetaAggItem("min", Some("k"), "klo"),
-      Lakehouse.MetaAggItem("max", Some("k"), "khi"),
-      Lakehouse.MetaAggItem("min", Some("x"), "xlo"),
-      Lakehouse.MetaAggItem("max", Some("s"), "shi"))
-    (preds.map(Some(_)) :+ None).zipWithIndex.foreach { case (p, i) =>
-      val got = lake.metaAgg("pt", its, p)
-      assert(got.isDefined, s"case $i: metaAgg refused (no tombstones exist)")
-      val base = p.fold(full)(full.where)
-      val want = base.agg(count(lit(1)).as("n"), min(col("k")), max(col("k")),
-        min(col("x")), max(col("s"))).head()
-      assert(got.get.head() === want, s"case $i: pred=$p")
+
+    val bounds = sample(Gen.chooseNum(-10L, 270L), 24)
+    val pairs = bounds.grouped(2).toSeq.map { case Seq(a, b) => (a, b) }
+    // flat predicates: pruned by file stats, the residual scans
+    val flatPreds = pairs.flatMap { case (a, b) =>
+      Seq(
+        s"k >= ${math.min(a, b)} AND k < ${math.max(a, b)}",
+        s"x > ${a * 0.5}",
+        s"k = $a",
+        s"s IN ('s${math.floorMod(a, 13)}', 's${math.floorMod(b, 13)}')",
+        s"k <= $b AND s > 's3'")
+    }
+    // partition predicates the scan CLAIMS (identity equality, IN and
+    // integral ranges): the aggregate folds over the kept dirs only
+    val claimedPreds = pairs.flatMap { case (a, b) =>
+      val (lo, hi) = (math.floorMod(a, 7) - 1, math.floorMod(b, 7) - 1)
+      Seq(
+        s"p = ${math.floorMod(a, 5)}",
+        s"p IN (${math.floorMod(a, 5)}, ${math.floorMod(b, 5)})",
+        s"p >= ${math.min(lo, hi)} AND p < ${math.max(lo, hi)}")
+    }
+    val mixedPreds = pairs.map { case (a, b) => s"p = ${math.floorMod(a, 5)} AND k < $b" }
+
+    // unpredicated: every ledger leg answers from metadata
+    Seq("pt", "pp").foreach { t =>
+      assert(check(t, s"SELECT $ledgerAggs FROM %T").forall(_ == 1.0), s"$t unpredicated")
+    }
+    // s varies inside every file: its DISTINCT count is the scan's
+    assert(check("pp", s"SELECT $distinctAggs FROM %T").forall(_ == 0.0))
+    assert(check("pp", "SELECT count(DISTINCT p) AS dp FROM %T").forall(_ == 1.0))
+    flatPreds.foreach { p =>
+      Seq("pt", "pp").foreach { t =>
+        check(t, s"SELECT $ledgerAggs FROM %T WHERE $p")
+        check(t, s"SELECT $distinctAggs FROM %T WHERE $p")
+      }
+    }
+    claimedPreds.foreach { p =>
+      assert(check("pp", s"SELECT $ledgerAggs, count(DISTINCT p) AS dp FROM %T WHERE $p")
+        .forall(_ == 1.0), s"claimed: $p")
+      check("pp", s"SELECT $distinctAggs FROM %T WHERE $p")
+      val grouped = s"SELECT p, count(*) AS n, sum(k) AS sk, max(x) AS xhi FROM %T " +
+        s"WHERE $p GROUP BY p"
+      val verdicts = check("pp", grouped)
+      if (spark.sql(grouped.replace("%T", "pp_scan")).head(1).nonEmpty)
+        assert(verdicts.forall(_ == 1.0), s"claimed grouped: $p")
+    }
+    mixedPreds.foreach { p =>
+      assert(check("pp", s"SELECT $ledgerAggs FROM %T WHERE $p").forall(_ == 0.0),
+        s"a residual conjunct must scan: $p")
     }
   }
 }

@@ -321,13 +321,42 @@ class SqlParserFuzzSpec extends SparkSpec {
           Seq(MergeMatched(None, isDelete = false, Some(Seq("v" -> lit("WHEN"))))), None),
         r => r.count(_.contains("|WHEN|")) == 3)
     ).foreach { case (sql, api, expected) =>
-      sqlLake.registerView("pr") // the API's MERGE re-registers `pr` to its own lake
       spark.sql(sql).collect()
       api()
       val got = rowsOf(sqlLake)
       assert(got == rowsOf(apiLake), s"SQL and API rows diverge after: $sql")
       assert(expected(got), s"unexpected rows after: $sql\n$got")
     }
+  }
+
+  test("programmatic writes on a second lake leave the registered name's lake in place") {
+    import spark.implicits._
+    import graft.sources.{MergeInsert, MergeMatched}
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val home = new Lakehouse(spark, tmp("graft-sqlfuzz-home"))
+    val other = new Lakehouse(spark, tmp("graft-sqlfuzz-other"))
+    val base = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    home.createOrReplace(base, "tl")
+    home.registerView("tl")
+    other.createOrReplace(base, "tl")
+    Seq((2L, "o2"), (3L, "o3")).toDF("k", "v").createOrReplaceTempView("tl_src")
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(r => s"${r.getLong(0)}|${r.getString(1)}").toSeq.sorted
+    // each programmatic write commits to `other`'s own table ...
+    other.sqlMergeClauses("tl", "tl_src", Seq("k"),
+      Seq(MergeMatched(None, isDelete = false, None)), Some(MergeInsert(None)))
+    other.sqlMerge("tl", "tl_src", Seq("k"))
+    other.sqlInsert("tl", Seq((9L, "o9")).toDF("k", "v"))
+    assert(rowsOf(other.read("tl")) === Seq("1|a", "2|o2", "3|o3", "9|o9"))
+    // ... and the SQL name still reads and commits `home`
+    assert(rowsOf(spark.sql("SELECT * FROM tl")) === Seq("1|a", "2|b"))
+    spark.sql("MERGE INTO tl USING tl_src ON tl.k = tl_src.k " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *").collect()
+    assert(rowsOf(home.read("tl")) === Seq("1|a", "2|o2", "3|o3"))
+    assert(rowsOf(other.read("tl")) === Seq("1|a", "2|o2", "3|o3", "9|o9"))
+    // a write through the lake the name IS registered to refreshes it
+    home.sqlInsert("tl", Seq((7L, "h7")).toDF("k", "v"))
+    assert(rowsOf(spark.sql("SELECT * FROM tl")) === Seq("1|a", "2|o2", "3|o3", "7|h7"))
   }
 
   test("travel syntax inside literals/comments survives execution byte-exact") {
