@@ -27,6 +27,8 @@ import graft.operators.TextAnalysis.{normText, shingles, tokens}
   */
 object Dedup {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Exact-dup groups by normalized text: (nt, gid = min doc_id,
     * members). Identical normalized text ⇒ identical shingle set ⇒
     * identical Jaccard/MinHash/SimHash behavior, so every signature
@@ -618,7 +620,6 @@ object Dedup {
     * metrics arrive via QueryExecutionListener — no extra job). */
   private[graft] object CapDropListener
       extends org.apache.spark.sql.util.QueryExecutionListener {
-    private val log = org.slf4j.LoggerFactory.getLogger(getClass)
     // weak session ids, not SparkSession objects — same no-pin rule as
     // every other process-global registry ([[graft.sources.SessionIds]])
     private val registered =
@@ -771,14 +772,14 @@ object Dedup {
   private def postsTable(src: String) = s"${src}_nd_posts"
   private[graft] def bandsTable(src: String) = s"${src}_nd_bands"
   private[graft] def pairsTable(src: String) = s"${src}_nd_pairs"
-  private[graft] val IndexBuckets = 32
 
-  /** Cost gate on the pruned index reads: an IN-list prune evaluates
-    * every key against every file's stats/blooms, so it only wins when
-    * the delta is SMALL relative to the index (the production refresh
-    * case — a point-lookup-shaped probe). A delta big enough to touch
-    * thousands of keys touches every bucket anyway; scanning the index
-    * beats a 10^4-term IN evaluated per file. */
+  /** Cap on the keys collected for the pruned index reads (band keys
+    * for candidates, doc ids for verification): an IN-list prune
+    * evaluates every key against every file's stats, so it only wins
+    * when the delta is SMALL relative to the index (the production
+    * refresh case — a point-lookup-shaped probe).
+    * Above the cap [[graft.sources.Lakehouse.readJoinPruned]] falls
+    * back to the unpruned read, which returns the same rows. */
   private val PruneKeysCap = 1024
 
   /** Per-document signature relations of one docs batch: full sorted
@@ -791,7 +792,7 @@ object Dedup {
     * explode emits nothing), matching every oracle's eligibility. */
   private def docSignatures(docs: DataFrame): (DataFrame, DataFrame) = {
     // the hashed-postings base feeds BOTH outputs and every downstream
-    // action (counts, key collects, writes) — cut the lineage once so
+    // action (key collects, joins, writes) — cut the lineage once so
     // shingling+hashing is paid once per batch, not per action (the
     // localCheckpoint convention from the BPE trainer)
     val post = docs
@@ -818,33 +819,43 @@ object Dedup {
     (posts, bands)
   }
 
-  /** Index-table writes always hash-cluster by partition value
-    * (`write-distribution = hash`): signature relations arrive from a
-    * 32-partition shuffle, so an undistributed bucket-partitioned
-    * write would emit tasks × buckets tiny files — the classic
-    * small-files explosion, and measurably ~4× the lifecycle cost at
-    * sf0.1. One extra shuffle of the (small) signature delta is the
-    * right trade for every refresh that follows. */
-  private def withHashWrites[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.graft.write-distribution"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "hash")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+  /** The index tables are append-only, unpartitioned logs of
+    * key-sorted SEGMENTS (the LSM-tree shape). A BASE segment — the
+    * whole corpus, written by [[indexCreate]] and [[rebuildAll]] — is
+    * range-clustered on its key, so its files carry disjoint min/max
+    * bounds and the stats ledger prunes `doc_id` point lookups to the
+    * files holding the candidates. */
+  private def replaceBase(lake: graft.sources.Lakehouse, src: String,
+      posts: DataFrame, bands: DataFrame, batchId: Long): Unit = {
+    def clustered(df: DataFrame, key: String) =
+      df.repartitionByRange(col(key)).sortWithinPartitions(key)
+    lake.replaceOnce(clustered(posts, "doc_id"), postsTable(src), batchId = batchId)
+    lake.replaceOnce(clustered(bands, "bkey"), bandsTable(src), batchId = batchId)
+  }
+
+  /** A level-0 segment per refresh: one new data dir per table holding
+    * the delta sorted within its partitions. The delta already leaves
+    * its signature `groupBy` hash-partitioned, so the write adds no
+    * shuffle and no range-sampling job and emits at most
+    * `spark.sql.shuffle.partitions` files. Segments fold through
+    * [[graft.sources.Lakehouse.compactBinPack]] or
+    * [[graft.sources.Lakehouse.compactClustered]]. Exactly-once per
+    * `batchId` (the source snapshot). */
+  private def appendSegment(lake: graft.sources.Lakehouse, src: String,
+      dPosts: DataFrame, dBands: DataFrame, batchId: Long): Unit = {
+    lake.appendOnce(dPosts.sortWithinPartitions("doc_id"), postsTable(src), batchId = batchId)
+    lake.appendOnce(dBands.sortWithinPartitions("bkey"), bandsTable(src), batchId = batchId)
   }
 
   /** CREATE the persistent near-dup index of a lakehouse docs table:
-    * two companion tables — posting arrays hidden-partitioned
-    * `bucket(32, doc_id)` (point lookups during verification prune to
-    * one bucket) and band keys `bucket(32, bkey)` (candidate probes
-    * prune to the delta's buckets). Idempotent per source snapshot
-    * (batch-id-keyed replaces, the [[AnnIndex.create]] convention);
-    * the recorded batch id IS the watermark [[indexRefresh]] advances
-    * from. This is the production shape of MinHash dedup at 100 TB:
-    * signatures are paid ONCE per document at ingest, not per run. */
+    * two companion tables — posting arrays `<src>_nd_posts` and band
+    * keys `<src>_nd_bands` — each a base segment range-clustered on
+    * its key (`doc_id`, `bkey`), plus the `<src>_nd_pairs` ledger.
+    * Idempotent per source snapshot (batch-id-keyed replaces, the
+    * [[AnnIndex.create]] convention); the recorded batch id IS the
+    * watermark [[indexRefresh]] advances from. This is the production
+    * shape of MinHash dedup at 100 TB: signatures are paid ONCE per
+    * document at ingest, not per run. */
   def indexCreate(lake: graft.sources.Lakehouse, src: String,
       tau: Double = 0.5, maxBucket: Int = DefaultMaxBucket): Unit = {
     val s0 = lake.currentSnapshot(src).getOrElse(
@@ -852,22 +863,24 @@ object Dedup {
     val (posts0, bands0) = docSignatures(lake.read(src))
     val posts = posts0.localCheckpoint(true)
     val bands = bands0.localCheckpoint(true)
-    withHashWrites(SparkSession.active) {
-      lake.replaceOnce(posts, postsTable(src), batchId = s0,
-        partitionBy = Seq(s"bucket($IndexBuckets,doc_id)"))
-      lake.replaceOnce(bands, bandsTable(src), batchId = s0,
-        partitionBy = Seq(s"bucket($IndexBuckets,bkey)"))
-      // BOOTSTRAP the pairs ledger with the initial corpus's own
-      // near-dup pairs (the one-time backfill dedup every production
-      // index pays at creation) — from here on the ledger's union over
-      // batches is the COMPLETE pair set of the corpus, which is what
-      // [[indexAdmission]]'s keep/drop decisions are derived from
-      val lists = bands.groupBy("band", "bkey")
-        .agg(collect_list(col("doc_id")).as("ds"))
-      val cand = expandPairs(lists, col("ds"), maxBucket)
-        .dropDuplicates("doc_a", "doc_b")
-      lake.replaceOnce(verifyDocPairs(cand, posts, tau), pairsTable(src), batchId = s0)
-    }
+    replaceBase(lake, src, posts, bands, s0)
+    // BOOTSTRAP the pairs ledger with the initial corpus's own
+    // near-dup pairs (the one-time backfill dedup every production
+    // index pays at creation) — from here on the ledger's union over
+    // batches is the COMPLETE pair set of the corpus, which is what
+    // [[indexAdmission]]'s keep/drop decisions are derived from
+    lake.replaceOnce(selfPairs(posts, bands, tau, maxBucket), pairsTable(src), batchId = s0)
+  }
+
+  /** All verified near-dup pairs WITHIN one signature set — the
+    * create-time bootstrap and the rebuild's full recompute. */
+  private def selfPairs(posts: DataFrame, bands: DataFrame, tau: Double,
+      maxBucket: Int): DataFrame = {
+    val lists = bands.groupBy("band", "bkey")
+      .agg(collect_list(col("doc_id")).as("ds"))
+    val cand = expandPairs(lists, col("ds"), maxBucket)
+      .dropDuplicates("doc_a", "doc_b")
+    verifyDocPairs(cand, posts, tau)
   }
 
   /** Exact-Jaccard verification of candidate doc pairs against sorted
@@ -891,20 +904,20 @@ object Dedup {
     * LSH over the whole corpus would emit minus the already-known
     * base-vs-base ones (spec-pinned against [[dedupMinhashLsh]]).
     *
-    * O(delta) everywhere:
+    * O(delta) signature work:
     *  - signatures are computed for DELTA documents only
     *    ([[graft.sources.Lakehouse.readChanges]] from the index's own
     *    commit-batch watermark);
-    *  - the index side of the candidate join is read through
-    *    [[graft.sources.Lakehouse.readJoinPruned]] keyed on the
-    *    delta's bucket keys — the hidden `bucket(32,bkey)` layout
-    *    prunes index FILES to the touched buckets at plan time;
-    *  - verification posting arrays are point-looked-up the same way
-    *    on the candidates' doc ids over the `bucket(32,doc_id)`
-    *    layout;
-    *  - the index advances by exactly-once APPENDS (batch id = source
-    *    snapshot), so replays no-op and a crash between result and
-    *    append re-runs cleanly.
+    *  - candidates come from the delta's band keys joined against the
+    *    index's band segments (see [[deltaPairs]]);
+    *  - verification posting arrays are point-looked-up on the
+    *    candidates' doc ids through
+    *    [[graft.sources.Lakehouse.readJoinPruned]], which the
+    *    range-clustered base segment prunes to the files holding them;
+    *  - the index advances by one exactly-once APPENDED segment per
+    *    table ([[appendSegment]]; batch id = source snapshot), so
+    *    replays no-op and a crash between result and append re-runs
+    *    cleanly.
     * A rewritten source interval (compaction upstream of the
     * watermark) falls back to a full idempotent rebuild and reports no
     * pairs — the index serves future deltas. */
@@ -928,28 +941,18 @@ object Dedup {
         // advance the watermark exactly-once; committed dirs are
         // immutable, so the lazily-evaluated result above still reads
         // the pre-append snapshot it was planned against
-        withHashWrites(spark) {
-          lake.appendOnce(dPosts, postsTable(src), batchId = cur,
-            partitionBy = Seq(s"bucket($IndexBuckets,doc_id)"))
-          lake.appendOnce(dBands, bandsTable(src), batchId = cur,
-            partitionBy = Seq(s"bucket($IndexBuckets,bkey)"))
-        }
+        appendSegment(lake, src, dPosts, dBands, cur)
         out
     }
   }
 
-  /** Delta signatures for the source interval `(from, to]`, both
-    * localCheckpointed — they feed several actions (key collects,
-    * joins, appends). None when the interval was rewritten upstream
-    * (compaction below the watermark): the caller rebuilds. */
+  /** Delta signatures for the source interval `(from, to]`. None when
+    * the interval was rewritten upstream (compaction below the
+    * watermark): the caller rebuilds. */
   private def deltaSignatures(lake: graft.sources.Lakehouse, src: String,
-      from: Long, to: Long): Option[(DataFrame, DataFrame)] = {
-    val delta =
-      try lake.readChanges(src, from, to)
-      catch { case _: IllegalArgumentException => return None }
-    val (p0, b0) = docSignatures(delta)
-    Some((p0.localCheckpoint(true), b0.localCheckpoint(true)))
-  }
+      from: Long, to: Long): Option[(DataFrame, DataFrame)] =
+    try Some(docSignatures(lake.readChanges(src, from, to)))
+    catch { case _: IllegalArgumentException => None }
 
   /** Candidate generation + exact verification of one signature delta
     * against the index AS COMMITTED — computes, commits nothing. The
@@ -957,35 +960,35 @@ object Dedup {
   private def deltaPairs(lake: graft.sources.Lakehouse, src: String,
       dPosts: DataFrame, dBands: DataFrame, tau: Double,
       maxBucket: Int): DataFrame = {
-    // candidate generation: only buckets the DELTA touches exist in
-    // this plan - a small delta reads the index FILE-PRUNED to its
-    // bucket keys; a large one scans (see [[PruneKeysCap]]). Counts
-    // stay Long until the cap check passes — a wrapped .toInt must
-    // never sneak a giant delta under the cap.
-    val dKeys = dBands.select(col("bkey")).distinct()
-    val nKeys = dKeys.count() max 1L
-    val oldBands = (if (nKeys <= PruneKeysCap)
-      lake.readJoinPruned(bandsTable(src), "bkey", dKeys, "bkey", maxKeys = nKeys.toInt)
-    else lake.read(bandsTable(src)))
-      .select(col("doc_id"), col("band"), col("bkey"))
-    val allBands = oldBands.unionByName(dBands.select("doc_id", "band", "bkey"))
-    val lists = allBands.groupBy("band", "bkey")
-      .agg(collect_list(col("doc_id")).as("ds"))
+    // candidate generation: only band buckets the DELTA touches. The
+    // delta's keys are collected once and semi-join the index rows as a
+    // broadcast local relation (md5 band keys span every file's min/max,
+    // so they prune no file; a distributed semi-join measured no
+    // faster). Over the key cap the read is unpruned, same rows. ONE
+    // grouping yields each touched bucket's members and its delta
+    // members, so pairs expand without re-joining the delta.
+    val oldBands = lake.readJoinPruned(bandsTable(src), "bkey", dBands, "bkey",
+        maxKeys = PruneKeysCap)
+      .select(col("doc_id"), col("band"), col("bkey"), lit(false).as("new"))
+    val cand = oldBands
+      .unionByName(dBands.select(col("doc_id"), col("band"), col("bkey"), lit(true).as("new")))
+      .groupBy("band", "bkey")
+      .agg(collect_list(col("doc_id")).as("ds"),
+        collect_list(when(col("new"), col("doc_id"))).as("dns"))
       .where(size(col("ds")) <= maxBucket)
-    val cand = dBands.join(lists, Seq("band", "bkey"))
-      .select(col("doc_id").as("dn"), explode(col("ds")).as("other"))
+      .select(col("ds"), explode(col("dns")).as("dn"))
+      .select(col("dn"), explode(col("ds")).as("other"))
       .where(col("dn") =!= col("other"))
       .select(least(col("dn"), col("other")).as("doc_a"),
         greatest(col("dn"), col("other")).as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
       .localCheckpoint(true) // consumed by the id collect AND the verify join
-    // exact verification from posting arrays: candidate ids only
+    // exact verification from posting arrays: candidate ids only, file-
+    // pruned on the base's doc_id bounds (over the cap: unpruned read)
     val ids = cand.select(col("doc_a").as("id"))
-      .union(cand.select(col("doc_b").as("id"))).distinct()
-    val nIds = ids.count() max 1L
-    val oldPosts = (if (nIds <= PruneKeysCap)
-      lake.readJoinPruned(postsTable(src), "doc_id", ids, "id", maxKeys = nIds.toInt)
-    else lake.read(postsTable(src)))
+      .union(cand.select(col("doc_b").as("id")))
+    val oldPosts = lake.readJoinPruned(postsTable(src), "doc_id", ids, "id",
+        maxKeys = PruneKeysCap)
       .select(col("doc_id"), col("gs"))
     val posts = oldPosts.unionByName(dPosts.select("doc_id", "gs"))
     verifyDocPairs(cand, posts, tau)
@@ -1000,25 +1003,16 @@ object Dedup {
     * ledgered and can no longer be derived. */
   private def rebuildAll(lake: graft.sources.Lakehouse, src: String,
       tau: Double, maxBucket: Int, batchId: Long): Unit = {
-    System.err.println(s"[graft] dedup index $src: watermark interval was " +
-      "rewritten - rebuilding the index from the current snapshot")
+    log.warn(s"dedup index $src: watermark interval was rewritten - " +
+      "rebuilding the index from the current snapshot")
     val (posts0, bands0) = docSignatures(lake.read(src))
     val cpPosts = posts0.localCheckpoint(true)
     val cpBands = bands0.localCheckpoint(true)
     // the pairs ledger rebuilds too: post-rewrite admissions derive
     // from the rewritten corpus's own complete pair set
-    val lists = cpBands.groupBy("band", "bkey")
-      .agg(collect_list(col("doc_id")).as("ds"))
-    val cand = expandPairs(lists, col("ds"), maxBucket)
-      .dropDuplicates("doc_a", "doc_b")
-    val fullPairs = verifyDocPairs(cand, cpPosts, tau).localCheckpoint(true)
-    withHashWrites(SparkSession.active) {
-      lake.replaceOnce(fullPairs, pairsTable(src), batchId = batchId)
-      lake.replaceOnce(cpPosts, postsTable(src), batchId = batchId,
-        partitionBy = Seq(s"bucket($IndexBuckets,doc_id)"))
-      lake.replaceOnce(cpBands, bandsTable(src), batchId = batchId,
-        partitionBy = Seq(s"bucket($IndexBuckets,bkey)"))
-    }
+    val fullPairs = selfPairs(cpPosts, cpBands, tau, maxBucket).localCheckpoint(true)
+    lake.replaceOnce(fullPairs, pairsTable(src), batchId = batchId)
+    replaceBase(lake, src, cpPosts, cpBands, batchId)
   }
 
   /** One MAINTENANCE step: refresh the index to the source's current
@@ -1043,7 +1037,6 @@ object Dedup {
     * Returns (source snapshot, pairs recorded this step). */
   def indexMaintainStep(lake: graft.sources.Lakehouse, src: String,
       tau: Double = 0.5): (Long, Long) = {
-    val spark = SparkSession.active
     val cur = lake.currentSnapshot(src).getOrElse(
       throw new IllegalArgumentException(s"no such source table: $src"))
     val wmB = lake.committedBatches(bandsTable(src))
@@ -1056,12 +1049,7 @@ object Dedup {
       // died before advancing the index — finish the advancement
       deltaSignatures(lake, src, wmBands, wmPairs) match {
         case Some((dPosts, dBands)) =>
-          withHashWrites(spark) {
-            lake.appendOnce(dPosts, postsTable(src), batchId = wmPairs,
-              partitionBy = Seq(s"bucket($IndexBuckets,doc_id)"))
-            lake.appendOnce(dBands, bandsTable(src), batchId = wmPairs,
-              partitionBy = Seq(s"bucket($IndexBuckets,bkey)"))
-          }
+          appendSegment(lake, src, dPosts, dBands, wmPairs)
         case None => // the recovery interval itself was rewritten
           rebuildAll(lake, src, tau, DefaultMaxBucket, cur)
           return (cur, 0L)
@@ -1077,12 +1065,7 @@ object Dedup {
         val pairs = deltaPairs(lake, src, dPosts, dBands, tau, DefaultMaxBucket)
           .localCheckpoint(true) // materialized BEFORE any commit
         lake.appendOnce(pairs, pairsTable(src), batchId = cur)
-        withHashWrites(spark) {
-          lake.appendOnce(dPosts, postsTable(src), batchId = cur,
-            partitionBy = Seq(s"bucket($IndexBuckets,doc_id)"))
-          lake.appendOnce(dBands, bandsTable(src), batchId = cur,
-            partitionBy = Seq(s"bucket($IndexBuckets,bkey)"))
-        }
+        appendSegment(lake, src, dPosts, dBands, cur)
         (cur, pairs.count())
     }
   }

@@ -2321,7 +2321,7 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
       // cap binds: the fact scan silently losing its pruning is the
       // kind of degradation that must be OBSERVABLE — at scale this is
       // the difference between one dir and the table
-      System.err.println(s"[graft] readJoinPruned($table): dim side exceeds " +
+      Lakehouse.log.warn(s"readJoinPruned($table): dim side exceeds " +
         s"maxKeys=$maxKeys — falling back to an unpruned scan (same rows, more I/O)")
       read(table, branch) // over cap: no pruning, same rows
     } else readKeysPruned(table, keyCol, keys,
@@ -5813,6 +5813,8 @@ class Lakehouse(private[sources] val spark: SparkSession, private[sources] val r
 class CommitConflictException(msg: String) extends RuntimeException(msg)
 
 object Lakehouse {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[Lakehouse])
+
   /** Intra-JVM per-table commit locks, keyed by absolute table path. */
   private[sources] val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()

@@ -139,24 +139,152 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("compacting the index tables preserves content and the watermark") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ndix7").toString
-    val lake = new Lakehouse(spark, root)
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .where(col("doc_id") < 300)
-    lake.createOrReplace(docs.where(col("doc_id") % 2 === 0), "ndc")
-    Dedup.indexCreate(lake, "ndc")
-    lake.append(docs.where(col("doc_id") % 2 === 1), "ndc")
-    Dedup.indexRefresh(lake, "ndc")
-    val before = rows(lake.read("ndc_nd_bands"))
-    val wm = lake.committedBatches("ndc_nd_bands").max
-    // bin-pack the delta-append chain under the SAME bucket layout
-    lake.compact("ndc_nd_bands", Seq(s"bucket(${Dedup.IndexBuckets},bkey)"))
-    lake.compact("ndc_nd_posts", Seq(s"bucket(${Dedup.IndexBuckets},doc_id)"))
-    assert(rows(lake.read("ndc_nd_bands")) === before)
+    // two lakes with the same history: base + three refreshed batches,
+    // i.e. three level-0 segments per index table
+    def build(prefix: String): Lakehouse = {
+      val lake = new Lakehouse(spark,
+        java.nio.file.Files.createTempDirectory(prefix).toString)
+      lake.createOrReplace(docs.where(col("doc_id") % 5 === 0), "ndc")
+      Dedup.indexCreate(lake, "ndc")
+      for (r <- 1 to 3) {
+        lake.append(docs.where(col("doc_id") % 5 === r), "ndc")
+        Dedup.indexRefresh(lake, "ndc")
+      }
+      lake
+    }
+    val lake = build("graft-ndix7")
+    val twin = build("graft-ndix7b")
+    val bands = Dedup.bandsTable("ndc")
+    val posts = "ndc_nd_posts"
+    val before = rows(lake.read(bands))
+    val beforePosts = rows(lake.read(posts).select(col("doc_id"), col("gs")))
+    val wm = lake.committedBatches(bands).max
+    // fold the segments: bin-pack the bands, range-cluster the posts
+    lake.compactBinPack(bands, 1L << 30)
+    lake.compactClustered(posts, Seq("doc_id"), 4)
+    assert(lake.snapshots(bands).last._2.size === 1)
+    assert(rows(lake.read(bands)) === before)
+    assert(rows(lake.read(posts).select(col("doc_id"), col("gs"))) === beforePosts)
     // the commit-batch watermark survives compaction: a refresh after
     // it still sees "nothing new" instead of re-deriving from zero
-    assert(lake.committedBatches("ndc_nd_bands").max === wm)
+    assert(lake.committedBatches(bands).max === wm)
     assert(Dedup.indexRefresh(lake, "ndc").count() === 0)
+    // and the compacted index serves the next batch exactly like the
+    // uncompacted twin
+    lake.append(docs.where(col("doc_id") % 5 === 4), "ndc")
+    twin.append(docs.where(col("doc_id") % 5 === 4), "ndc")
+    val got = Dedup.indexRefresh(lake, "ndc")
+    assert(rows(got) === rows(Dedup.indexRefresh(twin, "ndc")))
+    assert(got.count() > 0)
+  }
+
+  /** Data dirs of a table's current snapshot. */
+  private def liveDirs(lake: Lakehouse, table: String): Set[String] =
+    lake.snapshots(table).last._2.map(_.takeWhile(_ != '/')).toSet
+
+  private def filesUnder(lake: Lakehouse, table: String, dir: String): Seq[java.io.File] =
+    new java.io.File(lake.tableRoot(table).toUri.getPath, dir).listFiles().toSeq
+
+  test("each refresh appends one unpartitioned sorted segment per index table") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ndix9").toString
+    val lake = new Lakehouse(spark, root)
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val tables = Seq("nds9_nd_posts", Dedup.bandsTable("nds9"))
+    // range coalescing off, so the clustered base keeps one file per
+    // shuffle partition and the bounds check below has files to tell apart
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try {
+      lake.createOrReplace(docs.where(col("doc_id") % 3 === 0), "nds9")
+      Dedup.indexCreate(lake, "nds9")
+    } finally spark.conf.set(coalesce, "true")
+    val maxFiles = spark.sessionState.conf.numShufflePartitions
+    for (r <- 1 to 2) {
+      val before = tables.map(t => t -> liveDirs(lake, t)).toMap
+      lake.append(docs.where(col("doc_id") % 3 === r), "nds9")
+      Dedup.indexRefresh(lake, "nds9").collect()
+      for (t <- tables) {
+        val added = liveDirs(lake, t) -- before(t)
+        assert(added.size === 1, s"$t: one new data dir per refresh")
+        assert(lake.snapshots(t).last._2.toSet === before(t) + added.head,
+          s"$t: the old segments are carried, none rewritten")
+        val files = filesUnder(lake, t, added.head)
+        assert(!files.exists(_.isDirectory), s"$t: no partition subdirs")
+        val parquet = files.filter(_.getName.endsWith(".parquet"))
+        assert(parquet.nonEmpty && parquet.size <= maxFiles)
+      }
+    }
+    // the create-time posts base is range-clustered on doc_id: disjoint
+    // file bounds, so a one-id lookup opens exactly one base file
+    val posts = "nds9_nd_posts"
+    val base = lake.snapshots(posts).head._2.head
+    val bounds = filesUnder(lake, posts, base).filter(_.getName.endsWith(".parquet"))
+      .map { f =>
+        val r = spark.read.parquet(f.getPath).agg(min("doc_id"), max("doc_id")).head()
+        (r.getLong(0), r.getLong(1))
+      }.sortBy(_._1)
+    assert(bounds.size > 1, "the base should span several files")
+    bounds.sliding(2).foreach { case Seq(a, b) => assert(a._2 < b._1) }
+    import spark.implicits._
+    val probe = lake.readJoinPruned(posts, "doc_id", Seq(bounds.last._1).toDF("id"), "id")
+    assert(probe.inputFiles.count(_.contains(s"/$base/")) === 1)
+    assert(probe.count() === 1)
+  }
+
+  test("a delta over the key cap refreshes through the unpruned read, exactly") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ndix10").toString
+    val lake = new Lakehouse(spark, root)
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    lake.createOrReplace(docs.where(col("doc_id") % 5 === 0), "ndo")
+    Dedup.indexCreate(lake, "ndo")
+    lake.append(docs.where(col("doc_id") % 5 =!= 0), "ndo")
+    val got = Dedup.indexRefresh(lake, "ndo")
+    val want = Dedup.dedupMinhashLsh(spark, sf)
+      .where(col("doc_a") % 5 =!= 0 || col("doc_b") % 5 =!= 0)
+    assert(rows(got) === rows(want))
+    // the delta's band keys exceed the 1,024-key prune cap
+    assert(lake.read(Dedup.bandsTable("ndo")).where(col("doc_id") % 5 =!= 0)
+      .select("bkey").distinct().count() > 1024)
+  }
+
+  test("an index whose base has the old bucket(32) layout refreshes like a fresh one") {
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+      .where(col("doc_id") < 400)
+    val base = docs.where(col("doc_id") % 3 === 0)
+    val fresh = new Lakehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-ndix11").toString)
+    fresh.createOrReplace(base, "ndl")
+    Dedup.indexCreate(fresh, "ndl")
+    // the old lake: same corpus, index tables written bucket-partitioned
+    // under the source snapshot's batch id, as earlier index builds did
+    val old = new Lakehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-ndix11b").toString)
+    old.createOrReplace(base, "ndl")
+    val s0 = old.currentSnapshot("ndl").get
+    old.replaceOnce(fresh.read("ndl_nd_posts"), "ndl_nd_posts", batchId = s0,
+      partitionBy = Seq("bucket(32,doc_id)"))
+    old.replaceOnce(fresh.read(Dedup.bandsTable("ndl")), Dedup.bandsTable("ndl"),
+      batchId = s0, partitionBy = Seq("bucket(32,bkey)"))
+    old.replaceOnce(fresh.read(Dedup.pairsTable("ndl")), Dedup.pairsTable("ndl"),
+      batchId = s0)
+    val oldBase = liveDirs(old, Dedup.bandsTable("ndl")).head
+    assert(old.dirLayout(Dedup.bandsTable("ndl"), oldBase).nonEmpty)
+    // first batch: the refresh readouts agree
+    for (l <- Seq(fresh, old)) l.append(docs.where(col("doc_id") % 3 === 1), "ndl")
+    val got = Dedup.indexRefresh(old, "ndl")
+    assert(rows(got) === rows(Dedup.indexRefresh(fresh, "ndl")))
+    assert(got.count() > 0)
+    // second batch through the maintained ledger: pairs and admission agree
+    for (l <- Seq(fresh, old)) {
+      l.append(docs.where(col("doc_id") % 3 === 2), "ndl")
+      Dedup.indexMaintainStep(l, "ndl")
+    }
+    assert(rows(old.read(Dedup.pairsTable("ndl"))) ===
+      rows(fresh.read(Dedup.pairsTable("ndl"))))
+    assert(rows(Dedup.indexAdmission(old, "ndl")) ===
+      rows(Dedup.indexAdmission(fresh, "ndl")))
   }
 
   test("rewritten source interval rebuilds idempotently instead of crashing") {
